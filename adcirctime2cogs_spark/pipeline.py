@@ -1,16 +1,21 @@
 """End-to-end pipeline: the Spark-first equivalent of the reference CLI
 (run/adcircTime2cogs.py:242-279 argparse -> main() :121-240).
 
-    mesh+timeseries tables -> bbox agg -> grid spec -> weights (once)
-      -> all-ts regrid -> COG per ts -> mosaic sidecars -> zip
+    mesh tables -> bbox agg -> grid spec -> weights (once, as arrays)
+      node values -> groupBy(ts) -> regrid + COG per ts -> mosaic
+      sidecars -> zip
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
-- one lazy DataFrame DAG instead of a sequential per-timestep loop;
-  the COG sink fans out one task per timestep (SURVEY P9);
-- weights computed once and reused across every timestep/variable
-  (the reference rebuilds its interpolator per step, P6);
-- input is the engine-native parquet layout (sources/mesh.py); NetCDF
-  enters through sources/netcdf.netcdf_to_parquet.
+- one Spark job regrids and writes every timestep: the node values of
+  each timestep go to one task, which regrids them against the weights
+  arrays and writes its COG (sinks/cog.write_cogs_from_nodes), where
+  the reference loops over timesteps sequentially (SURVEY P9);
+- weights computed once and reused across every timestep (the
+  reference rebuilds its interpolator per step, P6);
+- input is either the engine-native parquet layout (sources/mesh.py)
+  or one fort.*.nc: its mesh becomes parquet tables
+  (sources/netcdf.write_static_tables) and its record variable is
+  scanned straight into the regrid (sources/netcdf.scan_netcdf_split).
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \
@@ -22,21 +27,26 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
+import time
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from adcirctime2cogs_spark.plans.grid import (
     bounding_box,
     grid_spec_from_bbox,
     raster_cells,
 )
-from adcirctime2cogs_spark.plans.regrid import regrid
 from adcirctime2cogs_spark.plans.weights import build_weights
-from adcirctime2cogs_spark.sinks.cog import write_cogs
+from adcirctime2cogs_spark.sinks.cog import save_weights, write_cogs_from_nodes
 from adcirctime2cogs_spark.sinks.sidecar import archive_output, write_mosaic_sidecars
 from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
+from adcirctime2cogs_spark.sources.netcdf import (
+    scan_netcdf_split,
+    write_static_tables,
+)
 
 
 @dataclass
@@ -60,17 +70,21 @@ def run_pipeline(
     bin_size_cells: float = 4.0,
     s3_bucket: str | None = None,
     s3_client=None,
+    timeseries: DataFrame | None = None,
 ) -> PipelineResult:
     """The whole dataflow; returns a small result summary (files are
     the real output, like the reference) plus per-phase wall timings
     (weights build / regrid+COG / sidecars+zip) so scale runs can
-    attribute cost without re-instrumenting."""
-    import time
+    attribute cost without re-instrumenting.
 
+    The mesh comes from input_dir. The node values are `timeseries`
+    (ts, node_id, value) when given, else the variable's table in
+    input_dir (sources/mesh.load_timeseries)."""
     timings: dict[str, float] = {}
     t0 = time.time()
     nodes, elements = load_mesh(spark, input_dir)
-    tsv = load_timeseries(spark, input_dir, variable)
+    if timeseries is None:
+        timeseries = load_timeseries(spark, input_dir, variable)
 
     bbox = bounding_box(nodes)  # O7
     spec = grid_spec_from_bbox(bbox, res)  # D4
@@ -78,44 +92,25 @@ def run_pipeline(
     timings["load_bbox"] = round(time.time() - t0, 2)
     t0 = time.time()
 
-    # bin size ~ a few cell widths (SURVEY §7 "what's hard")
-    weights = build_weights(cells, nodes, elements, bin_size=res * bin_size_cells)
-    weights = weights.cache()  # O13-O15, hoisted once (P6)
-    # materialize the cache now: the regrid action then reuses it, and
-    # the weights build gets its own wall-clock attribution for free
-    weights.count()
-    timings["weights"] = round(time.time() - t0, 2)
-    t0 = time.time()
-    try:
-        return _run_after_weights(
-            weights, tsv, spec, output_dir, final_dir, variable,
-            s3_bucket, s3_client, timings, t0,
-        )
-    finally:
-        # unpersist even when a sink phase throws — a long-lived
-        # session running many pipelines would otherwise pin one full
-        # weights table per failed run (review r11)
-        weights.unpersist()
-
-
-def _run_after_weights(
-    weights, tsv, spec, output_dir, final_dir, variable,
-    s3_bucket, s3_client, timings, t0,
-) -> "PipelineResult":
-    """Sink phases of run_pipeline, split out so the caller can wrap
-    them in try/finally around the weights cache (review r11)."""
-    import time
-
-    # parquet-metadata count: broadcast the node values (skipping the
-    # node_id shuffle of the exploded weights) when the whole slice
-    # fits executor memory; an HSOFS 85-step forecast is ~1.2 GB, so
-    # long runs fall back to the shuffle join automatically
-    broadcast_ts = tsv.count() * 16 < 64 * 1024 * 1024
-    raster_long = regrid(weights, tsv, broadcast_ts=broadcast_ts)  # O16-O17
-
     cog_dir = os.path.join(output_dir, variable)
-    manifest = write_cogs(raster_long, spec, cog_dir, prefix=variable).collect()
-    timings["regrid_cog"] = round(time.time() - t0, 2)
+    weights_dir = os.path.join(output_dir, "_weights")
+    try:
+        # bin size ~ a few cell widths (SURVEY §7 "what's hard")
+        weights = build_weights(
+            cells, nodes, elements, bin_size=res * bin_size_cells
+        )
+        n_nodes = save_weights(weights, weights_dir)  # O13-O15, once (P6)
+        timings["weights"] = round(time.time() - t0, 2)
+        t0 = time.time()
+        manifest = write_cogs_from_nodes(  # O16-O17 + O20
+            timeseries, weights_dir, n_nodes, spec, cog_dir, prefix=variable
+        ).collect()
+        timings["regrid_cog"] = round(time.time() - t0, 2)
+    finally:
+        # remove the arrays even when a phase throws: a long-lived
+        # session running many pipelines would otherwise leave one
+        # weights copy per failed run behind
+        shutil.rmtree(weights_dir, ignore_errors=True)
     t0 = time.time()
 
     sidecars = write_mosaic_sidecars(cog_dir, f"{variable}_mosaic")  # O21
@@ -241,42 +236,17 @@ def main(argv: list[str] | None = None) -> int:
     probe = os.path.join(args.input_dir, f"{probe_name}.parquet")
     nc_input = os.path.join(args.input_dir, args.input_file)
     base_dir = args.input_dir
-    spark = None
+    record_nc = False
     if not os.path.exists(probe):
-        staging = os.path.join(args.output_dir, "_tables")
-        staged_probe = os.path.join(staging, f"{probe_name}.parquet")
-
-        def _staging_fresh() -> bool:
-            # reuse only when the staged tables postdate the .nc input
-            # (an updated forecast file must re-convert)
-            try:
-                return os.path.getmtime(staged_probe) >= os.path.getmtime(
-                    nc_input
-                )
-            except OSError:
-                return os.path.exists(staged_probe)
-
-        if os.path.exists(staged_probe) and _staging_fresh():
-            # a previous run of the same .nc job already converted into
-            # the staging dir — reuse it instead of re-decoding the
-            # whole NetCDF (review r11: the probe only checked
-            # input_dir, so every re-run paid the full ingest again)
-            base_dir = staging
-        elif args.input_file.endswith(".nc") and os.path.exists(nc_input):
+        if args.input_file.endswith(".nc") and os.path.exists(nc_input):
             # the reference's actual entry point: ONE fort.*.nc carrying
-            # mesh + variable (run/adcircTime2cogs.py:148-156). Convert
-            # into a staging table set under output-dir with the
-            # built-in classic-NetCDF codecs, then run the normal
-            # parquet pipeline against it.
-            from adcirctime2cogs_spark.session import get_spark
-            from adcirctime2cogs_spark.sources.netcdf import (
-                adcirc_nc_to_tables,
-            )
-
-            spark = get_spark(app_name="adcirctime2cogs_pipeline")
-            base_dir = staging
-            adcirc_nc_to_tables(
-                spark, nc_input, base_dir, args.input_variable
+            # mesh + variable (run/adcircTime2cogs.py:148-156). The mesh
+            # (and a time-less max variable) becomes parquet tables under
+            # output-dir; a record variable is scanned per timestep
+            # straight into the regrid below, never staged.
+            base_dir = os.path.join(args.output_dir, "_tables")
+            record_nc = write_static_tables(
+                nc_input, base_dir, args.input_variable
             )
         elif args.input_file.startswith("swan"):
             # the reference's conditional dispatch (O28,
@@ -288,10 +258,13 @@ def main(argv: list[str] | None = None) -> int:
             print(f"input not found: {probe}", file=sys.stderr)
             return 1
 
-    if spark is None:
-        from adcirctime2cogs_spark.session import get_spark
+    from adcirctime2cogs_spark.session import get_spark
 
-        spark = get_spark(app_name="adcirctime2cogs_pipeline")
+    spark = get_spark(app_name="adcirctime2cogs_pipeline")
+    timeseries = (
+        scan_netcdf_split(spark, nc_input, args.input_variable)
+        if record_nc else None
+    )
     result = run_pipeline(
         spark,
         base_dir,
@@ -300,6 +273,7 @@ def main(argv: list[str] | None = None) -> int:
         args.input_variable,
         args.res,
         s3_bucket=args.s3_bucket,
+        timeseries=timeseries,
     )
     print(
         f"wrote {result.n_timesteps} COGs ({result.n_cells} cells) to "

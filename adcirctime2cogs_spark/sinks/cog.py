@@ -1,17 +1,24 @@
-"""COG sink (SURVEY O20): long raster table -> one Cloud-Optimized
-GeoTIFF per timestep.
+"""COG sink (SURVEY O20): one Cloud-Optimized GeoTIFF per timestep.
 
 The reference writes COGs sequentially inside its timestep loop
 (run/adcircTime2cogs.py:190-209, write_cog at :205-206 via
-datacube+GDAL). Here the sink is `groupBy('ts').applyInPandas`: Spark
-fans out ONE TASK PER TIMESTEP, each task pivots its long rows to a
-dense 2-D array and writes its own file — embarrassingly parallel, and
-GDAL never sees a shared file (SURVEY §7 "what's hard").
+datacube+GDAL). Here Spark fans out ONE TASK PER TIMESTEP with
+`groupBy('ts').applyInPandas`; each task builds its dense 2-D array
+and writes its own file — embarrassingly parallel, and GDAL never sees
+a shared file (SURVEY §7 "what's hard"). Two entry points:
+
+- `write_cogs_from_nodes` (the CLI): the groupBy ships each timestep's
+  NODE values, and the task regrids them itself against the weights
+  arrays that `save_weights` wrote once — a gather, a dot with the
+  barycentric weights and a scatter into the raster;
+- `write_cogs`: the groupBy ships an already regridded long table
+  (ts, grid_row, grid_col, value) and the task pivots it (the
+  streaming job, whose watermarked aggregation needs that table).
 
 The default writer emits REAL tiled-deflate COGs through the pure
 struct+zlib codec in sinks/geotiff.py (no GDAL needed); when rasterio
-IS present its COG driver is preferred, and `write_cogs(...,
-writer=...)` stays injectable for custom drivers.
+IS present its COG driver is preferred, and the writer stays
+injectable for custom drivers.
 """
 
 from __future__ import annotations
@@ -22,11 +29,15 @@ from collections.abc import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans.grid import GridSpec
 
 # the reference's filename timestamp format (run/adcircTime2cogs.py:192)
 TS_FMT = "%Y%m%dT%H%M%SZ"
+MANIFEST_SCHEMA = "ts string, path string, n_cells long"
+# the weights table as cell-ordered arrays, one .npy file each
+WEIGHT_ARRAYS = ("cell", "n0", "n1", "n2", "w0", "w1", "w2")
 
 
 def _geotransform(spec: GridSpec) -> list[float]:
@@ -97,6 +108,27 @@ def default_writer() -> Callable:
     return _auto_writer
 
 
+def _write_raster(
+    out_dir: str, prefix: str, ts, arr: np.ndarray, n_cells: int,
+    transform: list[float], crs: str, writer: Callable,
+) -> pd.DataFrame:
+    """Executor-side: name one timestep's file by its ts, write it with
+    `writer`, and return its manifest row. out_dir must exist on the
+    machine doing the write (driver-side makedirs covers local mode
+    only). On a real cluster out_dir must be SHARED storage (NFS/Lustre
+    — the reference's HPC world) or an object-store mount; tasks write
+    their own files, never a shared one."""
+    os.makedirs(out_dir, exist_ok=True)
+    label = (
+        ts.strftime(TS_FMT)
+        if hasattr(ts, "strftime")
+        else str(ts).replace(" ", "T").replace(":", "") + "Z"
+    )
+    fname = os.path.join(out_dir, f"{prefix}.{label}")
+    writer(fname, arr, transform, crs)
+    return pd.DataFrame({"ts": [str(ts)], "path": [fname], "n_cells": [n_cells]})
+
+
 def write_cogs(
     raster_long: DataFrame,
     spec: GridSpec,
@@ -111,9 +143,8 @@ def write_cogs(
 
     The groupBy ships each timestep's cells to one task; the pivot to a
     dense (nrows x ncols) array with NaN for masked cells happens
-    task-side (the ONLY place the engine materializes a 2-D raster,
-    exactly like the reference's create_xarray boundary,
-    run/adcircTime2cogs.py:94-109).
+    task-side, exactly like the reference's create_xarray boundary
+    (run/adcircTime2cogs.py:94-109).
     """
     os.makedirs(out_dir, exist_ok=True)
     nrows, ncols = spec.ny - 1, spec.nx - 1
@@ -121,28 +152,95 @@ def write_cogs(
     w = writer or default_writer()
 
     def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        # executor-side: out_dir must exist on the machine doing the
-        # write (driver-side makedirs covers local mode only). On a
-        # real cluster out_dir must be SHARED storage (NFS/Lustre —
-        # the reference's HPC world) or an object-store mount; tasks
-        # write their own files, never a shared one.
-        os.makedirs(out_dir, exist_ok=True)
-        ts = pdf["ts"].iloc[0]
         arr = np.full((nrows, ncols), np.nan, dtype="float64")
         arr[pdf["grid_row"].to_numpy(), pdf["grid_col"].to_numpy()] = (
             pdf["value"].to_numpy(dtype="float64")
         )
-        label = (
-            ts.strftime(TS_FMT)
-            if hasattr(ts, "strftime")
-            else str(ts).replace(" ", "T").replace(":", "") + "Z"
-        )
-        fname = os.path.join(out_dir, f"{prefix}.{label}")
-        w(fname, arr, transform, crs)
-        return pd.DataFrame(
-            {"ts": [str(ts)], "path": [fname], "n_cells": [len(pdf)]}
-        )
+        return _write_raster(out_dir, prefix, pdf["ts"].iloc[0], arr,
+                             len(pdf), transform, crs, w)
 
     return raster_long.groupBy("ts").applyInPandas(
-        write_one, schema="ts string, path string, n_cells long"
+        write_one, schema=MANIFEST_SCHEMA
+    )
+
+
+def save_weights(weights: DataFrame, weights_dir: str) -> int:
+    """Collect the weights table (plans/weights.build_weights) once and
+    write it as cell-ordered .npy arrays under `weights_dir`: flat cell
+    index, the 3 vertex node ids and the 3 barycentric weights. Returns
+    the node-id bound (largest referenced node id + 1).
+
+    Tasks of `write_cogs_from_nodes` open the arrays memory-mapped, so
+    every Python worker on a machine shares one page-cached copy (a
+    broadcast would unpickle one copy per worker). weights_dir rests on
+    the same shared-storage assumption as the COG output dir."""
+    tbl = weights.select(
+        F.col("cell_id").alias("cell"), "n0", "n1", "n2", "w0", "w1", "w2"
+    ).toArrow()
+    order = np.argsort(tbl.column("cell").to_numpy())
+    os.makedirs(weights_dir, exist_ok=True)
+    n_nodes = 0
+    for name in WEIGHT_ARRAYS:
+        col = tbl.column(name).to_numpy()[order]
+        if name in ("n0", "n1", "n2") and len(col):
+            n_nodes = max(n_nodes, int(col.max()) + 1)
+        np.save(os.path.join(weights_dir, f"{name}.npy"), col)
+    return n_nodes
+
+
+def write_cogs_from_nodes(
+    timeseries: DataFrame,
+    weights_dir: str,
+    n_nodes: int,
+    spec: GridSpec,
+    out_dir: str,
+    prefix: str = "raster",
+    crs: str = "EPSG:4326",
+    writer: Callable | None = None,
+) -> DataFrame:
+    """Regrid and write one COG per distinct ts straight from the node
+    values (ts, node_id, value), against the arrays `save_weights`
+    wrote to `weights_dir`. Returns a manifest DataFrame (ts, path,
+    n_cells) — an action the caller triggers.
+
+    The groupBy ships N node values per timestep. Per timestep the task
+    sums the non-null values of each node (`tot`) and counts them
+    (`cnt`), then a cell's value is w0*tot[n0] + w1*tot[n1] +
+    w2*tot[n2], published only where cnt[n0] + cnt[n1] + cnt[n2] == 3.
+    That is plans/regrid.aggregate_cells' "exactly 3 contributions"
+    rule, so dry nodes and missing or duplicate node rows give nodata
+    here too. Node ids no triangle uses are ignored.
+    """
+    os.makedirs(out_dir, exist_ok=True)
+    nrows, ncols = spec.ny - 1, spec.nx - 1
+    transform = _geotransform(spec)
+    w = writer or default_writer()
+
+    def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
+        wt = {
+            name: np.load(os.path.join(weights_dir, f"{name}.npy"),
+                          mmap_mode="r")
+            for name in WEIGHT_ARRAYS
+        }
+        node = pdf["node_id"].to_numpy(dtype="int64")
+        val = pdf["value"].to_numpy(dtype="float64", na_value=np.nan)
+        keep = (node >= 0) & (node < n_nodes) & ~np.isnan(val)
+        node, val = node[keep], val[keep]
+        # counts above 3 only need to stay above 3: clipped to 4 they
+        # fit uint8, so the per-cell count sum costs 1 byte per cell
+        cnt = np.minimum(np.bincount(node, minlength=n_nodes), 4
+                         ).astype(np.uint8)
+        tot = np.bincount(node, weights=val, minlength=n_nodes)
+        value = wt["w0"] * tot[wt["n0"]]
+        value += wt["w1"] * tot[wt["n1"]]
+        value += wt["w2"] * tot[wt["n2"]]
+        value[cnt[wt["n0"]] + cnt[wt["n1"]] + cnt[wt["n2"]] != 3] = np.nan
+        arr = np.full(nrows * ncols, np.nan, dtype="float64")
+        arr[wt["cell"]] = value
+        return _write_raster(out_dir, prefix, pdf["ts"].iloc[0],
+                             arr.reshape(nrows, ncols), len(value),
+                             transform, crs, w)
+
+    return timeseries.groupBy("ts").applyInPandas(
+        write_one, schema=MANIFEST_SCHEMA
     )

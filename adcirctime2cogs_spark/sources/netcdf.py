@@ -291,21 +291,18 @@ def netcdf_to_parquet(
     )
 
 
-def adcirc_nc_to_tables(
-    spark: SparkSession, nc_path: str, out_dir: str, variable: str
-) -> None:
-    """One ADCIRC fort.*.nc -> the COMPLETE engine-native table set
-    (sources/mesh.py layout): mesh_nodes / mesh_elements from the
-    static grid variables, plus {variable}.parquet (record variable,
-    decoded distributed) or node_maxes.parquet (time-less max field).
+def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
+    """The static tables of one ADCIRC fort.*.nc (sources/mesh.py
+    layout): mesh_nodes / mesh_elements from the grid variables, plus
+    node_maxes.parquet when `variable` is time-less (a max field).
+    Returns True when `variable` is a record variable, which the
+    caller scans per timestep (scan_netcdf_split).
 
     This is the reference-parity ingest: extract_url_grid +
     get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
-    read the same x/y/depth/element/zeta variables. Mesh arrays are
+    read the same x/y/depth/element/zeta variables. Arrays are
     materialized driver-side like the reference's grid dict (an HSOFS
-    mesh is ~50 MB — metadata next to the fact table); the fact decode
-    is the per-timestep distributed scan with the default (classic
-    NetCDF-3) codecs."""
+    mesh is ~50 MB — metadata next to the fact table)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -361,7 +358,28 @@ def adcirc_nc_to_tables(
         }),
         os.path.join(out_dir, "mesh_elements.parquet"),
     )
-    if is_record:
+    if not is_record:
+        vals = _masked(variable).ravel()
+        pq.write_table(
+            pa.table({
+                "node_id": pa.array(np.arange(len(vals)), pa.int64()),
+                "value": pa.array(vals, pa.float64()),
+            }),
+            os.path.join(out_dir, "node_maxes.parquet"),
+        )
+    return is_record
+
+
+def adcirc_nc_to_tables(
+    spark: SparkSession, nc_path: str, out_dir: str, variable: str
+) -> None:
+    """One ADCIRC fort.*.nc -> the COMPLETE engine-native table set
+    (sources/mesh.py layout): the static tables of
+    write_static_tables, plus {variable}.parquet for a record variable,
+    decoded by the per-timestep distributed scan. For callers that
+    query the tables repeatedly; the CLI scans the record variable
+    straight into its regrid instead."""
+    if write_static_tables(nc_path, out_dir, variable):
         # same ts-partitioned layout as netcdf_to_parquet: the O5
         # time-slice pruning story depends on it (a flat directory
         # would scan every row group for any ts filter)
@@ -371,13 +389,4 @@ def adcirc_nc_to_tables(
             .write.mode("overwrite")
             .partitionBy("ts")
             .parquet(os.path.join(out_dir, f"{variable}.parquet"))
-        )
-    else:
-        vals = _masked(variable).ravel()
-        pq.write_table(
-            pa.table({
-                "node_id": pa.array(np.arange(len(vals)), pa.int64()),
-                "value": pa.array(vals, pa.float64()),
-            }),
-            os.path.join(out_dir, "node_maxes.parquet"),
         )

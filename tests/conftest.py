@@ -3,7 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests sit in, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adcirctime2cogs_spark.session import get_spark  # noqa: E402
 

@@ -1,6 +1,7 @@
 """End-to-end pipeline test: parquet mesh in -> COGs + sidecars + zip
 out, values checked against the analytic field."""
 
+import os
 import subprocess
 import sys
 
@@ -13,6 +14,8 @@ from adcirctime2cogs_spark.plans.synthetic import (
     synth_nodes,
     synth_timeseries,
 )
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_input(spark, base: str, n=12, n_ts=3):
@@ -119,7 +122,7 @@ def test_pipeline_cli_swan_soft_exit(tmp_path):
             "--final-dir", str(tmp_path / "f"), "--input-file", "swan_HS.63.nc",
             "--input-variable", "swan_HS",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 0  # swan missing input soft-exits 0
 
@@ -129,7 +132,7 @@ def test_pipeline_cli_swan_soft_exit(tmp_path):
             "--input-dir", str(tmp_path), "--output-dir", str(tmp_path / "o"),
             "--final-dir", str(tmp_path / "f"), "--input-variable", "zeta",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r2.returncode == 1  # non-swan missing input hard-exits 1
 

@@ -323,11 +323,18 @@ def test_aqe_splits_skewed_join_partition(spark):
     manual half): AQE must detect a hot key's oversized partition at
     runtime and split it — SortMergeJoin(skew=true) in the final
     adaptive plan. Thresholds are lowered to make fixture-scale skew
-    visible; production keeps the defaults."""
+    visible; production keeps the defaults.
+
+    The shuffle partition count is pinned too. groupBy().count() prunes
+    `payload`, so the hot key's shuffle block is a run of the constant
+    0 that compresses to almost nothing. With 16 or fewer partitions
+    that block is then not skewedPartitionFactor (5x) the median
+    partition, and AQE rightly splits nothing."""
     tuned = {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k) for k in tuned}
     try:
