@@ -23,7 +23,9 @@ injectable for custom drivers.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from collections.abc import Callable
 
 import numpy as np
@@ -165,26 +167,46 @@ def write_cogs(
 
 
 def save_weights(weights: DataFrame, weights_dir: str) -> int:
-    """Collect the weights table (plans/weights.build_weights) once and
-    write it as cell-ordered .npy arrays under `weights_dir`: flat cell
-    index, the 3 vertex node ids and the 3 barycentric weights. Returns
-    the node-id bound (largest referenced node id + 1).
+    """Write the weights table (plans/weights.build_weights) once as
+    cell-ordered .npy arrays under `weights_dir`: flat cell index, the 3
+    vertex node ids and the 3 barycentric weights. Returns the node-id
+    bound (largest referenced node id + 1).
 
-    Tasks of `write_cogs_from_nodes` open the arrays memory-mapped, so
-    every Python worker on a machine shares one page-cached copy (a
-    broadcast would unpickle one copy per worker). weights_dir rests on
-    the same shared-storage assumption as the COG output dir."""
-    tbl = weights.select(
+    Spark writes the table as parquet under weights_dir, so no row goes
+    through task results to the driver; the driver then builds one .npy
+    at a time from those files, holding one column plus the cell sort
+    order. Tasks of `write_cogs_from_nodes` open the arrays
+    memory-mapped, so every Python worker on a machine shares one
+    page-cached copy (a broadcast would unpickle one copy per worker).
+    weights_dir rests on the same shared-storage assumption as the COG
+    output dir."""
+    import pyarrow.parquet as pq
+
+    pq_dir = os.path.join(weights_dir, "parquet")
+    weights.select(
         F.col("cell_id").alias("cell"), "n0", "n1", "n2", "w0", "w1", "w2"
-    ).toArrow()
-    order = np.argsort(tbl.column("cell").to_numpy())
-    os.makedirs(weights_dir, exist_ok=True)
+    ).write.parquet(pq_dir)
+    parts = sorted(glob.glob(os.path.join(pq_dir, "*.parquet")))
+
+    def column(name: str) -> np.ndarray:
+        return pq.read_table(parts, columns=[name]).column(name).to_numpy()
+
+    order = np.argsort(column("cell"))
     n_nodes = 0
     for name in WEIGHT_ARRAYS:
-        col = tbl.column(name).to_numpy()[order]
+        col = column(name)
         if name in ("n0", "n1", "n2") and len(col):
             n_nodes = max(n_nodes, int(col.max()) + 1)
-        np.save(os.path.join(weights_dir, f"{name}.npy"), col)
+        out = np.lib.format.open_memmap(
+            os.path.join(weights_dir, f"{name}.npy"), mode="w+",
+            dtype=col.dtype, shape=col.shape,
+        )
+        # mode="clip" gathers straight into the file; "raise" would
+        # buffer a second full copy of the column first
+        np.take(col, order, out=out, mode="clip")
+        out.flush()
+        del col, out  # one column in memory at a time
+    shutil.rmtree(pq_dir)
     return n_nodes
 
 
@@ -194,27 +216,27 @@ def write_cogs_from_nodes(
     n_nodes: int,
     spec: GridSpec,
     out_dir: str,
-    prefix: str = "raster",
-    crs: str = "EPSG:4326",
-    writer: Callable | None = None,
+    prefix: str,
 ) -> DataFrame:
     """Regrid and write one COG per distinct ts straight from the node
     values (ts, node_id, value), against the arrays `save_weights`
     wrote to `weights_dir`. Returns a manifest DataFrame (ts, path,
     n_cells) — an action the caller triggers.
 
-    The groupBy ships N node values per timestep. Per timestep the task
-    sums the non-null values of each node (`tot`) and counts them
-    (`cnt`), then a cell's value is w0*tot[n0] + w1*tot[n1] +
-    w2*tot[n2], published only where cnt[n0] + cnt[n1] + cnt[n2] == 3.
-    That is plans/regrid.aggregate_cells' "exactly 3 contributions"
-    rule, so dry nodes and missing or duplicate node rows give nodata
-    here too. Node ids no triangle uses are ignored.
+    The groupBy ships N node values per timestep. Null node ids and
+    null values are dropped before it, as the join and count(value)
+    of plans/regrid.aggregate_cells drop them; NaN values stay. Per
+    timestep the task sums the values of each node (`tot`, NaN where
+    any is NaN) and counts them (`cnt`), then a cell's value is
+    w0*tot[n0] + w1*tot[n1] + w2*tot[n2], published only where
+    cnt[n0] + cnt[n1] + cnt[n2] == 3. That is aggregate_cells' "exactly
+    3 contributions" rule, so dry nodes and missing or duplicate node
+    rows give nodata here too. Node ids no triangle uses are ignored.
     """
     os.makedirs(out_dir, exist_ok=True)
     nrows, ncols = spec.ny - 1, spec.nx - 1
     transform = _geotransform(spec)
-    w = writer or default_writer()
+    w = default_writer()
 
     def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
         wt = {
@@ -223,8 +245,8 @@ def write_cogs_from_nodes(
             for name in WEIGHT_ARRAYS
         }
         node = pdf["node_id"].to_numpy(dtype="int64")
-        val = pdf["value"].to_numpy(dtype="float64", na_value=np.nan)
-        keep = (node >= 0) & (node < n_nodes) & ~np.isnan(val)
+        val = pdf["value"].to_numpy(dtype="float64")
+        keep = (node >= 0) & (node < n_nodes)
         node, val = node[keep], val[keep]
         # counts above 3 only need to stay above 3: clipped to 4 they
         # fit uint8, so the per-cell count sum costs 1 byte per cell
@@ -239,8 +261,8 @@ def write_cogs_from_nodes(
         arr[wt["cell"]] = value
         return _write_raster(out_dir, prefix, pdf["ts"].iloc[0],
                              arr.reshape(nrows, ncols), len(value),
-                             transform, crs, w)
+                             transform, "EPSG:4326", w)
 
-    return timeseries.groupBy("ts").applyInPandas(
-        write_one, schema=MANIFEST_SCHEMA
-    )
+    return timeseries.where(
+        F.col("node_id").isNotNull() & F.col("value").isNotNull()
+    ).groupBy("ts").applyInPandas(write_one, schema=MANIFEST_SCHEMA)

@@ -129,22 +129,23 @@ def _write_micromesh_tables(spark, base):
 def test_kernel_matches_join_path_on_bad_node_rows(spark, tmp_path):
     """Parquet input whose rows break the one-value-per-(ts, node)
     shape: a null (dry) node, a NaN node, a missing row, duplicate
-    rows, a node id outside the mesh, and a timestep where one vertex
+    rows, a node id outside the mesh, a timestep where one vertex
     is missing while another is duplicated (3 contributions, so both
-    paths publish that sum)."""
+    paths publish that sum), and duplicates whose other row is NaN (a
+    4th contribution: nodata) or null (not counted: published)."""
     base = str(tmp_path / "in")
     _write_micromesh_tables(spark, base)
-    t1, t2, t3 = mm.T1, mm.T2, mm.T3
+    t1, t2, t3, t4 = mm.T1, mm.T2, mm.T3, "2024-01-01 03:00:00"
     coords = {nid: (lon, lat) for nid, lon, lat in mm.NODES}
 
     def v(t, nid):
         lon, lat = coords[nid]
         return {t1: 2.0 * lon + 3.0 * lat + 1.0, t2: lon * lat,
-                t3: 10.0 - lon - lat}[t]
+                t3: 10.0 - lon - lat, t4: lon - 2.0 * lat}[t]
 
     # triangles: 0 = (0, 1, 4), 1 = (0, 4, 3), 2 = (3, 4, 5)
     rows = []
-    for t in (t1, t2, t3):
+    for t in (t1, t2, t3, t4):
         for nid in coords:
             if (t, nid) in ((t1, 1), (t3, 0)):
                 continue  # missing rows
@@ -155,7 +156,8 @@ def test_kernel_matches_join_path_on_bad_node_rows(spark, tmp_path):
                 val = float("nan")
             rows.append((t, nid, val))
     rows += [(t1, 5, v(t1, 5)), (t3, 1, v(t3, 1) + 0.5),  # duplicates
-             (t2, 99, 7.0), (t3, -1, 7.0)]  # ids outside the mesh
+             (t2, 99, 7.0), (t3, -1, 7.0),  # ids outside the mesh
+             (t4, 3, float("nan")), (t4, 1, None)]  # beside valid rows
     tsv = spark.createDataFrame(
         rows, "ts string, node_id long, value double"
     ).withColumn("ts", F.to_timestamp("ts"))
@@ -163,7 +165,7 @@ def test_kernel_matches_join_path_on_bad_node_rows(spark, tmp_path):
 
     result = run_pipeline(spark, base, str(tmp_path / "o"),
                           str(tmp_path / "f"), variable="zeta", res=0.4)
-    assert result.n_timesteps == 3
+    assert result.n_timesteps == 4
     _join_path_cogs(spark, base, load_timeseries(spark, base, "zeta"),
                     "zeta", 0.4, str(tmp_path / "join"))
     _assert_same_cogs(result.cog_dir, str(tmp_path / "join"), 10.0)
