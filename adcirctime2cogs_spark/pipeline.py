@@ -15,7 +15,9 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
-  scanned straight into the regrid (sources/netcdf.scan_netcdf_split).
+  scanned straight into the regrid through the `adcirc_netcdf`
+  DataSource (sources/netcdf.scan_netcdf), one task per byte-range
+  split, never staged.
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \
@@ -43,10 +45,7 @@ from adcirctime2cogs_spark.plans.weights import build_weights
 from adcirctime2cogs_spark.sinks.cog import save_weights, write_cogs_from_nodes
 from adcirctime2cogs_spark.sinks.sidecar import archive_output, write_mosaic_sidecars
 from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
-from adcirctime2cogs_spark.sources.netcdf import (
-    scan_netcdf_split,
-    write_static_tables,
-)
+from adcirctime2cogs_spark.sources.netcdf import scan_netcdf, write_static_tables
 
 
 @dataclass
@@ -245,9 +244,13 @@ def main(argv: list[str] | None = None) -> int:
             # output-dir; a record variable is scanned per timestep
             # straight into the regrid below, never staged.
             base_dir = os.path.join(args.output_dir, "_tables")
-            record_nc = write_static_tables(
-                nc_input, base_dir, args.input_variable
-            )
+            try:
+                record_nc = write_static_tables(
+                    nc_input, base_dir, args.input_variable
+                )
+            except ValueError as exc:  # e.g. a mistyped --input-variable
+                print(exc, file=sys.stderr)
+                return 1
         elif args.input_file.startswith("swan"):
             # the reference's conditional dispatch (O28,
             # run/adcircTime2cogs.py:270-279): missing swan inputs
@@ -262,7 +265,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="adcirctime2cogs_pipeline")
     timeseries = (
-        scan_netcdf_split(spark, nc_input, args.input_variable)
+        scan_netcdf(spark, nc_input, args.input_variable)
         if record_nc else None
     )
     result = run_pipeline(

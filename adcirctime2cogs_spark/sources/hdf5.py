@@ -49,11 +49,11 @@ NetCDF-4 semantics on top (the same mapping netcdf-c uses):
     decoding follow the same rules as sources/netcdf3.py (shared
     helpers are imported from there).
 
-The v1-btree chunk index is what makes scan_netcdf_split work on
-NetCDF-4 exactly like the classic format: the splitter reads the
-B-tree once driver-side and emits one (t_idx, chunk offset, stored
-bytes) task per chunk of the record variable — each task then reads
-ONLY its compressed chunk bytes.
+The v1-btree chunk index is what makes the netcdf.py `adcirc_netcdf`
+scan work on NetCDF-4 exactly like the classic format: the splitter
+reads the B-tree once driver-side and emits one (t_idx, chunk offset,
+stored bytes) task per chunk of the record variable — each task then
+reads ONLY its compressed chunk bytes.
 
 Fractal heaps (dense group links AND dense attributes — where
 'latest' puts attributes past max_compact=8, e.g. the 15+ global
@@ -1758,23 +1758,6 @@ def _decode_times_nc4(nc: NC4File) -> np.ndarray:
 
 
 # --------------------------------- netcdf.py codec callables (NC4)
-def decode_adcirc_nc4(path: str, content: bytes, variable: str):
-    """(times, node_ids, values[t][n]) — scan_netcdf_distributed's
-    decoder contract, NetCDF-4 form (mirrors netcdf3.decode_adcirc)."""
-    nc = NC4File(content) if content else nc4_for(path)
-    if variable not in nc.vars:
-        raise HDF5Error(f"variable {variable!r} not in file")
-    if not nc.is_record(variable):
-        raise ValueError(
-            f"{variable} is not a record variable; time-less max fields "
-            "load through sources/mesh.py's node_maxes path"
-        )
-    v = nc.vars[variable]
-    values = _masked_to_nan(nc.read_var(variable), v.atts)
-    times = _decode_times_nc4(nc)
-    return times, range(values.shape[-1]), values
-
-
 def nc4_splitter(path: str, length: int, variable: str):
     """(t_idx, chunk offset, stored nbytes) per (record, chunk) of the
     record variable — the NetCDF-4 analogue of netcdf3's per-record
@@ -1785,10 +1768,19 @@ def nc4_splitter(path: str, length: int, variable: str):
     covers, all pointing at the same compressed chunk bytes — each
     task decodes the chunk and emits only its own record's rows, so no
     timestep is ever silently dropped. Rows split across several node
-    chunks additionally repeat t_idx across those chunks."""
+    chunks additionally repeat t_idx across those chunks. A missing or
+    time-less variable fails here, at plan time, with the same
+    ValueErrors as netcdf3.classic_splitter."""
     nc = nc4_for(path)
+    if variable not in nc.vars:
+        raise ValueError(
+            f"variable {variable!r} not in {path!r} (has: {sorted(nc.vars)})"
+        )
     if not nc.is_record(variable):
-        return []
+        raise ValueError(
+            f"{variable!r} in {path!r} is not a record variable — "
+            "only record (unlimited-dim) variables scan per-timestep"
+        )
     d = nc.h5.datasets[variable]
     chunk_t = d.layout.chunk[0] if d.layout.chunk else 1
     n_rec = d.shape[0]
@@ -1801,8 +1793,8 @@ def nc4_splitter(path: str, length: int, variable: str):
 
 def nc4_range_decoder(path: str, variable: str, t_idx: int,
                       offset: int, nbytes: int):
-    """(ts, node_ids, values_1d) for ONE (record, chunk) split —
-    scan_netcdf_split's range-decoder contract. The task reads ONLY
+    """(ts, node_ids, values_1d) for ONE (record, chunk) split — the
+    netcdf.py DataSource's range-decoder contract. The task reads ONLY
     its compressed chunk bytes; chunk geometry is an O(1) lookup in
     the per-file cached index, times come from the cached time axis."""
     nc = nc4_for(path)

@@ -1,130 +1,60 @@
-"""NetCDF source adapter (SURVEY O1-O6): ADCIRC NetCDF -> the engine's
-relational tables.
+"""NetCDF source adapter (SURVEY O1-O6): ADCIRC fort.*.nc -> the
+engine's relational tables, through one scan.
 
-Spark has no built-in NetCDF source; the adapter follows SURVEY §7's
-two paths:
+`scan_netcdf(spark, path, variable)` reads a record variable as long
+(ts, node_id, value) rows through `spark.read.format("adcirc_netcdf")`,
+the Spark 4 Python DataSource defined here:
 
-1. `scan_netcdf_distributed` — spark.read.format('binaryFile') over the
-   .nc files + mapInPandas decoding each file's per-timestep slices
-   into long rows (one input split per timestep mirrors the reference's
-   chunks={'time': 1}, adcirc_dask_utilities.py:42);
-2. `netcdf_to_parquet` — one-shot driver-side conversion into the
-   ts-partitioned parquet layout of sources/mesh.py, the engine-native
-   path for repeated querying.
+- the driver plans one InputPartition per byte-range split from file
+  metadata alone (`_default_splitter`): one per record of a classic
+  NetCDF-3 file (records over 4 MB sub-split into node ranges), one per
+  (record, compressed chunk) of a NetCDF-4 file — the reference's
+  chunks={'time': 1} (run/utilities/adcirc_dask_utilities.py:42);
+- each task reads only its byte range (`_default_range_decoder`) and
+  returns one Arrow RecordBatch, with _FillValue nodes as null.
 
-Decoding is self-contained for BOTH NetCDF flavors: fort.* files are
-classic NetCDF-3, which sources/netcdf3.py reads with struct+numpy
-alone, and HDF5-backed NetCDF-4 decodes through the pure-Python HDF5
-subset in sources/hdf5.py (superblock v0/v2/v3, v1-btree chunk index
-plus the v4-layout typed indexes — single chunk, implicit, fixed
-array, extensible array — deflate/shuffle filters, dimension
-scales) — so the default decoder, splitter, and range decoder all
-WORK in this container with no third-party NetCDF/HDF5 library —
-including dense (fractal-heap) groups, so multi-variable
-libver='latest' files decode too. Only HDF5 layouts outside the
-subset (multi-block fractal heaps, v2-btree chunk indexes, paged
-index blocks, szip) fall back to an import-try for xarray/h5py;
-custom codecs remain injectable.
+    df = scan_netcdf(spark, "/data/fort.63.nc", "zeta")
+
+Both NetCDF flavours decode with no third-party library: classic
+NetCDF-3 through sources/netcdf3.py, HDF5-backed NetCDF-4 through the
+HDF5 subset in sources/hdf5.py. A planned variable that is missing or
+has no record dimension fails at plan time with a ValueError naming the
+problem; an HDF5 layout outside the subset raises
+hdf5.UnsupportedHDF5Feature. `AdcircNetCDFDataSource.with_codecs`
+injects other split/decode callables (tests, or xarray/h5py codecs on
+hosts that have them). The same source streams:
+`spark.readStream.format("adcirc_netcdf")` over a directory of
+arriving files.
+
+`write_static_tables` writes the mesh (and a time-less max variable)
+as sources/mesh.py parquet tables; `adcirc_nc_to_tables` adds the
+record variable's ts-partitioned table.
 """
 
 from __future__ import annotations
 
+import glob as _glob
+import inspect
 import os
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
-# columns the reference drops at scan (adcirc_dask_utilities.py:42)
-DROP_VARIABLES = ("neta", "nvel")
 TIMESERIES_OUT_SCHEMA = "ts timestamp, node_id long, value double"
-
-
-def _default_decoder(path: str, content: bytes, variable: str):
-    """Decode one ADCIRC NetCDF into (times, node_ids, values[t][n]).
-
-    Classic NetCDF-3 (ADCIRC's native fort.* format) decodes via the
-    pure-Python codec in netcdf3.py; HDF5-backed NetCDF-4 via the
-    pure-Python HDF5 subset in hdf5.py — no library needed for
-    either. HDF5 layouts outside that subset fall back to xarray,
-    gated on its presence."""
-    from adcirctime2cogs_spark.sources import hdf5, netcdf3
-
-    try:
-        return netcdf3.decode_adcirc(path, content, variable)
-    except netcdf3.NotClassicNetCDF as not_classic:
-        try:
-            return hdf5.decode_adcirc_nc4(path, content, variable)
-        # NotHDF5 subclasses ValueError, NOT HDF5Error — without it a
-        # classic file the builtin codec rejects escaped as a bare
-        # 'not an HDF5 file' instead of reaching the fallback chain
-        # with the combined story (review r10; _default_splitter
-        # already caught both)
-        except (hdf5.HDF5Error, hdf5.NotHDF5) as h5err:
-            # out-of-subset layout: try the library fallback. Keep the
-            # exception — `except ... as` unbinds the variable at block
-            # exit, so referencing h5err below would UnboundLocalError.
-            h5_exc = h5err
-        try:
-            import io
-
-            import xarray as xr  # noqa: F401
-        except ImportError as exc:
-            if isinstance(h5_exc, hdf5.UnsupportedHDF5Feature):
-                # valid HDF5 using a documented out-of-scope feature
-                # (e.g. the szip filter): surface the TYPED error with
-                # its supported-subset listing, not a library lament
-                # (VERDICT r09 #5)
-                raise hdf5.UnsupportedHDF5Feature(
-                    f"{h5_exc} [file {path!r}; no xarray/netCDF4 "
-                    "fallback in this environment]"
-                ) from h5_exc
-            raise NotImplementedError(
-                f"{not_classic}; and the HDF5 layout is outside the "
-                f"built-in subset ({h5_exc}) with no xarray/netCDF4 in "
-                "this environment — inject a decoder or convert offline "
-                "with netcdf_to_parquet on a codec-equipped host."
-            ) from exc
-        ds = xr.open_dataset(
-            io.BytesIO(content), drop_variables=list(DROP_VARIABLES)
-        )
-        var = ds[variable]
-        return ds["time"].values, range(var.shape[-1]), var.values
-
-
-def scan_netcdf_distributed(
-    spark: SparkSession,
-    path_glob: str,
-    variable: str,
-    decoder: Callable = _default_decoder,
-) -> DataFrame:
-    """Distributed NetCDF scan: binaryFile source -> mapInPandas decode
-    -> long (ts, node_id, value) rows.
-
-    Each .nc file is one task (files are the parallel unit; within a
-    file the decoder emits one batch per timestep so downstream
-    repartition('ts') fans out cleanly). Column pruning == the decoder
-    only materializing `variable` (SURVEY P3).
-    """
-    binf = spark.read.format("binaryFile").load(path_glob)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                times, node_ids, values = decoder(path, content, variable)
-                node_list = list(node_ids)
-                for t_idx, t in enumerate(times):
-                    yield pd.DataFrame(
-                        {
-                            "ts": pd.Series([t] * len(node_list)),
-                            "node_id": node_list,
-                            "value": values[t_idx],
-                        }
-                    )
-
-    return binf.select("path", "content").mapInPandas(
-        decode, schema=TIMESERIES_OUT_SCHEMA
-    )
+_ARROW_SCHEMA = pa.schema([
+    ("ts", pa.timestamp("us", tz="UTC")),
+    ("node_id", pa.int64()),
+    ("value", pa.float64()),
+])
 
 
 def _default_splitter(path: str, length: int, variable: str | None = None):
@@ -133,7 +63,7 @@ def _default_splitter(path: str, length: int, variable: str | None = None):
     adcirc_dask_utilities.py:42). For classic NetCDF-3 the record
     layout makes every timestep's span computable from one small header
     read (netcdf3.classic_splitter) — no chunk index. For HDF5-backed
-    NetCDF-4 the splits come from the variable's v1-btree chunk index
+    NetCDF-4 the splits come from the variable's chunk index
     (hdf5.nc4_splitter), one split per compressed chunk — also planned
     from a driver-side metadata read, no library."""
     from adcirctime2cogs_spark.sources import hdf5, netcdf3
@@ -144,7 +74,7 @@ def _default_splitter(path: str, length: int, variable: str | None = None):
         if variable is None:
             raise NotImplementedError(
                 f"{not_classic}; NetCDF-4 splits are per-variable — call "
-                "with the variable name (scan_netcdf_split does)."
+                "with the variable name (the DataSource does)."
             ) from not_classic
         try:
             return hdf5.nc4_splitter(path, length, variable)
@@ -168,9 +98,6 @@ def _default_range_decoder(path: str, variable: str, t_idx: int, offset: int, nb
         return hdf5.nc4_range_decoder(path, variable, t_idx, offset, nbytes)
 
 
-SPLIT_SCHEMA = "path string, t_idx int, offset long, nbytes long"
-
-
 def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     """Invoke a splitter with (path, length, variable) when its
     signature accepts a third positional arg, else (path, length) —
@@ -178,9 +105,7 @@ def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     TypeError raised INSIDE a 3-arg splitter must propagate, not
     trigger a silent 2-arg re-invocation (which would mask the real
     bug, or re-plan different splits for a defaulted third param).
-    Shared by scan_netcdf_split and both DataSource readers."""
-    import inspect
-
+    Shared by the batch and the stream reader."""
     try:
         params = list(inspect.signature(splitter).parameters.values())
         positional = [
@@ -195,100 +120,261 @@ def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     return splitter(path, length)
 
 
-def scan_netcdf_split(
-    spark: SparkSession,
-    path_glob: str,
-    variable: str,
-    splitter: Callable = _default_splitter,
-    range_decoder: Callable = _default_range_decoder,
-) -> DataFrame:
-    """Large-file NetCDF scan: per-(file, timestep) byte-range tasks.
-
-    `scan_netcdf_distributed` puts one whole file in one task — fine for
-    many small files, but the reference's production input is ONE
-    multi-GB fort.63.nc (SURVEY D2): one file = one task = zero
-    parallelism and an OOM risk. This path mirrors the reference's
-    chunks={'time': 1} (adcirc_dask_utilities.py:42):
-
-    1. list files (metadata only — the binaryFile `content` column is
-       pruned, only path/length are read);
-    2. plan splits driver-side with `splitter(path, length)` — a
-       header-only read per file, the same metadata-on-driver split
-       planning Spark's own FileSourceScanExec does;
-    3. one task per split; each task opens its file and reads ONLY its
-       byte range via `range_decoder`.
-
-    So an F-file x T-timestep input becomes at least F*T parallel
-    tasks — and large records further sub-split (classic node-range
-    chunks, NetCDF-4 per-chunk splits), so even a ONE-file/ONE-record
-    input parallelizes. No task ever materializes whole-file content.
-    """
-    files = (
-        spark.read.format("binaryFile")
-        .load(path_glob)
-        .select("path", "length")
-        .collect()
+def _decode_split(
+    range_decoder: Callable, path: str, variable: str,
+    t_idx: int, offset: int, nbytes: int,
+) -> pa.RecordBatch:
+    """ONE split -> one (ts, node_id, value) RecordBatch. Decoders
+    return naive UTC stamps (NetCDF time axes carry no zone) as
+    numpy.datetime64, datetime or pandas.Timestamp; NaN fill values
+    become SQL null (reference masked array semantics,
+    run/utilities/adcirc_utilities.py:30)."""
+    ts, node_ids, values = range_decoder(
+        path, variable, int(t_idx), int(offset), int(nbytes)
     )
-    specs = [
-        (f.path, int(t_idx), int(offset), int(nbytes))
-        for f in files
-        for (t_idx, offset, nbytes) in plan_splits(
-            splitter, f.path, int(f.length), variable
+    ts = pd.Timestamp(ts)
+    ts = ts.tz_localize("UTC") if ts.tzinfo is None else ts.tz_convert("UTC")
+    values = np.asarray(values, dtype="float64")
+    if isinstance(node_ids, range):
+        ids = np.arange(node_ids.start, node_ids.stop, node_ids.step)
+    else:
+        ids = np.asarray(node_ids, dtype="int64")
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.full(len(values), ts.value // 1000, dtype="int64"),
+                     _ARROW_SCHEMA.field("ts").type),
+            pa.array(ids, pa.int64()),
+            pa.array(values, pa.float64(), mask=np.isnan(values)),
+        ],
+        schema=_ARROW_SCHEMA,
+    )
+
+
+class _TimestepSplit(InputPartition):
+    def __init__(self, path: str, t_idx: int, offset: int, nbytes: int):
+        self.path = path
+        self.t_idx = t_idx
+        self.offset = offset
+        self.nbytes = nbytes
+
+
+class _NetCDFReader(DataSourceReader):
+    def __init__(
+        self,
+        options: dict,
+        splitter: Callable,
+        range_decoder: Callable,
+    ):
+        self.path = options.get("path")
+        if not self.path:
+            raise ValueError("adcirc_netcdf requires .option('path', ...)")
+        self.variable = options.get("variable", "zeta")
+        self.splitter = splitter
+        self.range_decoder = range_decoder
+
+    def partitions(self):
+        """One InputPartition per byte-range split — planned
+        driver-side from file metadata, exactly like FileSourceScanExec
+        split planning; no file content is read here beyond the
+        splitter's header probe."""
+        paths = sorted(_glob.glob(self.path))
+        if not paths and os.path.exists(self.path):
+            # the literal filename contains glob metacharacters (e.g.
+            # /data/run[2020]/fort.63.nc) but the file itself exists —
+            # read it rather than mis-parsing the name as a pattern
+            paths = [self.path]
+        if not paths:
+            # Never fall back to treating the glob pattern itself as a
+            # file path — os.path.getsize on the raw pattern raises a
+            # baffling FileNotFoundError. (The STREAM reader returns
+            # empty for the same case because files may arrive later;
+            # a batch scan over zero files is almost always a typo.)
+            raise FileNotFoundError(
+                f"adcirc_netcdf: no files matched path pattern {self.path!r}"
+            )
+        return [
+            _TimestepSplit(p, int(t), int(off), int(nb))
+            for p in paths
+            for (t, off, nb) in plan_splits(
+                self.splitter, p, os.path.getsize(p), self.variable
+            )
+        ]
+
+    def read(self, split: _TimestepSplit) -> Iterator[pa.RecordBatch]:
+        yield _decode_split(
+            self.range_decoder, split.path, self.variable,
+            split.t_idx, split.offset, split.nbytes,
         )
-    ]
-    # COLUMN-LESS repartition = round-robin — but each SOURCE
-    # partition starts its round-robin at an independent random
-    # offset, so with multiple input partitions targets collide and
-    # some tasks decode two ranges while others idle (ADVICE r10; the
-    # prior hash partitioning was worse still, ~1/e empty). Parallelize
-    # the (driver-built, tiny) spec list into ONE source partition so
-    # the repartition is a single round-robin pass: exactly one split
-    # per task, guaranteed, at any split count. NOTE a .coalesce(1)
-    # between createDataFrame and repartition does NOT achieve this —
-    # CollapseRepartition deletes it (verified on the optimized plan);
-    # the single partition must exist at the source.
-    splits = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, 1) if specs
-        else spark.sparkContext.emptyRDD(),
-        SPLIT_SCHEMA,
-    ).repartition(max(len(specs), 1))
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, t_idx, offset, nbytes in zip(
-                pdf["path"], pdf["t_idx"], pdf["offset"], pdf["nbytes"]
-            ):
-                ts, node_ids, values = range_decoder(
-                    path, variable, int(t_idx), int(offset), int(nbytes)
-                )
-                node_list = list(node_ids)
-                yield pd.DataFrame(
-                    {
-                        "ts": pd.Series([ts] * len(node_list)),
-                        "node_id": node_list,
-                        "value": values,
-                    }
-                )
-
-    return splits.mapInPandas(decode, schema=TIMESERIES_OUT_SCHEMA)
 
 
-def netcdf_to_parquet(
-    spark: SparkSession,
-    nc_path: str,
-    out_dir: str,
-    variable: str,
-    decoder: Callable = _default_decoder,
-) -> None:
-    """One-shot conversion into the engine-native ts-partitioned layout
-    (the recommended path: convert once, query many times)."""
-    long_df = scan_netcdf_distributed(spark, nc_path, variable, decoder)
-    (
-        long_df.repartition("ts")
-        .write.mode("overwrite")
-        .partitionBy("ts")
-        .parquet(f"{out_dir}/{variable}.parquet")
+class AdcircNetCDFDataSource(DataSource):
+    """`format("adcirc_netcdf")` — per-timestep partitioned scan."""
+
+    _splitter = staticmethod(_default_splitter)
+    _range_decoder = staticmethod(_default_range_decoder)
+
+    @classmethod
+    def name(cls) -> str:
+        return "adcirc_netcdf"
+
+    def schema(self) -> str:
+        return TIMESERIES_OUT_SCHEMA
+
+    def reader(self, schema) -> _NetCDFReader:
+        return _NetCDFReader(self.options, self._splitter, self._range_decoder)
+
+    def simpleStreamReader(self, schema) -> "_NetCDFStreamReader":
+        return _NetCDFStreamReader(
+            self.options, self._splitter, self._range_decoder
+        )
+
+    @classmethod
+    def with_codecs(
+        cls, splitter: Callable, range_decoder: Callable
+    ) -> type["AdcircNetCDFDataSource"]:
+        """A registerable subclass with injected split/decode callables
+        (the no-NetCDF-library test path, and the hook for xarray/h5py
+        codecs on equipped hosts)."""
+        return type(
+            "AdcircNetCDFDataSourceInjected",
+            (cls,),
+            {
+                "_splitter": staticmethod(splitter),
+                "_range_decoder": staticmethod(range_decoder),
+            },
+        )
+
+
+def scan_netcdf(spark: SparkSession, path: str, variable: str) -> DataFrame:
+    """The record variable `variable` of the NetCDF file(s) at `path`
+    (a file or a glob) as (ts, node_id, value) rows, one Spark task per
+    planned split. Registers the default-codec `adcirc_netcdf` source
+    on the session first, so a `with_codecs` class registered under
+    the same name never decodes this scan."""
+    spark.dataSource.register(AdcircNetCDFDataSource)
+    return (
+        spark.read.format("adcirc_netcdf")
+        .option("path", path)
+        .option("variable", variable)
+        .load()
     )
+
+
+class _NetCDFStreamReader(SimpleDataSourceStreamReader):
+    """Micro-batch reader over an arriving-NetCDF directory.
+
+    Offset = {"consumed": {file_path: n_splits_read}} — new files
+    and newly-planned splits of known files become the next batch
+    (one split per record for classic files — see _plan's merge).
+    Replay between committed offsets re-decodes exactly the same
+    byte ranges (splits are deterministic per file), giving the
+    exactly-once recovery contract for free."""
+
+    def __init__(self, options: dict, splitter: Callable, range_decoder: Callable):
+        self.path = options.get("path")
+        if not self.path:
+            raise ValueError("adcirc_netcdf requires .option('path', ...)")
+        self.variable = options.get("variable", "zeta")
+        self.splitter = splitter
+        self.range_decoder = range_decoder
+
+    @staticmethod
+    def _is_classic_nc3(p: str) -> bool:
+        """Signature probe: classic NetCDF-3 files begin 'CDF' + a
+        version byte in {1, 2, 5} (CDF-1/-2/-5). Anything else —
+        the \\x89HDF\\r\\n\\x1a\\n HDF5 superblock of NetCDF-4, or an
+        injected test fixture — is not classic."""
+        try:
+            with open(p, "rb") as fh:
+                magic = fh.read(4)
+        except OSError:
+            return False
+        return magic[:3] == b"CDF" and magic[3:4] in (b"\x01", b"\x02", b"\x05")
+
+    def _plan(self, p: str, length: int):
+        """Streaming split plan: for CLASSIC NetCDF-3 files only,
+        contiguous same-record sub-splits are MERGED back into one
+        span, because the checkpoint offset is a per-file SPLIT
+        COUNT — if the planner's granularity changed between a commit
+        and its replay (e.g. the batch path's node-range sub-splitting
+        of large classic records), a resumed stream would re-emit or
+        skip rows. Merging keeps the classic count at one split per
+        record across planner versions; a micro-batch decodes a record
+        in one task, which is the right trade for incremental file
+        arrival anyway.
+
+        NetCDF-4 (and injected-codec) splits pass through UNMERGED:
+        their count is a stable property of the file's chunk layout,
+        and adjacent compressed chunks of one record are often
+        byte-contiguous (the writer packs blobs back to back), so a
+        merged span would no longer match any chunk in the file's
+        index and nc4_range_decoder would refuse it (ADVICE r07). The
+        classic/NC4 routing is decided by the file signature, not the
+        splitter, so an injected splitter is never merged either."""
+        splits = sorted(plan_splits(self.splitter, p, length, self.variable))
+        if not self._is_classic_nc3(p):
+            return splits
+        merged: list[tuple[int, int, int]] = []
+        for t, off, nb in splits:
+            if merged and merged[-1][0] == t and \
+                    merged[-1][1] + merged[-1][2] == off:
+                merged[-1] = (t, merged[-1][1], merged[-1][2] + nb)
+            else:
+                merged.append((t, off, nb))
+        return merged
+
+    def initialOffset(self) -> dict:
+        return {"consumed": {}}
+
+    def _splits_by_file(self) -> dict[str, list[tuple[int, int, int]]]:
+        out: dict[str, list[tuple[int, int, int]]] = {}
+        for p in sorted(_glob.glob(self.path)):
+            try:
+                size = os.path.getsize(p)
+            except OSError:
+                # rotated/deleted between listing and stat: skip this
+                # trigger; it is re-listed (or permanently gone) next
+                continue
+            out[p] = sorted(self._plan(p, size))
+        return out
+
+    def _decode_rows(self, path: str, splits) -> Iterator[tuple]:
+        # SimpleDataSourceStreamReader.read takes tuples, not batches
+        for t, off, nb in splits:
+            batch = _decode_split(
+                self.range_decoder, path, self.variable, t, off, nb
+            )
+            yield from zip(*(col.to_pylist() for col in batch.columns))
+
+    def read(self, start: dict):
+        consumed = dict(start.get("consumed", {}))
+        rows: list[tuple] = []
+        for path, splits in self._splits_by_file().items():
+            done = consumed.get(path, 0)
+            fresh = splits[done:]
+            if fresh:
+                rows.extend(self._decode_rows(path, fresh))
+                consumed[path] = done + len(fresh)
+        return iter(rows), {"consumed": consumed}
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        s = start.get("consumed", {})
+        for path, n_end in end.get("consumed", {}).items():
+            n_start = s.get(path, 0)
+            if n_end > n_start:
+                try:
+                    size = os.path.getsize(path)
+                except OSError as exc:
+                    # a COMMITTED file was deleted before replay: the
+                    # data is genuinely unrecoverable — fail with a
+                    # clear message instead of a bare FileNotFoundError
+                    # deep inside the offset math
+                    raise RuntimeError(
+                        f"adcirc_netcdf replay: committed file {path!r} "
+                        "no longer exists; its rows cannot be recovered"
+                    ) from exc
+                splits = sorted(self._plan(path, size))[n_start:n_end]
+                yield from self._decode_rows(path, splits)
 
 
 def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
@@ -296,20 +382,18 @@ def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
     layout): mesh_nodes / mesh_elements from the grid variables, plus
     node_maxes.parquet when `variable` is time-less (a max field).
     Returns True when `variable` is a record variable, which the
-    caller scans per timestep (scan_netcdf_split).
+    caller scans per timestep (scan_netcdf). Raises ValueError naming
+    the file's variables when `variable` is not one of them.
 
     This is the reference-parity ingest: extract_url_grid +
     get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
     read the same x/y/depth/element/zeta variables. Arrays are
     materialized driver-side like the reference's grid dict (an HSOFS
     mesh is ~50 MB — metadata next to the fact table)."""
-    import numpy as np
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from adcirctime2cogs_spark.sources import hdf5, netcdf3
 
-    os.makedirs(out_dir, exist_ok=True)
     try:
         h = netcdf3.header_for(nc_path)
 
@@ -320,7 +404,9 @@ def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
             return netcdf3.masked_to_nan(_read(name), h.vars[name])
 
         var_names = h.vars
-        is_record = h.is_record(h.vars[variable])
+
+        def _is_record(name):
+            return h.is_record(h.vars[name])
     except netcdf3.NotClassicNetCDF:
         nc4 = hdf5.nc4_for(nc_path)
 
@@ -331,7 +417,14 @@ def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
             return hdf5._masked_to_nan(_read(name), nc4.vars[name].atts)
 
         var_names = nc4.vars
-        is_record = nc4.is_record(variable)
+        _is_record = nc4.is_record
+    if variable not in var_names:
+        raise ValueError(
+            f"variable {variable!r} not in {nc_path!r} "
+            f"(has: {sorted(var_names)})"
+        )
+    is_record = _is_record(variable)
+    os.makedirs(out_dir, exist_ok=True)
     x = _read("x").astype("float64").ravel()
     y = _read("y").astype("float64").ravel()
     depth = (
@@ -376,16 +469,16 @@ def adcirc_nc_to_tables(
     """One ADCIRC fort.*.nc -> the COMPLETE engine-native table set
     (sources/mesh.py layout): the static tables of
     write_static_tables, plus {variable}.parquet for a record variable,
-    decoded by the per-timestep distributed scan. For callers that
-    query the tables repeatedly; the CLI scans the record variable
-    straight into its regrid instead."""
+    decoded by scan_netcdf. For callers that query the tables
+    repeatedly; the CLI scans the record variable straight into its
+    regrid instead."""
     if write_static_tables(nc_path, out_dir, variable):
-        # same ts-partitioned layout as netcdf_to_parquet: the O5
-        # time-slice pruning story depends on it (a flat directory
-        # would scan every row group for any ts filter)
-        long_df = scan_netcdf_split(spark, nc_path, variable)
+        # ts-partitioned: the O5 time-slice pruning story depends on
+        # it (a flat directory would scan every row group for any ts
+        # filter)
         (
-            long_df.repartition("ts")
+            scan_netcdf(spark, nc_path, variable)
+            .repartition("ts")
             .write.mode("overwrite")
             .partitionBy("ts")
             .parquet(os.path.join(out_dir, f"{variable}.parquet"))

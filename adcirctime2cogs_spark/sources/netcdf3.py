@@ -24,9 +24,9 @@ interleave per record with stride `recsize` (sum of the record vars'
 padded per-record sizes — unpadded when there is exactly ONE record
 variable, the spec's special rule).
 
-The layout is why the per-timestep byte-range scan (netcdf.py
-scan_netcdf_split, the reference's chunks={'time': 1}) needs no chunk
-index at all here: record r of variable v is exactly
+The layout is why the per-timestep byte-range scan (the netcdf.py
+`adcirc_netcdf` DataSource, the reference's chunks={'time': 1}) needs
+no chunk index at all here: record r of variable v is exactly
 [v.begin + r*recsize, + slab_size(v)) — computable from the header
 alone, so split planning is a single small header read per file.
 
@@ -294,9 +294,9 @@ def _recover_streaming_numrecs(h: NC3Header, total_bytes: int) -> NC3Header:
     """STREAMING sentinel: a writer that crashed (or is still
     appending) never patched numrecs — the actual record count is
     whatever whole records exist between the first record offset and
-    EOF (the spec-sanctioned recovery). Applied by every entry point
-    that knows the total size (file reads AND whole-file byte decodes)
-    so a sentinel can never reach read_var as a ~2^32 record count."""
+    EOF (the spec-sanctioned recovery). Applied by read_header_file,
+    which knows the file size, so a sentinel can never reach read_var
+    as a ~2^32 record count."""
     if h.numrecs == _STREAMING.get(h.version) and h.record_vars:
         base = min(v.begin for v in h.record_vars)
         h.numrecs = max(0, (total_bytes - base) // h.recsize)
@@ -451,26 +451,6 @@ def masked_to_nan(arr: np.ndarray, v: NC3Var) -> np.ndarray:
 
 
 # ------------------------------------------ netcdf.py codec callables
-def decode_adcirc(path: str, content: bytes, variable: str):
-    """(times, node_ids, values[t][n]) — scan_netcdf_distributed's
-    decoder contract (netcdf.py), whole-file form."""
-    src = content if content else path
-    h = (
-        _recover_streaming_numrecs(parse_header(content), len(content))
-        if content
-        else header_for(path)
-    )
-    v = h.vars[variable]
-    if not h.is_record(v):
-        raise ValueError(
-            f"{variable} is not a record variable; time-less max fields "
-            "load through sources/mesh.py's node_maxes path"
-        )
-    values = masked_to_nan(read_var(src, h, variable), v)
-    times = decode_times(src, h)
-    return times, range(values.shape[-1]), values
-
-
 # decode tasks are CPU-light (frombuffer + mask), so smaller splits
 # win on parallelism long before scheduling overhead bites: an HSOFS
 # record (14.6 MB) planned at 4 MB = 4 tasks/record — measured 2.1-3.4s
@@ -534,10 +514,10 @@ def classic_splitter(path: str, length: int, variable: str | None = None,
 
 def classic_range_decoder(path: str, variable: str, t_idx: int,
                           offset: int, nbytes: int):
-    """(ts, node_ids, values_1d) for ONE split — scan_netcdf_split's
-    range-decoder contract. Opens the file itself and reads only its
-    byte range plus the (tiny) time slab; whole-file bytes never flow
-    through Spark. Accepts both split shapes the splitter plans:
+    """(ts, node_ids, values_1d) for ONE split — the netcdf.py
+    DataSource's range-decoder contract. Opens the file itself and
+    reads only its byte range plus the (tiny) time slab; whole-file
+    bytes never flow through Spark. Accepts both split shapes the splitter plans:
     a whole-record span containing the variable's slab (legacy), or a
     sub-slab node-range chunk strictly inside it."""
     h = header_for(path)

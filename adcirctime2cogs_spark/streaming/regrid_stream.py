@@ -41,7 +41,8 @@ def read_timeseries_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over (ts, node_id, value) parquet drops — the
-    layout netcdf_to_parquet writes, consumed as it lands."""
+    layout sources/netcdf.adcirc_nc_to_tables writes, consumed as it
+    lands."""
     reader = spark.readStream.schema(TS_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

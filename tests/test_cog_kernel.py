@@ -24,7 +24,7 @@ from adcirctime2cogs_spark.plans.weights import build_weights
 from adcirctime2cogs_spark.sinks.cog import write_cogs
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
 from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
-from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -112,7 +112,7 @@ def test_kernel_matches_join_path_jittered_mesh(spark, tmp_path):
     assert len([f for f in os.listdir(out / "zeta")
                 if f.endswith(".tif")]) == 3
 
-    tsv = scan_netcdf_split(spark, nc, "zeta")
+    tsv = scan_netcdf(spark, nc, "zeta")
     _join_path_cogs(spark, str(out / "_tables"), tsv, "zeta", 0.01,
                     str(tmp_path / "join"))
     _assert_same_cogs(str(out / "zeta"), str(tmp_path / "join"),

@@ -2,9 +2,10 @@
 conformance, reader/writer round-trips across layouts and filters, a
 hand-encoded superblock-v2 + OHDR-v2 file (independent of the writer),
 and the REAL end-to-end path — a fort.63-like NetCDF-4 file decoded by
-the DEFAULT codecs (zero injection, no h5py) through the distributed
-scans into the regrid plan, golden-matched against both the micromesh
-fixture and the byte-identical classic NetCDF-3 file (SURVEY O1/O2)."""
+the DEFAULT codecs (zero injection, no h5py) through the
+`adcirc_netcdf` scan into the regrid plan, golden-matched against both
+the micromesh fixture and the byte-identical classic NetCDF-3 file
+(SURVEY O1/O2)."""
 
 import struct
 
@@ -14,6 +15,7 @@ import pytest
 from adcirctime2cogs_spark.plans import micromesh as mm
 from adcirctime2cogs_spark.sources import hdf5
 from adcirctime2cogs_spark.sources import netcdf3 as nc3
+from tests.test_netcdf3 import _reference_rows, _scan_rows
 
 FILL = -99999.0
 
@@ -290,16 +292,17 @@ def test_unsupported_filter_raises_typed_error_end_to_end(tmp_path):
     with pytest.raises(hdf5.UnsupportedHDF5Feature,
                        match="deflate=1, shuffle=2, fletcher32=3"):
         hdf5.NC4File(p).read_var("zeta")
-    try:
-        import xarray  # noqa: F401
-        has_xarray = True
-    except ImportError:
-        has_xarray = False
-    if not has_xarray:
-        from adcirctime2cogs_spark.sources.netcdf import _default_decoder
+    # and from the scan's range decoder, on every planned split
+    from adcirctime2cogs_spark.sources.netcdf import (
+        _default_range_decoder,
+        _default_splitter,
+    )
 
+    splits = _default_splitter(p, 0, "zeta")
+    assert len(splits) == 3
+    for t, off, nb in splits:
         with pytest.raises(hdf5.UnsupportedHDF5Feature, match="307"):
-            _default_decoder(p, open(p, "rb").read(), "zeta")
+            _default_range_decoder(p, "zeta", t, off, nb)
 
 
 def test_not_hdf5_and_out_of_subset_errors(tmp_path):
@@ -383,44 +386,32 @@ def test_superblock_v2_ohdr_v2_compact_links(tmp_path):
 
 
 # ----------------------------------------- default codecs, zero h5py
-def test_scan_distributed_default_decoder_nc4(spark, tmp_path):
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+def test_scan_netcdf_default_codecs_nc4(spark, tmp_path):
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p)
-    df = scan_netcdf_distributed(spark, p, "zeta")
+    df = scan_netcdf(spark, p, "zeta")
     got = {(str(r.ts), r.node_id): r.value for r in df.collect()}
     assert len(got) == len(mm.TIMESERIES)
     for ts, nid, v in mm.TIMESERIES:
-        gv = got[(ts, nid)]
         if v is None:
-            assert gv is None or (gv != gv)
+            assert got[(ts, nid)] is None
         else:
-            assert gv == pytest.approx(v, abs=0)
+            assert got[(ts, nid)] == pytest.approx(v, abs=0)
 
 
 @pytest.mark.parametrize("node_chunk", [None, 2])
 def test_scan_split_default_codecs_nc4(spark, tmp_path, node_chunk):
-    """scan_netcdf_split on NetCDF-4 with the DEFAULT splitter/range
+    """scan_netcdf on NetCDF-4 with the DEFAULT splitter/range
     decoder: splits come from the chunk B-tree (per compressed chunk —
     node_chunk=2 forces multiple chunks per record) and the union of
-    all chunk tasks equals the whole-file scan."""
-    from adcirctime2cogs_spark.sources.netcdf import (
-        scan_netcdf_distributed,
-        scan_netcdf_split,
-    )
+    all chunk tasks equals the whole-variable reference decode."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p, node_chunk=node_chunk)
-    whole = scan_netcdf_distributed(spark, p, "zeta")
-    split = scan_netcdf_split(spark, p, "zeta")
-    key = lambda r: (str(r.ts), r.node_id)  # noqa: E731
-    a = sorted(((key(r), r.value) for r in whole.collect()))
-    b = sorted(((key(r), r.value) for r in split.collect()))
-    assert [k for k, _ in a] == [k for k, _ in b]
-    for (_, va), (_, vb) in zip(a, b):
-        assert (va is None and vb is None) or va == vb or \
-            (va != va and vb != vb)
+    assert _scan_rows(scan_netcdf(spark, p, "zeta")) == _reference_rows(p)
 
 
 def test_scan_split_paged_extensible_array(spark, tmp_path, monkeypatch):
@@ -432,11 +423,8 @@ def test_scan_split_paged_extensible_array(spark, tmp_path, monkeypatch):
     unpaged, as libhdf5's parameters always guarantee) so a
     300-record file exercises the same code path a >131k-chunk file
     takes at the default parameters, kept test-sized. Split union
-    must equal the whole-file scan."""
-    from adcirctime2cogs_spark.sources.netcdf import (
-        scan_netcdf_distributed,
-        scan_netcdf_split,
-    )
+    must equal the whole-variable reference decode."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     monkeypatch.setattr(hdf5, "_EA_PAGE_BITS", 6)
     p = str(tmp_path / "paged.nc")
@@ -453,20 +441,16 @@ def test_scan_split_paged_extensible_array(spark, tmp_path, monkeypatch):
     )
     hdf5._nc4_cached.cache_clear()  # page size differs from any
     # previously cached parse of another fixture at this path
-    whole = scan_netcdf_distributed(spark, p, "zeta")
-    split = scan_netcdf_split(spark, p, "zeta")
-    key = lambda r: (str(r.ts), r.node_id)  # noqa: E731
-    a = sorted(((key(r), r.value) for r in whole.collect()))
-    b = sorted(((key(r), r.value) for r in split.collect()))
-    assert len(a) == 900
-    assert a == b
+    ref = _reference_rows(p)
+    assert len(ref) == 900
+    assert _scan_rows(scan_netcdf(spark, p, "zeta")) == ref
 
 
 def test_nc4_and_nc3_decode_identically(spark, tmp_path):
     """The SAME micromesh content written as CDF-1 and as NetCDF-4
     yields bit-identical rows through the default decoders — format
     parity, not just plausibility."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p3 = str(tmp_path / "c.nc")
     p4 = str(tmp_path / "h.nc")
@@ -482,18 +466,9 @@ def test_nc4_and_nc3_decode_identically(spark, tmp_path):
         ],
     )
     _write_micromesh_nc4(p4)
-    rows3 = sorted(
-        ((str(r.ts), r.node_id), r.value)
-        for r in scan_netcdf_distributed(spark, p3, "zeta").collect()
-    )
-    rows4 = sorted(
-        ((str(r.ts), r.node_id), r.value)
-        for r in scan_netcdf_distributed(spark, p4, "zeta").collect()
-    )
-    assert [k for k, _ in rows3] == [k for k, _ in rows4]
-    for (_, v3), (_, v4) in zip(rows3, rows4):
-        assert (v3 is None and v4 is None) or v3 == v4 or \
-            (v3 != v3 and v4 != v4)
+    rows3 = _scan_rows(scan_netcdf(spark, p3, "zeta"))
+    rows4 = _scan_rows(scan_netcdf(spark, p4, "zeta"))
+    assert rows3 == rows4 and len(rows3) == len(mm.TIMESERIES)
 
 
 def test_nc4_decode_feeds_regrid_golden(spark, tmp_path):
@@ -502,7 +477,7 @@ def test_nc4_decode_feeds_regrid_golden(spark, tmp_path):
     the fixture queries, equals the fixture-sourced regrid exactly."""
     from adcirctime2cogs_spark.plans.regrid import regrid
     from adcirctime2cogs_spark.plans.weights import build_weights
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p)
@@ -510,7 +485,7 @@ def test_nc4_decode_feeds_regrid_golden(spark, tmp_path):
         mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark),
         mm.BIN_SIZE,
     )
-    from_nc = regrid(w, scan_netcdf_distributed(spark, p, "zeta"))
+    from_nc = regrid(w, scan_netcdf(spark, p, "zeta"))
     from_fixture = regrid(w, mm.timeseries_df(spark))
 
     def snap(df):
@@ -526,9 +501,7 @@ def test_nc4_decode_feeds_regrid_golden(spark, tmp_path):
 def test_python_datasource_default_codecs_nc4(spark, tmp_path):
     """spark.read.format('adcirc_netcdf') on a NetCDF-4 file with NO
     injected codecs — one InputPartition per chunk via the B-tree."""
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p)
@@ -570,25 +543,14 @@ def test_scan_split_time_chunked_layout(spark, tmp_path, time_chunk,
     """nccopy-style time-chunked layouts (chunk time dim > 1) must not
     drop records: the splitter emits one split PER RECORD a chunk
     covers (3 records / chunk 2 -> an edge chunk), and the union of
-    all splits equals the whole-file scan."""
-    from adcirctime2cogs_spark.sources.netcdf import (
-        scan_netcdf_distributed,
-        scan_netcdf_split,
-    )
+    all splits equals the whole-variable reference decode."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p, time_chunk=time_chunk, node_chunk=node_chunk)
     splits = hdf5.nc4_splitter(p, 0, "zeta")
     assert sorted({t for t, _, _ in splits}) == [0, 1, 2]  # no record lost
-    whole = scan_netcdf_distributed(spark, p, "zeta")
-    split = scan_netcdf_split(spark, p, "zeta")
-    key = lambda r: (str(r.ts), r.node_id)  # noqa: E731
-    a = sorted(((key(r), r.value) for r in whole.collect()))
-    b = sorted(((key(r), r.value) for r in split.collect()))
-    assert [k for k, _ in a] == [k for k, _ in b]
-    for (_, va), (_, vb) in zip(a, b):
-        assert (va is None and vb is None) or va == vb or \
-            (va != va and vb != vb)
+    assert _scan_rows(scan_netcdf(spark, p, "zeta")) == _reference_rows(p)
 
 
 def test_streaming_nc4_drops_to_cog_zero_injection(spark, tmp_path):
@@ -607,9 +569,7 @@ def test_streaming_nc4_drops_to_cog_zero_injection(spark, tmp_path):
     from adcirctime2cogs_spark.plans.weights import build_weights
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
 
     ts_batch = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))
@@ -681,8 +641,6 @@ def test_streaming_plan_never_merges_nc4_chunk_splits(tmp_path):
     from adcirctime2cogs_spark.sources.netcdf import (
         _default_range_decoder,
         _default_splitter,
-    )
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
         _NetCDFStreamReader,
     )
 
@@ -873,11 +831,11 @@ def test_single_chunk_index(tmp_path, compress):
 
 
 def test_latest_splits_decode_identically_to_v1(spark, tmp_path):
-    """scan_netcdf_split's full distributed path — splitter + per-task
+    """scan_netcdf's full distributed path — splitter + per-task
     range decoder — produces identical rows from the v1-btree and the
     'latest' (EA-indexed) writes of the same payload, closing SURVEY
     O1 for h5py libver='latest' files."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p1 = str(tmp_path / "v1.nc")
     p2 = str(tmp_path / "v3.nc")
@@ -885,7 +843,7 @@ def test_latest_splits_decode_identically_to_v1(spark, tmp_path):
     _write_micromesh_nc4(p2, node_chunk=3, layout="latest")
 
     def snap(path):
-        df = scan_netcdf_split(spark, path, "zeta")
+        df = scan_netcdf(spark, path, "zeta")
         return sorted(
             (str(r.ts), r.node_id, None if r.value is None else round(r.value, 9))
             for r in df.collect()
@@ -1321,7 +1279,7 @@ def test_micromesh_latest_attr_heavy_pipeline(spark, tmp_path):
     15 ADCIRC-like global attributes (past max_compact -> dense) and
     indirect+filtered heaps still decodes IDENTICALLY to the plain v1
     file through the distributed scan."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     gatts = {k: f"meta-{k}" for k in (
         "model", "version", "grid", "agrid", "rundes", "runid", "title",
@@ -1349,12 +1307,8 @@ def test_micromesh_latest_attr_heavy_pipeline(spark, tmp_path):
             gatts=gatts,
             **kw,
         )
-    a = scan_netcdf_distributed(spark, p1, "zeta").orderBy(
-        "ts", "node_id"
-    ).collect()
-    b = scan_netcdf_distributed(spark, p2, "zeta").orderBy(
-        "ts", "node_id"
-    ).collect()
+    a = scan_netcdf(spark, p1, "zeta").orderBy("ts", "node_id").collect()
+    b = scan_netcdf(spark, p2, "zeta").orderBy("ts", "node_id").collect()
     assert a == b and len(a) > 0
     assert hdf5.H5File(p2).root_attrs["agrid"] == "meta-agrid"
 

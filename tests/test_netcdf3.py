@@ -2,12 +2,13 @@
 header-byte conformance, reader/writer round-trips, per-record slab
 addressing, and the REAL end-to-end path — a fort.63-like .nc decoded
 by the DEFAULT codecs (no injection, no third-party library) through
-the distributed scans into the regrid plan, golden-matched against the
-micromesh fixture (SURVEY O1/O2/O6)."""
+the `adcirc_netcdf` scan into the regrid plan, golden-matched against
+the micromesh fixture (SURVEY O1/O2/O6)."""
 
 import struct
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from adcirctime2cogs_spark.plans import micromesh as mm
@@ -52,6 +53,37 @@ def _write_micromesh_nc(path: str, version: int = 1) -> None:
         gatts={"model": "ADCIRC", "grid": "micromesh"},
         version=version,
     )
+
+
+def _reference_rows(path: str, variable: str = "zeta"):
+    """((ts, node_id), value) rows of a whole record variable, read by
+    the whole-variable readers write_static_tables uses — independent
+    of the split planner and range decoders. Fill values are None."""
+    from adcirctime2cogs_spark.sources import hdf5
+
+    try:
+        h = nc3.header_for(path)
+        values = nc3.masked_to_nan(
+            nc3.read_var(path, h, variable), h.vars[variable]
+        )
+        times = nc3.decode_times(path, h)
+    except nc3.NotClassicNetCDF:
+        nc = hdf5.nc4_for(path)
+        values = hdf5._masked_to_nan(
+            nc.read_var(variable), nc.vars[variable].atts
+        )
+        times = nc.times()
+    return sorted(
+        ((pd.Timestamp(t).to_pydatetime(), n), None if v != v else float(v))
+        for t, row in zip(times, values)
+        for n, v in enumerate(row)
+    )
+
+
+def _scan_rows(df):
+    """((ts, node_id), value) rows of a scan, sorted like
+    _reference_rows."""
+    return sorted(((r.ts, r.node_id), r.value) for r in df.collect())
 
 
 def test_header_bytes_conform_to_spec(tmp_path):
@@ -252,56 +284,42 @@ def test_truncated_header_retry(tmp_path):
     assert "zeta" in h.vars
 
 
-def test_scan_distributed_default_decoder_real_file(spark, tmp_path):
-    """scan_netcdf_distributed with NO injected decoder on a real
-    classic file: rows match the fixture, fill values arrive as null."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+def test_scan_netcdf_default_codecs_real_file(spark, tmp_path):
+    """scan_netcdf with the default codecs on a real classic file:
+    rows match the fixture, the fill value arrives as null."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
-    df = scan_netcdf_distributed(spark, p, "zeta")
+    df = scan_netcdf(spark, p, "zeta")
     got = {
         (str(r.ts), r.node_id): r.value
         for r in df.collect()
     }
     assert len(got) == len(mm.TIMESERIES)
     for ts, nid, v in mm.TIMESERIES:
-        gv = got[(ts, nid)]
         if v is None:
-            assert gv is None or (gv != gv)  # null (NaN normalizes at agg)
+            assert got[(ts, nid)] is None
         else:
-            assert gv == pytest.approx(v, abs=0)
+            assert got[(ts, nid)] == pytest.approx(v, abs=0)
 
 
 def test_scan_split_default_codecs_match_distributed(spark, tmp_path):
-    """scan_netcdf_split with the DEFAULT header-driven splitter and
-    range decoder (one task per timestep, header-only planning) returns
-    exactly the whole-file scan's rows."""
-    from adcirctime2cogs_spark.sources.netcdf import (
-        scan_netcdf_distributed,
-        scan_netcdf_split,
-    )
+    """scan_netcdf with the DEFAULT header-driven splitter and range
+    decoder (one task per timestep, header-only planning) returns
+    exactly the rows of the whole-variable reference decode."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
-    whole = scan_netcdf_distributed(spark, p, "zeta")
-    split = scan_netcdf_split(spark, p, "zeta")
-    key = lambda r: (str(r.ts), r.node_id)  # noqa: E731
-    a = sorted(((key(r), r.value) for r in whole.collect()))
-    b = sorted(((key(r), r.value) for r in split.collect()))
-    # NaN != NaN — compare with nan-aware equality
-    assert [k for k, _ in a] == [k for k, _ in b]
-    for (_, va), (_, vb) in zip(a, b):
-        assert (va is None and vb is None) or va == vb or (va != va and vb != vb)
+    assert _scan_rows(scan_netcdf(spark, p, "zeta")) == _reference_rows(p)
 
 
 def test_python_datasource_default_codecs_real_file(spark, tmp_path):
     """spark.read.format('adcirc_netcdf') with NO injected codecs on a
     real classic file — the DataSource's default splitter/range-decoder
     now decode CDF-1 natively (one InputPartition per timestep)."""
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
@@ -325,7 +343,7 @@ def test_real_decode_feeds_regrid_golden(spark, tmp_path):
     cells included)."""
     from adcirctime2cogs_spark.plans.regrid import regrid
     from adcirctime2cogs_spark.plans.weights import build_weights
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
@@ -333,7 +351,7 @@ def test_real_decode_feeds_regrid_golden(spark, tmp_path):
         mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark),
         mm.BIN_SIZE,
     )
-    from_nc = regrid(w, scan_netcdf_distributed(spark, p, "zeta"))
+    from_nc = regrid(w, scan_netcdf(spark, p, "zeta"))
     from_fixture = regrid(w, mm.timeseries_df(spark))
 
     def snap(df):
@@ -362,9 +380,7 @@ def test_streaming_classic_drops_to_cog_zero_injection(spark, tmp_path):
     from adcirctime2cogs_spark.plans.weights import build_weights
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
 
     ts_batch = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))
@@ -430,10 +446,10 @@ def test_classic_subsplit_large_records(spark, tmp_path):
     """Records larger than max_split_bytes sub-split into node-range
     chunks (the intra-record parallelism the NetCDF-4 chunk index
     gives for free), and the union of chunk tasks equals the
-    whole-file scan exactly."""
+    whole-variable reference decode exactly."""
     from adcirctime2cogs_spark.sources.netcdf import (
-        scan_netcdf_distributed,
-        scan_netcdf_split,
+        AdcircNetCDFDataSource,
+        _default_range_decoder,
     )
 
     p = str(tmp_path / "fort.63.nc")
@@ -447,27 +463,21 @@ def test_classic_subsplit_large_records(spark, tmp_path):
     per_rec = [n for t, _, n in splits if t == 0]
     assert sum(per_rec) == slab and all(n % 8 == 0 for n in per_rec)
 
-    whole = scan_netcdf_distributed(spark, p, "zeta")
-    split = scan_netcdf_split(
-        spark, p, "zeta",
-        splitter=lambda path, ln, var: nc3.classic_splitter(
+    spark.dataSource.register(AdcircNetCDFDataSource.with_codecs(
+        lambda path, ln, var: nc3.classic_splitter(
             path, ln, var, max_split_bytes=16
         ),
+        _default_range_decoder,
+    ))
+    split = (
+        spark.read.format("adcirc_netcdf")
+        .option("path", p).option("variable", "zeta").load()
     )
-    key = lambda r: (str(r.ts), r.node_id)  # noqa: E731
-    a = sorted(((key(r), r.value) for r in whole.collect()))
-    b = sorted(((key(r), r.value) for r in split.collect()))
-    assert [k for k, _ in a] == [k for k, _ in b]
-    for (_, va), (_, vb) in zip(a, b):
-        assert (va is None and vb is None) or va == vb or \
-            (va != va and vb != vb)
+    assert _scan_rows(split) == _reference_rows(p)
 
-    # layout guarantee (ADVICE r10): exactly one split per task — the
-    # splits frame is coalesced to ONE partition before the
-    # round-robin repartition, so targets can't collide across source
-    # partitions and no task idles while another decodes two ranges.
-    # mapInPandas is narrow, so the output's partition ids are the
-    # split tasks' ids: every split occupies its own partition.
+    # layout guarantee: exactly one split per task — each planned
+    # split is its own InputPartition, so no task idles while another
+    # decodes two ranges
     from pyspark.sql import functions as F
 
     per_part = (
@@ -582,17 +592,79 @@ def test_splitter_validates_variable_at_plan_time(tmp_path):
     assert len(nc3.classic_splitter(p, n)) == 3
 
 
-def test_default_decoder_reports_both_rejections_for_garbage():
+def test_default_splitter_reports_both_rejections_for_garbage(tmp_path):
     """Bytes that are neither classic NetCDF nor HDF5 surface BOTH
-    rejections through the typed fallback gate — NotHDF5 subclasses
+    rejections in the split planner's ValueError — NotHDF5 subclasses
     ValueError, not HDF5Error, and used to escape raw (review r10)."""
-    try:
-        import xarray  # noqa: F401
-        pytest.skip("xarray present: fallback would engage instead")
-    except ImportError:
-        pass
-    from adcirctime2cogs_spark.sources.netcdf import _default_decoder
+    from adcirctime2cogs_spark.sources.netcdf import _default_splitter
 
-    with pytest.raises(NotImplementedError,
+    p = tmp_path / "junk.nc"
+    p.write_bytes(b"JUNKJUNKJUNK" * 10)
+    with pytest.raises(ValueError,
                        match="not a classic NetCDF.*no HDF5 signature"):
-        _default_decoder("junk.nc", b"JUNKJUNKJUNK" * 10, "zeta")
+        _default_splitter(str(p), p.stat().st_size, "zeta")
+
+
+@pytest.mark.parametrize("fmt", ["classic", "nc4"])
+def test_scan_rejects_bad_variable_at_plan_time(spark, tmp_path, fmt):
+    """A missing variable and a time-less one both fail the scan with
+    the planner's ValueError, for either NetCDF flavour — NetCDF-4
+    used to raise a bare KeyError for the first and plan an empty scan
+    for the second."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
+    from tests.test_hdf5 import _write_micromesh_nc4
+
+    p = str(tmp_path / "fort.63.nc")
+    (_write_micromesh_nc if fmt == "classic" else _write_micromesh_nc4)(p)
+    with pytest.raises(Exception, match=r"'zetta' not in .*has: \["):
+        scan_netcdf(spark, p, "zetta").collect()
+    with pytest.raises(Exception, match="'depth' .*not a record variable"):
+        scan_netcdf(spark, p, "depth").collect()
+
+
+@pytest.mark.parametrize("fmt", ["classic", "nc4"])
+def test_reader_yields_one_arrow_batch_per_split(tmp_path, fmt):
+    """The batch reader's contract: read() yields exactly one Arrow
+    RecordBatch per planned split, typed like the declared schema,
+    with nulls exactly at the _FillValue nodes. The classic file is
+    planned in node-range sub-splits, the NetCDF-4 file in 2-node
+    chunks, so no split is a whole record."""
+    import pyarrow as pa
+
+    from adcirctime2cogs_spark.sources.netcdf import (
+        _ARROW_SCHEMA,
+        _default_range_decoder,
+        _default_splitter,
+        _NetCDFReader,
+    )
+    from tests.test_hdf5 import _write_micromesh_nc4
+
+    p = str(tmp_path / "fort.63.nc")
+    if fmt == "classic":
+        _write_micromesh_nc(p)
+
+        def splitter(path, length, variable):
+            return nc3.classic_splitter(path, length, variable,
+                                        max_split_bytes=16)
+    else:
+        _write_micromesh_nc4(p, node_chunk=2)
+        splitter = _default_splitter
+    reader = _NetCDFReader({"path": p, "variable": "zeta"}, splitter,
+                           _default_range_decoder)
+    splits = reader.partitions()
+    assert len(splits) > 3  # more than one split per record
+    rows = []
+    for split in splits:
+        batches = list(reader.read(split))
+        assert len(batches) == 1
+        batch = batches[0]
+        assert isinstance(batch, pa.RecordBatch)
+        assert batch.schema == _ARROW_SCHEMA
+        assert 0 < batch.num_rows < len(mm.NODES)
+        ts = batch.column("ts").to_pylist()
+        rows += [((t.replace(tzinfo=None), n), v) for t, n, v in zip(
+            ts, batch.column("node_id").to_pylist(),
+            batch.column("value").to_pylist())]
+    assert sorted(rows) == _reference_rows(p)
+    assert [k for k, v in rows if v is None] == [
+        (pd.Timestamp(mm.T2).to_pydatetime(), 3)]

@@ -226,6 +226,63 @@ def test_pipeline_netcdf_input_end_to_end(spark, tmp_path):
         assert np.allclose(a, b, equal_nan=True)
 
 
+def test_pipeline_cli_unknown_nc_variable_exits_1(tmp_path, capsys):
+    """A mistyped --input-variable on a .nc input is a one-line error
+    naming the file's variables and exit code 1, not a KeyError
+    traceback."""
+    from adcirctime2cogs_spark.pipeline import main
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_micromesh_nc(str(in_dir / "fort.63.nc"))
+    rc = main([
+        "--input-dir", str(in_dir),
+        "--output-dir", str(tmp_path / "o"),
+        "--final-dir", str(tmp_path / "f"),
+        "--input-file", "fort.63.nc",
+        "--input-variable", "zetta",
+    ])
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "'zetta' not in" in err and "'zeta'" in err
+    assert "Traceback" not in err
+
+
+def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
+    spark, tmp_path, monkeypatch
+):
+    """The CLI reads a .nc record variable through the adcirc_netcdf
+    DataSource alone: the timeseries plan the COG sink consumes has no
+    binaryFile scan and no round-robin exchange."""
+    from adcirctime2cogs_spark import pipeline
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    plans = []
+    sink = pipeline.write_cogs_from_nodes
+
+    def spy(timeseries, *args, **kwargs):
+        plans.append(timeseries._jdf.queryExecution().toString())
+        return sink(timeseries, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_cogs_from_nodes", spy)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_micromesh_nc(str(in_dir / "fort.63.nc"))
+    assert pipeline.main([
+        "--input-dir", str(in_dir),
+        "--output-dir", str(tmp_path / "o"),
+        "--final-dir", str(tmp_path / "f"),
+        "--input-file", "fort.63.nc",
+        "--input-variable", "zeta",
+        "--res", "0.4",
+    ]) == 0
+    assert len(plans) == 1
+    assert "BatchScan adcirc_netcdf" in plans[0]
+    assert "binaryFile" not in plans[0]
+    assert "RoundRobinPartitioning" not in plans[0]
+
+
 def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):
     """ADVICE r10: a mosaic indexer globbing *.tif must never see an
     in-progress or orphaned temp — so the atomic-writer temp suffix

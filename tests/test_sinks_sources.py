@@ -1,5 +1,5 @@
 """COG sink, sidecar, mesh parquet round-trip, and the NetCDF adapter
-plumbing (with an injected decoder — no NetCDF lib in this image)."""
+plumbing (the adcirc_netcdf DataSource with injected codecs)."""
 
 
 import numpy as np
@@ -16,7 +16,6 @@ from adcirctime2cogs_spark.sinks.sidecar import (
     write_mosaic_sidecars,
 )
 from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
-from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_distributed
 
 
 @pytest.fixture(scope="module")
@@ -153,18 +152,30 @@ def test_mesh_parquet_roundtrip(spark, tmp_path):
 
 
 def test_netcdf_adapter_with_injected_decoder(spark, tmp_path):
-    """The binaryFile+mapInPandas plumbing end-to-end, decoder injected
-    (the real decoder needs xarray; SURVEY O1)."""
+    """The DataSource plumbing end-to-end with an injected codec pair
+    (the with_codecs hook for library decoders, SURVEY O1): list
+    node ids and None values from the decoder are accepted."""
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+
     nc = tmp_path / "fort.63.nc"
     nc.write_bytes(b"\x89HDF-fake")
+    times = [pd.Timestamp("2024-01-01"), pd.Timestamp("2024-01-01 01:00")]
+    values = [[1.0, 2.0, None], [4.0, None, 6.0]]
 
-    def fake_decoder(path, content, variable):
+    def splitter(path, length, variable):
         assert variable == "zeta"
-        times = [pd.Timestamp("2024-01-01"), pd.Timestamp("2024-01-01 01:00")]
-        values = [[1.0, 2.0, None], [4.0, None, 6.0]]
-        return times, [0, 1, 2], values
+        return [(0, 0, length), (1, 0, length)]
 
-    df = scan_netcdf_distributed(spark, str(nc), "zeta", decoder=fake_decoder)
+    def range_decoder(path, variable, t_idx, offset, nbytes):
+        return times[t_idx], [0, 1, 2], values[t_idx]
+
+    spark.dataSource.register(
+        AdcircNetCDFDataSource.with_codecs(splitter, range_decoder)
+    )
+    df = (
+        spark.read.format("adcirc_netcdf")
+        .option("path", str(nc)).option("variable", "zeta").load()
+    )
     rows = df.collect()
     assert len(rows) == 6
     assert {r.node_id for r in rows} == {0, 1, 2}
@@ -176,7 +187,7 @@ def test_netcdf_split_scan_one_task_per_timestep(spark, tmp_path):
     """Large-file path (VERDICT #6): F files x T timesteps -> F*T
     byte-range tasks; no task ever sees whole-file content — the range
     decoder gets (path, offset, nbytes) and opens the file itself."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
 
     HDR, T, NODES = 8, 3, 4
     block = NODES * 8
@@ -204,12 +215,14 @@ def test_netcdf_split_scan_one_task_per_timestep(spark, tmp_path):
             NODES
         ), vals
 
-    df = scan_netcdf_split(
-        spark,
-        str(tmp_path / "*.nc"),
-        "zeta",
-        splitter=splitter,
-        range_decoder=range_decoder,
+    spark.dataSource.register(
+        AdcircNetCDFDataSource.with_codecs(splitter, range_decoder)
+    )
+    df = (
+        spark.read.format("adcirc_netcdf")
+        .option("path", str(tmp_path / "*.nc"))
+        .option("variable", "zeta")
+        .load()
     )
     # one planned task per (file, timestep) split
     assert df.rdd.getNumPartitions() == 2 * T
@@ -228,9 +241,7 @@ def test_netcdf_python_datasource(spark, tmp_path):
     """The same byte-range scan as a native Spark 4 Python DataSource:
     format('adcirc_netcdf') with injected codecs — one InputPartition
     per timestep, NaN→null at ingest."""
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
 
     HDR, T, NODES = 8, 3, 4
     block = NODES * 8
@@ -282,9 +293,7 @@ def test_netcdf_datasource_stream_reader(spark, tmp_path):
     directory become micro-batches of decoded timesteps; the committed
     offset tracks per-file consumed timesteps so every row lands
     exactly once."""
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
 
     HDR, T, NODES = 8, 2, 3
     block = NODES * 8
@@ -347,12 +356,12 @@ def test_netcdf_split_rejects_non_netcdf(spark, tmp_path):
     """A file that is neither classic NC-3 nor HDF5 fails the split
     planner with a typed error naming BOTH rejected formats (the old
     h5py gate is gone — NetCDF-4 now splits natively)."""
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     nc = tmp_path / "y.nc"
     nc.write_bytes(b"00")
-    with pytest.raises(ValueError, match="(?i)not classic|cdf") as ei:
-        scan_netcdf_split(spark, str(nc), "zeta")
+    with pytest.raises(Exception, match="(?i)not classic|cdf") as ei:
+        scan_netcdf(spark, str(nc), "zeta").collect()
     assert "HDF5" in str(ei.value)
 
 
@@ -423,11 +432,17 @@ def test_s3_default_client_gated():
         assert upload_to_s3("b", "k", "/nonexistent") is False
 
 
-def test_netcdf_default_decoder_gated(spark, tmp_path):
-    nc = tmp_path / "x.nc"
-    nc.write_bytes(b"00")
-    df = scan_netcdf_distributed(spark, str(nc), "zeta")
-    with pytest.raises(Exception, match="(?i)netcdf|notimplemented"):
+def test_netcdf_default_codecs_gated(spark, tmp_path):
+    """A glob that matches one non-NetCDF file fails the scan with the
+    split planner's error, even though the other matched file is a
+    valid NetCDF."""
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    _write_micromesh_nc(str(tmp_path / "a.nc"))
+    (tmp_path / "x.nc").write_bytes(b"00")
+    df = scan_netcdf(spark, str(tmp_path / "*.nc"), "zeta")
+    with pytest.raises(Exception, match="(?i)not a netcdf file"):
         df.collect()
 
 
@@ -540,7 +555,7 @@ def test_netcdf_datasource_empty_glob_raises():
     may legitimately arrive later)."""
     import pytest
 
-    from adcirctime2cogs_spark.sources.netcdf_datasource import _NetCDFReader
+    from adcirctime2cogs_spark.sources.netcdf import _NetCDFReader
 
     reader = _NetCDFReader(
         {"path": "/nonexistent-dir/*.nc"},

@@ -402,9 +402,7 @@ def test_netcdf_stream_to_cog_full_flow(spark, tmp_path):
     from adcirctime2cogs_spark.plans.regrid import regrid
     from adcirctime2cogs_spark.plans.weights import build_weights
     from adcirctime2cogs_spark.sinks.cog import write_cogs
-    from adcirctime2cogs_spark.sources.netcdf_datasource import (
-        AdcircNetCDFDataSource,
-    )
+    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
 
     ts_batch = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))

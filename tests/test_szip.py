@@ -174,13 +174,18 @@ def test_netcdf4_szip_end_to_end(tmp_path):
     )
     got = hdf5.NC4File(p).read_var("zeta")
     assert np.array_equal(got, zeta)
-    # and end-to-end through the default scan decoder
-    from adcirctime2cogs_spark.sources.netcdf import _default_decoder
-
-    times, node_ids, values = _default_decoder(
-        p, open(p, "rb").read(), "zeta"
+    # and through the scan's range decoder, one planned split at a time
+    from adcirctime2cogs_spark.sources.netcdf import (
+        _default_range_decoder,
+        _default_splitter,
     )
-    assert np.allclose(np.asarray(values, dtype="f8"), zeta)
+
+    splits = _default_splitter(p, 0, "zeta")
+    assert sorted(t for t, _, _ in splits) == [0, 1, 2]
+    for t, off, nb in splits:
+        _, node_ids, values = _default_range_decoder(p, "zeta", t, off, nb)
+        assert list(node_ids) == list(range(7))
+        assert np.array_equal(values, zeta[t])
 
 
 def test_netcdf4_szip_out_of_subset_params_raise_typed(tmp_path):

@@ -766,9 +766,10 @@ def run_nc4_ingest_leg(
     var chunked (1, node_chunk), deflate — ceil(1.8225M/200k)=10
     chunks per timestep, so the split scan plans n_ts*10 byte-range
     tasks from the v1 B-tree). Green = both formats ingest through
-    scan_netcdf_split to IDENTICAL aggregate checksums. This is the
-    pure-Python HDF5 codec's scale proof: multi-chunk deflate decode
-    of a 1.8M-node record variable, distributed."""
+    scan_netcdf (the adcirc_netcdf DataSource) to IDENTICAL aggregate
+    checksums. This is the pure-Python HDF5 codec's scale proof:
+    multi-chunk deflate decode of a 1.8M-node record variable,
+    distributed."""
     import shutil
     import tempfile
 
@@ -776,7 +777,7 @@ def run_nc4_ingest_leg(
 
     from adcirctime2cogs_spark.sources import hdf5
     from adcirctime2cogs_spark.sources import netcdf3 as nc3
-    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf_split
+    from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     work = tempfile.mkdtemp(prefix="scale_nc4_")
     try:
@@ -817,7 +818,7 @@ def run_nc4_ingest_leg(
             # count differs between formats/planners), while a sum of
             # per-row int64 hashes in decimal(38,0) is exact,
             # order-independent, and never overflows under ANSI mode
-            df = scan_netcdf_split(spark, path, "zeta")
+            df = scan_netcdf(spark, path, "zeta")
             row = df.agg(
                 F.count("*").alias("c"),
                 F.sum(
