@@ -1,9 +1,13 @@
 """End-to-end pipeline: the Spark-first equivalent of the reference CLI
 (run/adcircTime2cogs.py:242-279 argparse -> main() :121-240).
 
-    mesh tables -> bbox agg -> grid spec -> weights (once, as arrays)
+    mesh tables -> driver arrays -> bbox -> grid spec
+      -> weights (one map-only Spark stage, one task per row band)
       node values -> groupBy(ts) -> regrid + COG per ts -> mosaic
       sidecars -> zip
+
+Three Spark jobs in all: the weights stage, and the COG kernel's
+shuffle and result stages.
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
 - one Spark job regrids and writes every timestep: the node values of
@@ -11,7 +15,14 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
   arrays and writes its COG (sinks/cog.write_cogs_from_nodes), where
   the reference loops over timesteps sequentially (SURVEY P9);
 - weights computed once and reused across every timestep (the
-  reference rebuilds its interpolator per step, P6);
+  reference rebuilds its interpolator per step, P6). The driver reads
+  the mesh tables with pyarrow (sources/mesh.read_mesh_arrays), takes
+  the bbox with numpy and writes the triangles once as arrays; each
+  task of one `spark.range(bands).mapInArrow` stage rasterizes one band
+  of raster rows in closed form and writes that band's weight arrays
+  (plans/weights.build_band_weights). No join, no shuffle, no parquet
+  round trip; the Spark SQL bin join (plans/weights.build_weights)
+  stays for the registry and streaming paths;
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
@@ -36,15 +47,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from adcirctime2cogs_spark.plans.grid import (
-    bounding_box,
-    grid_spec_from_bbox,
-    raster_cells,
+from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
+from adcirctime2cogs_spark.plans.weights import (
+    build_band_weights,
+    triangle_arrays,
 )
-from adcirctime2cogs_spark.plans.weights import build_weights
-from adcirctime2cogs_spark.sinks.cog import save_weights, write_cogs_from_nodes
+from adcirctime2cogs_spark.sinks.cog import write_cogs_from_nodes
 from adcirctime2cogs_spark.sinks.sidecar import archive_output, write_mosaic_sidecars
-from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
+from adcirctime2cogs_spark.sources.mesh import load_timeseries, read_mesh_arrays
 from adcirctime2cogs_spark.sources.netcdf import scan_netcdf, write_static_tables
 
 
@@ -66,7 +76,6 @@ def run_pipeline(
     final_dir: str,
     variable: str,
     res: float,
-    bin_size_cells: float = 4.0,
     s3_bucket: str | None = None,
     s3_client=None,
     timeseries: DataFrame | None = None,
@@ -81,28 +90,26 @@ def run_pipeline(
     input_dir (sources/mesh.load_timeseries)."""
     timings: dict[str, float] = {}
     t0 = time.time()
-    nodes, elements = load_mesh(spark, input_dir)
+    node_id, lon, lat, elements = read_mesh_arrays(input_dir)
     if timeseries is None:
         timeseries = load_timeseries(spark, input_dir, variable)
 
-    bbox = bounding_box(nodes)  # O7
+    bbox = {"lon_min": float(lon.min()), "lon_max": float(lon.max()),  # O7
+            "lat_min": float(lat.min()), "lat_max": float(lat.max())}
     spec = grid_spec_from_bbox(bbox, res)  # D4
-    cells = raster_cells(spark, spec)  # O11
+    tris = triangle_arrays(node_id, lon, lat, elements)
     timings["load_bbox"] = round(time.time() - t0, 2)
     t0 = time.time()
 
     cog_dir = os.path.join(output_dir, variable)
     weights_dir = os.path.join(output_dir, "_weights")
     try:
-        # bin size ~ a few cell widths (SURVEY §7 "what's hard")
-        weights = build_weights(
-            cells, nodes, elements, bin_size=res * bin_size_cells
-        )
-        n_nodes = save_weights(weights, weights_dir)  # O13-O15, once (P6)
+        # O11 + O13-O15, once (P6)
+        bands = build_band_weights(spark, tris, spec, weights_dir)
         timings["weights"] = round(time.time() - t0, 2)
         t0 = time.time()
         manifest = write_cogs_from_nodes(  # O16-O17 + O20
-            timeseries, weights_dir, n_nodes, spec, cog_dir, prefix=variable
+            timeseries, bands, spec, cog_dir, prefix=variable
         ).collect()
         timings["regrid_cog"] = round(time.time() - t0, 2)
     finally:

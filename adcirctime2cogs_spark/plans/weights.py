@@ -1,11 +1,15 @@
-"""Point-in-triangle location + barycentric weights as a spatial bin
-join (SURVEY O13-O15 — the one genuinely custom operator).
+"""Point-in-triangle location + barycentric weights (SURVEY O13-O15 —
+the one genuinely custom operator), in two forms that give the same
+rows: a Spark SQL bin join and the CLI's row-band kernel.
 
 The reference hides point location inside matplotlib/scipy C
 interpolators rebuilt per run (run/adcircTime2cogs.py:170-183,
 199-200); because the mesh connectivity is *given*
-(run/adcircTime2cogs.py:164-168), no Delaunay/Qhull is needed — point
-location is a join between raster centroids and the given triangles:
+(run/adcircTime2cogs.py:164-168), no Delaunay/Qhull is needed.
+
+`build_weights`, the registry and streaming path and the reference the
+CLI kernel is tested against, makes point location a join between
+raster centroids and the given triangles:
 
 1. key both sides by a spatial bin: cells by floor(cx/bin), floor(cy/bin);
    triangles exploded to every bin their bbox overlaps (sequence+explode);
@@ -24,12 +28,30 @@ interpolator per timestep, run/adcircTime2cogs.py:199 — hoisting this
 is our biggest structural win, SURVEY P6). Cells absent from `weights`
 are outside the mesh domain: the reference's ones-interpolation mask
 (run/adcircTime2cogs.py:178-185) falls out as a left-anti join.
+
+`build_band_weights`, the CLI's form, needs no join: on a regular
+raster the pixel centres inside a triangle's bbox are a closed-form row
+and column range. The raster rows are cut into bands and one map-only
+Spark stage runs one task per band (`spark.range(bands).mapInArrow`).
+Each task explodes the candidate centres of the triangles that reach
+its band, applies build_weights' arithmetic and pick in numpy
+(`band_weights`), and writes the band's rows as .npy arrays for the COG
+kernel (sinks/cog.write_cogs_from_nodes). No cell spans two bands, so
+the dedupe needs no shuffle, and no weight row passes through the
+driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import uuid
+from dataclasses import dataclass
+
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from adcirctime2cogs_spark.plans.grid import GridSpec
 
 # Sign-test tolerance: points exactly on a shared edge belong to both
 # triangles (deduped below); slight negative slack keeps hull-edge
@@ -153,3 +175,185 @@ def domain_mask(cells: DataFrame, weights: DataFrame) -> DataFrame:
     """Out-of-domain cells = cells with no containing triangle
     (reference ones-mask, run/adcircTime2cogs.py:178-185 → anti-join)."""
     return cells.join(weights.select("cell_id"), "cell_id", "left_anti")
+
+
+# The CLI's weights: raster rows cut into bands, one Spark task per
+# band. A band holds at most BAND_CELLS raster cells (unless one raster
+# row is longer), and a task explodes at most about that many candidate
+# pixels at a time, which bounds its memory at any mesh size.
+BAND_CELLS = 1 << 21
+# per-band arrays: band-local cell index (row-major, ascending), the 3
+# vertex node ids and the 3 barycentric weights of each in-domain cell
+BAND_ARRAYS = ("cell", "n0", "n1", "n2", "w0", "w1", "w2")
+# the triangles, sorted by elem_id: vertex node ids and coordinates
+TRIANGLE_ARRAYS = ("tri_n", "tri_x", "tri_y")
+
+
+def triangle_arrays(
+    node_id: np.ndarray, lon: np.ndarray, lat: np.ndarray,
+    elements: np.ndarray,
+) -> dict[str, np.ndarray]:
+    """triangles_with_coords on driver-side arrays (sources/mesh.
+    read_mesh_arrays): each element's 3 vertex ids and coordinates as
+    (T, 3) arrays, rows sorted by elem_id. An element with a vertex id
+    that mesh_nodes lacks is dropped, as the inner joins drop it."""
+    order = np.argsort(node_id, kind="stable")
+    ids = node_id[order]
+    verts = elements[:, 1:4]
+    pos = np.searchsorted(ids, verts)
+    found = pos < len(ids)
+    found[found] = ids[pos[found]] == verts[found]
+    keep = found.all(axis=1)
+    by_elem = np.argsort(elements[keep, 0], kind="stable")
+    idx = order[pos[keep][by_elem]]
+    return {"tri_n": verts[keep][by_elem], "tri_x": lon[idx],
+            "tri_y": lat[idx]}
+
+
+def band_weights(
+    tri_n: np.ndarray, tri_x: np.ndarray, tri_y: np.ndarray,
+    spec: GridSpec, r0: int, r1: int,
+) -> dict[str, np.ndarray]:
+    """build_weights for raster rows r0..r1-1, in numpy, with the same
+    float expressions in the same order: the pixel centres of
+    raster_cells, det, w0, w1 and w2 = 1 - w0 - w1 of build_weights,
+    its det != 0 drop, its -EPS test and its min-elem_id pick (the
+    triangles come sorted by elem_id, so the first match of a cell in a
+    stable sort by cell is that pick).
+
+    A triangle's candidates are the pixel centres in its bbox widened
+    by one pixel on each side, so the -EPS slack and the rounding of
+    the range bounds cannot lose a match. Returns BAND_ARRAYS; `cell`
+    is (row - r0) * ncols + col, ascending."""
+    ncols = spec.nx - 1
+    res = spec.res
+    rlo = np.maximum(np.ceil((spec.ul_lat - tri_y.max(1)) / res - 0.5) - 1, r0)
+    rhi = np.minimum(np.floor((spec.ul_lat - tri_y.min(1)) / res - 0.5) + 1,
+                     r1 - 1)
+    hit = np.flatnonzero(rhi >= rlo)  # the triangles that reach the band
+    x, y = tri_x[hit], tri_y[hit]
+    clo = np.maximum(np.ceil((x.min(1) - spec.ul_lon) / res - 0.5) - 1, 0)
+    chi = np.minimum(np.floor((x.max(1) - spec.ul_lon) / res - 0.5) + 1,
+                     ncols - 1)
+    x0, x1, x2 = x.T
+    y0, y1, y2 = y.T
+    det = (y1 - y2) * (x0 - x2) + (x2 - x1) * (y0 - y2)
+    # degenerate triangles (det == 0) go before the division, as in
+    # build_weights
+    keep = np.flatnonzero((chi >= clo) & (det != 0))
+    hit = hit[keep]
+    x0, x1, x2, y0, y1, y2, det = (
+        a[keep] for a in (x0, x1, x2, y0, y1, y2, det))
+    a0, b0 = y1 - y2, x2 - x1
+    a1, b1 = y2 - y0, x0 - x2
+    rlo = rlo[hit].astype(np.int64)
+    clo = clo[keep].astype(np.int64)
+    nc = chi[keep].astype(np.int64) - clo + 1
+    count = (rhi[hit].astype(np.int64) - rlo + 1) * nc
+
+    # explode the candidates a chunk of triangles at a time, so a task
+    # holds about BAND_CELLS candidates however many triangles it has
+    cuts = np.searchsorted(np.cumsum(count),
+                           np.arange(BAND_CELLS, count.sum(), BAND_CELLS),
+                           "right")
+    parts = []
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(count)]):
+        k = count[lo:hi]
+        t = np.repeat(np.arange(lo, hi), k)
+        j = np.arange(len(t)) - np.repeat(np.cumsum(k) - k, k)
+        row = rlo[t] + j // nc[t]
+        col = clo[t] + j % nc[t]
+        cx = spec.ul_lon + (col + 0.5) * res
+        cy = spec.ul_lat - (row + 0.5) * res
+        w0 = (a0[t] * (cx - x2[t]) + b0[t] * (cy - y2[t])) / det[t]
+        w1 = (a1[t] * (cx - x2[t]) + b1[t] * (cy - y2[t])) / det[t]
+        w2 = 1 - w0 - w1
+        ok = (w0 >= -EPS) & (w1 >= -EPS) & (w2 >= -EPS)
+        parts.append(((row[ok] - r0) * ncols + col[ok], t[ok],
+                      w0[ok], w1[ok], w2[ok]))
+    cell, t, w0, w1, w2 = (np.concatenate(c) for c in zip(*parts))
+    order = np.argsort(cell, kind="stable")
+    first = np.ones(len(order), bool)
+    first[1:] = np.diff(cell[order]) != 0
+    pick = order[first]
+    n = tri_n[hit[t[pick]]]
+    return {"cell": cell[pick], "n0": n[:, 0], "n1": n[:, 1], "n2": n[:, 2],
+            "w0": w0[pick], "w1": w1[pick], "w2": w2[pick]}
+
+
+@dataclass(frozen=True)
+class WeightBands:
+    """The CLI's weights on disk: `count` bands of `rows` raster rows
+    each (the last may be shorter), BAND_ARRAYS per band under `dir`,
+    and the node-id bound of the triangles (largest vertex id + 1)."""
+
+    dir: str
+    rows: int
+    count: int
+    n_nodes: int
+
+    def path(self, band: int, name: str) -> str:
+        return os.path.join(self.dir, f"band{band:05d}.{name}.npy")
+
+    def load(self, band: int) -> dict[str, np.ndarray]:
+        """One band's arrays, memory-mapped: every Python worker on a
+        machine shares one page-cached copy."""
+        return {name: np.load(self.path(band, name), mmap_mode="r")
+                for name in BAND_ARRAYS}
+
+
+def _save_atomic(path: str, arr: np.ndarray) -> None:
+    """np.save to a temp name that no *.npy glob matches, then
+    os.replace into place (the COG writers' rule): a retried or
+    speculative task replaces a finished file and never leaves a
+    partial one under the final name."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "wb") as fh:
+        np.save(fh, arr)
+    os.replace(tmp, path)
+
+
+def write_band(bands: WeightBands, spec: GridSpec, band: int) -> None:
+    """Executor-side: rasterize one band against the triangle arrays
+    under bands.dir and write its BAND_ARRAYS."""
+    tris = {name: np.load(os.path.join(bands.dir, f"{name}.npy"),
+                          mmap_mode="r")
+            for name in TRIANGLE_ARRAYS}
+    r0 = band * bands.rows
+    arrays = band_weights(**tris, spec=spec, r0=r0,
+                          r1=min(r0 + bands.rows, spec.ny - 1))
+    for name in BAND_ARRAYS:
+        _save_atomic(bands.path(band, name), arrays[name])
+
+
+def build_band_weights(
+    spark: SparkSession, tris: dict[str, np.ndarray], spec: GridSpec,
+    weights_dir: str,
+) -> WeightBands:
+    """The CLI's weights table as per-band arrays under weights_dir, in
+    one map-only Spark stage: `spark.range(bands)`, one task per band,
+    each running band_weights. No join, no shuffle, and no row goes
+    through task results. There are at least as many bands as cores,
+    and a band holds at most BAND_CELLS cells (unless one raster row
+    is longer). The triangle arrays (triangle_arrays) are written once
+    under weights_dir for the tasks to read, so weights_dir rests on
+    the same shared-storage assumption as the COG output dir."""
+    nrows, ncols = spec.ny - 1, spec.nx - 1
+    per_core = -(-nrows // spark.sparkContext.defaultParallelism)
+    rows = max(1, min(per_core, BAND_CELLS // ncols))
+    n_nodes = int(tris["tri_n"].max()) + 1 if tris["tri_n"].size else 0
+    bands = WeightBands(weights_dir, rows, -(-nrows // rows), n_nodes)
+    os.makedirs(weights_dir, exist_ok=True)
+    for name in TRIANGLE_ARRAYS:
+        np.save(os.path.join(weights_dir, f"{name}.npy"), tris[name])
+
+    def run(batches):
+        for batch in batches:
+            for band in batch.column(0).to_pylist():
+                write_band(bands, spec, band)
+            yield batch
+
+    spark.range(0, bands.count, 1, bands.count).mapInArrow(
+        run, "id long"
+    ).collect()
+    return bands

@@ -8,9 +8,10 @@ and writes its own file — embarrassingly parallel, and GDAL never sees
 a shared file (SURVEY §7 "what's hard"). Two entry points:
 
 - `write_cogs_from_nodes` (the CLI): the groupBy ships each timestep's
-  NODE values, and the task regrids them itself against the weights
-  arrays that `save_weights` wrote once — a gather, a dot with the
-  barycentric weights and a scatter into the raster;
+  NODE values, and the task regrids them itself against the per-band
+  weight arrays that plans/weights.build_band_weights wrote once — per
+  band a gather, a dot with the barycentric weights and a scatter into
+  the raster;
 - `write_cogs`: the groupBy ships an already regridded long table
   (ts, grid_row, grid_col, value) and the task pivots it (the
   streaming job, whose watermarked aggregation needs that table).
@@ -23,9 +24,7 @@ injectable for custom drivers.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 from collections.abc import Callable
 
 import numpy as np
@@ -34,12 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans.grid import GridSpec
+from adcirctime2cogs_spark.plans.weights import WeightBands
 
 # the reference's filename timestamp format (run/adcircTime2cogs.py:192)
 TS_FMT = "%Y%m%dT%H%M%SZ"
 MANIFEST_SCHEMA = "ts string, path string, n_cells long"
-# the weights table as cell-ordered arrays, one .npy file each
-WEIGHT_ARRAYS = ("cell", "n0", "n1", "n2", "w0", "w1", "w2")
 
 
 def _geotransform(spec: GridSpec) -> list[float]:
@@ -166,62 +164,17 @@ def write_cogs(
     )
 
 
-def save_weights(weights: DataFrame, weights_dir: str) -> int:
-    """Write the weights table (plans/weights.build_weights) once as
-    cell-ordered .npy arrays under `weights_dir`: flat cell index, the 3
-    vertex node ids and the 3 barycentric weights. Returns the node-id
-    bound (largest referenced node id + 1).
-
-    Spark writes the table as parquet under weights_dir, so no row goes
-    through task results to the driver; the driver then builds one .npy
-    at a time from those files, holding one column plus the cell sort
-    order. Tasks of `write_cogs_from_nodes` open the arrays
-    memory-mapped, so every Python worker on a machine shares one
-    page-cached copy (a broadcast would unpickle one copy per worker).
-    weights_dir rests on the same shared-storage assumption as the COG
-    output dir."""
-    import pyarrow.parquet as pq
-
-    pq_dir = os.path.join(weights_dir, "parquet")
-    weights.select(
-        F.col("cell_id").alias("cell"), "n0", "n1", "n2", "w0", "w1", "w2"
-    ).write.parquet(pq_dir)
-    parts = sorted(glob.glob(os.path.join(pq_dir, "*.parquet")))
-
-    def column(name: str) -> np.ndarray:
-        return pq.read_table(parts, columns=[name]).column(name).to_numpy()
-
-    order = np.argsort(column("cell"))
-    n_nodes = 0
-    for name in WEIGHT_ARRAYS:
-        col = column(name)
-        if name in ("n0", "n1", "n2") and len(col):
-            n_nodes = max(n_nodes, int(col.max()) + 1)
-        out = np.lib.format.open_memmap(
-            os.path.join(weights_dir, f"{name}.npy"), mode="w+",
-            dtype=col.dtype, shape=col.shape,
-        )
-        # mode="clip" gathers straight into the file; "raise" would
-        # buffer a second full copy of the column first
-        np.take(col, order, out=out, mode="clip")
-        out.flush()
-        del col, out  # one column in memory at a time
-    shutil.rmtree(pq_dir)
-    return n_nodes
-
-
 def write_cogs_from_nodes(
     timeseries: DataFrame,
-    weights_dir: str,
-    n_nodes: int,
+    bands: WeightBands,
     spec: GridSpec,
     out_dir: str,
     prefix: str,
 ) -> DataFrame:
     """Regrid and write one COG per distinct ts straight from the node
-    values (ts, node_id, value), against the arrays `save_weights`
-    wrote to `weights_dir`. Returns a manifest DataFrame (ts, path,
-    n_cells) — an action the caller triggers.
+    values (ts, node_id, value), against the per-band weight arrays of
+    plans/weights.build_band_weights. Returns a manifest DataFrame (ts,
+    path, n_cells) — an action the caller triggers.
 
     The groupBy ships N node values per timestep. Null node ids and
     null values are dropped before it, as the join and count(value)
@@ -239,11 +192,7 @@ def write_cogs_from_nodes(
     w = default_writer()
 
     def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        wt = {
-            name: np.load(os.path.join(weights_dir, f"{name}.npy"),
-                          mmap_mode="r")
-            for name in WEIGHT_ARRAYS
-        }
+        n_nodes = bands.n_nodes
         node = pdf["node_id"].to_numpy(dtype="int64")
         val = pdf["value"].to_numpy(dtype="float64")
         keep = (node >= 0) & (node < n_nodes)
@@ -253,14 +202,19 @@ def write_cogs_from_nodes(
         cnt = np.minimum(np.bincount(node, minlength=n_nodes), 4
                          ).astype(np.uint8)
         tot = np.bincount(node, weights=val, minlength=n_nodes)
-        value = wt["w0"] * tot[wt["n0"]]
-        value += wt["w1"] * tot[wt["n1"]]
-        value += wt["w2"] * tot[wt["n2"]]
-        value[cnt[wt["n0"]] + cnt[wt["n1"]] + cnt[wt["n2"]] != 3] = np.nan
         arr = np.full(nrows * ncols, np.nan, dtype="float64")
-        arr[wt["cell"]] = value
+        n_cells = 0
+        for b in range(bands.count):
+            wt = bands.load(b)
+            value = wt["w0"] * tot[wt["n0"]]
+            value += wt["w1"] * tot[wt["n1"]]
+            value += wt["w2"] * tot[wt["n2"]]
+            value[cnt[wt["n0"]] + cnt[wt["n1"]] + cnt[wt["n2"]] != 3] = np.nan
+            # band-local cell index: scatter through a view of the band
+            arr[b * bands.rows * ncols:][wt["cell"]] = value
+            n_cells += len(value)
         return _write_raster(out_dir, prefix, pdf["ts"].iloc[0],
-                             arr.reshape(nrows, ncols), len(value),
+                             arr.reshape(nrows, ncols), n_cells,
                              transform, "EPSG:4326", w)
 
     return timeseries.where(

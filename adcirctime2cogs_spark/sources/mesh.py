@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -66,6 +67,40 @@ def load_mesh(
         os.path.join(base_dir, "mesh_elements.parquet")
     )
     return nodes, elements
+
+
+def read_mesh_arrays(
+    base_dir: str,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The same two tables as driver-side numpy arrays, cast to the
+    schema types above: (node_id, lon, lat, elements), elements being
+    an (E, 4) int64 array of (elem_id, n0, n1, n2). Rows with a null in
+    these columns are dropped.
+
+    Raises ValueError naming the id when a node_id occurs twice: a join
+    on node_id would silently give every triangle that uses it one row
+    per copy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def read(name: str, schema: pa.Schema) -> pa.Table:
+        return pq.read_table(
+            os.path.join(base_dir, name), columns=schema.names
+        ).cast(schema).drop_null()
+
+    nodes = read("mesh_nodes.parquet", pa.schema(
+        [("node_id", pa.int64()), ("lon", pa.float64()),
+         ("lat", pa.float64())]))
+    elements = read("mesh_elements.parquet", pa.schema(
+        [(c, pa.int64()) for c in ("elem_id", "n0", "n1", "n2")]))
+    node_id, lon, lat = (nodes.column(c).to_numpy() for c in nodes.column_names)
+    ids = np.sort(node_id)
+    dup = ids[1:][ids[1:] == ids[:-1]]
+    if dup.size:
+        raise ValueError(f"mesh_nodes has duplicate node_id {dup[0]}")
+    elems = np.stack([elements.column(c).to_numpy()
+                      for c in elements.column_names], axis=1)
+    return node_id, lon, lat, elems
 
 
 def load_timeseries(

@@ -108,15 +108,20 @@ def _structured_mesh(spark, n: int):
 
 
 def test_random_triangles_match_numpy_bruteforce(spark):
-    """Randomized equivalence: build_weights against a dense numpy
-    brute force applying the IDENTICAL rules (same barycentric
-    formulas, same -EPS slack, same min-elem_id dedupe) over a random
-    triangle soup — catches any drift in the bin-join candidate
-    generation (a triangle missed by binning shows up as a set
-    mismatch)."""
+    """Randomized equivalence: build_weights, and the CLI's row-band
+    kernel band_weights, against a dense numpy brute force applying the
+    IDENTICAL rules (same barycentric formulas, same -EPS slack, same
+    min-elem_id dedupe) over a random triangle soup — catches any drift
+    in the bin-join or bbox candidate generation (a triangle missed
+    shows up as a set mismatch)."""
     import numpy as np
 
-    from adcirctime2cogs_spark.plans.weights import EPS, build_weights
+    from adcirctime2cogs_spark.plans.weights import (
+        EPS,
+        band_weights,
+        build_weights,
+        triangle_arrays,
+    )
 
     rng = np.random.default_rng(20240813)
     n_nodes, n_tris = 80, 150
@@ -157,11 +162,29 @@ def test_random_triangles_match_numpy_bruteforce(spark):
             e = int(hits.min())  # min elem_id dedupe, same as the engine
             want[r.cell_id] = (e, w0[e], w1[e], w2[e])
 
-    assert set(got) == set(want)
+    # the band kernel over 4-row bands; elem_id shows through n0..n2
+    tri = triangle_arrays(
+        np.arange(n_nodes), nx, ny_,
+        np.column_stack([np.arange(n_tris), tris]).astype(np.int64),
+    )
+    band = {}
+    for r0 in range(0, 14, 4):
+        b = band_weights(**tri, spec=spec, r0=r0, r1=min(r0 + 4, 14))
+        for k, c in enumerate(b["cell"]):
+            band[r0 * 14 + int(c)] = (
+                (b["n0"][k], b["n1"][k], b["n2"][k]),
+                b["w0"][k], b["w1"][k], b["w2"][k],
+            )
+
+    for engine in (got, band):
+        assert set(engine) == set(want)
     for cid, (e, w0, w1, w2) in want.items():
         ge, g0, g1, g2 = got[cid]
         assert ge == e, (cid, ge, e)
         assert abs(g0 - w0) < 1e-12 and abs(g1 - w1) < 1e-12 and abs(g2 - w2) < 1e-12
+        bn, b0, b1, b2 = band[cid]
+        assert bn == tuple(tris[e]), (cid, bn, tris[e])
+        assert (b0, b1, b2) == (w0, w1, w2), cid
 
 
 def test_structured_mesh_linear_property(spark):

@@ -39,7 +39,7 @@ def test_pipeline_end_to_end(spark, tmp_path):
     _write_input(spark, base)
 
     result = run_pipeline(
-        spark, base, out, final, variable="zeta", res=0.1, bin_size_cells=3.0
+        spark, base, out, final, variable="zeta", res=0.1
     )
     assert result.n_timesteps == 3
     assert result.archive.endswith(".zip")
@@ -76,7 +76,6 @@ def test_pipeline_s3_upload_with_fake_client(spark, tmp_path):
         str(tmp_path / "final"),
         variable="zeta",
         res=0.1,
-        bin_size_cells=3.0,
         s3_bucket="cog-artifacts",
         s3_client=client,
     )
@@ -155,7 +154,7 @@ def test_pipeline_max_variable_end_to_end(spark, tmp_path):
         base + "/node_maxes.parquet"
     )
     result = run_pipeline(
-        spark, base, out, final, variable="maxele", res=0.1, bin_size_cells=3.0
+        spark, base, out, final, variable="maxele", res=0.1
     )
     assert result.n_timesteps == 1
     files = os.listdir(result.cog_dir)
@@ -327,3 +326,62 @@ def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):
     os.remove(tmp_path / residue[0])
     cog._fallback_writer(fname, arr, tf, "EPSG:4326")
     assert os.listdir(tmp_path) == ["raster_000.tif"]
+
+
+def _plans_of_jobs(spark, job_ids):
+    """Physical plans of the SQL executions that ran any of job_ids."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in job_ids)
+    ]
+
+
+def test_warm_cli_job_builds_weights_in_one_map_only_stage(
+    spark, tmp_path, monkeypatch
+):
+    """A warm CLI job on the micromesh .nc builds its weights in one
+    Spark job of one stage, with no exchange and no join, and runs at
+    most 3 Spark jobs in all (the weights, then the COG kernel's
+    shuffle and result stages)."""
+    from adcirctime2cogs_spark import pipeline
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_micromesh_nc(str(in_dir / "fort.63.nc"))
+    sc = spark.sparkContext
+    build = pipeline.build_band_weights
+
+    def in_group(*args, **kwargs):
+        sc.setJobGroup("weights", "band weights")
+        try:
+            return build(*args, **kwargs)
+        finally:
+            sc.setJobGroup(group, "CLI job")
+
+    monkeypatch.setattr(pipeline, "build_band_weights", in_group)
+    try:
+        for group in ("cold", "warm"):
+            sc.setJobGroup(group, "CLI job")
+            assert pipeline.main([
+                "--input-dir", str(in_dir),
+                "--output-dir", str(tmp_path / group / "o"),
+                "--final-dir", str(tmp_path / group / "f"),
+                "--input-file", "fort.63.nc",
+                "--input-variable", "zeta",
+                "--res", "0.4",
+            ]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    weights_jobs = st.getJobIdsForGroup("weights")
+    assert len(weights_jobs) == 2  # one per CLI job
+    warm = max(weights_jobs)
+    assert len(st.getJobInfo(warm).stageIds) == 1
+    plans = _plans_of_jobs(spark, [warm])
+    assert len(plans) == 1
+    assert "Exchange" not in plans[0] and "Join" not in plans[0]
+    assert "MapInArrow" in plans[0]
+    assert 1 + len(st.getJobIdsForGroup("warm")) <= 3
