@@ -21,8 +21,8 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
   task of one `spark.range(bands).mapInArrow` stage rasterizes one band
   of raster rows in closed form and writes that band's weight arrays
   (plans/weights.build_band_weights). No join, no shuffle, no parquet
-  round trip; the Spark SQL bin join (plans/weights.build_weights)
-  stays for the registry and streaming paths;
+  round trip; the registry and streaming paths run the same kernel as
+  a DataFrame (plans/weights.weights_table);
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
@@ -91,13 +91,13 @@ def run_pipeline(
     timings: dict[str, float] = {}
     t0 = time.time()
     node_id, lon, lat, elements = read_mesh_arrays(input_dir)
+    tris = triangle_arrays(node_id, lon, lat, elements)
     if timeseries is None:
         timeseries = load_timeseries(spark, input_dir, variable)
 
     bbox = {"lon_min": float(lon.min()), "lon_max": float(lon.max()),  # O7
             "lat_min": float(lat.min()), "lat_max": float(lat.max())}
     spec = grid_spec_from_bbox(bbox, res)  # D4
-    tris = triangle_arrays(node_id, lon, lat, elements)
     timings["load_bbox"] = round(time.time() - t0, 2)
     t0 = time.time()
 

@@ -16,7 +16,7 @@ from adcirctime2cogs_spark.functions.numeric import r4
 
 from adcirctime2cogs_spark.plans import micromesh as mm
 from adcirctime2cogs_spark.plans.regrid import regrid
-from adcirctime2cogs_spark.plans.weights import build_weights, domain_mask
+from adcirctime2cogs_spark.plans.weights import domain_mask, weights_table
 
 QUERIES = {}
 ORACLES = {}
@@ -66,33 +66,13 @@ weights AS (
 """
 
 
-# applicationId -> the one persisted weights DataFrame: the four
-# micromesh queries share ONE cached build EXPLICITLY instead of each
-# issuing a fresh persist() and relying on Spark's CacheManager to
-# deduplicate byte-identical plans — repeat constructions used to
-# stack never-unpersisted cache entries (review r10)
-_WEIGHTS_MEMO: dict = {}
-
-
 def _weights_df(spark: SparkSession) -> DataFrame:
-    # persisted: the static compute-once table (SURVEY P6); repeat
-    # invocations of the micromesh queries reuse one weights build
-    key = spark.sparkContext.applicationId
-    hit = _WEIGHTS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    ).persist()
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    evict_foreign_app_entries(_WEIGHTS_MEMO, key)
-    _WEIGHTS_MEMO[key] = w
-    return w
+    return weights_table(spark, mm.triangles(), mm.GRID)
 
 
 def micromesh_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static barycentric weights table (point-in-triangle bin join)."""
+    """Static barycentric weights table (the row-band kernel, one
+    map-only stage)."""
     w = _weights_df(spark)
     return w.select(
         "cell_id", "grid_row", "grid_col", "elem_id", "n0", "n1", "n2",

@@ -18,9 +18,11 @@ Timestep fields:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from adcirctime2cogs_spark.plans.grid import GridSpec, raster_cells
+from adcirctime2cogs_spark.plans.weights import triangle_arrays
 
 NODES = [
     (0, 0.0, 0.0),
@@ -50,7 +52,13 @@ TIMESERIES = [
 ]
 
 GRID = GridSpec(ul_lon=0.0, ul_lat=2.0, res=0.4, nx=6, ny=6)  # 5x5 centroids
-BIN_SIZE = 0.5
+
+
+def triangles() -> dict[str, np.ndarray]:
+    """The fixture's triangle_arrays, built on the driver (no Spark
+    job)."""
+    node_id, lon, lat = (np.array(c) for c in zip(*NODES))
+    return triangle_arrays(node_id, lon, lat, np.array(ELEMENTS))
 
 
 # Fixture frames are built with SQL VALUES (JVM LocalRelation), NOT

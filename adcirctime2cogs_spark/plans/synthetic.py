@@ -1,6 +1,5 @@
-"""Synthetic structured-mesh generator — entirely JVM-side
-(spark.range + column arithmetic, no driver-side data), used to
-exercise the regrid pipeline at arbitrary scale.
+"""Synthetic structured-mesh generator, used to exercise the regrid
+pipeline at arbitrary scale.
 
 An n x n node grid over [0,1]^2, each quad split into two triangles
 (2*(n-1)^2 elements), T hourly timesteps of a per-timestep linear field
@@ -9,16 +8,23 @@ exactly, so the regrid output is analytically checkable at ANY scale —
 the property that lets the same generator back both the DuckDB oracle
 (small n) and the bench workload (large n).
 
+The node values are generated in Spark (spark.range + column
+arithmetic, never collected); the mesh is built in numpy on the driver
+(synth_mesh), with the same closed form, for the weights kernel
+(plans/weights.weights_table).
+
 This is the HSOFS-shaped workload of the reference (~1.8M nodes,
 ~3.6M elements, run/adcircTime2cogs.py:166-168) scaled by one knob.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adcirctime2cogs_spark.plans.grid import GridSpec, raster_cells
+from adcirctime2cogs_spark.plans.grid import GridSpec
+from adcirctime2cogs_spark.plans.weights import triangle_arrays, weights_table
 
 
 def synth_nodes(spark: SparkSession, n: int) -> DataFrame:
@@ -30,24 +36,25 @@ def synth_nodes(spark: SparkSession, n: int) -> DataFrame:
     )
 
 
-def synth_elements(spark: SparkSession, n: int) -> DataFrame:
-    """2 triangles per quad: (a, b, d) and (a, d, c) with
-    a = i*n+j, b = a+1, c = a+n, d = c+1."""
-    quads = spark.range((n - 1) * (n - 1)).select(
-        F.col("id").alias("q"),
-        F.expr(f"id div {n - 1}").alias("i"),
-        (F.col("id") % (n - 1)).alias("j"),
-    )
-    return quads.selectExpr(
-        "q",
-        f"i * {n} + j AS a",
-        f"i * {n} + j + 1 AS b",
-        f"(i + 1) * {n} + j AS c",
-        f"(i + 1) * {n} + j + 1 AS d",
-    ).selectExpr(
-        "stack(2, 2 * q,     a, b, d,"
-        "         2 * q + 1, a, d, c) AS (elem_id, n0, n1, n2)"
-    )
+def synth_mesh(
+    n: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """synth_nodes' n^2 nodes as driver arrays (node_id, lon, lat,
+    elements), the shape of sources/mesh.read_mesh_arrays; elements is
+    (E, 4) int64 (elem_id, n0, n1, n2), 2 triangles per quad q:
+    (2q, a, b, d) and (2q + 1, a, d, c) with a = i*n+j, b = a+1,
+    c = a+n, d = c+1."""
+    node_id = np.arange(n * n, dtype=np.int64)
+    lon = (node_id % n).astype(np.float64) / (n - 1)
+    lat = (node_id // n).astype(np.float64) / (n - 1)
+    q = np.arange((n - 1) * (n - 1), dtype=np.int64)
+    a = q // (n - 1) * n + q % (n - 1)
+    b, c = a + 1, a + n
+    d = c + 1
+    elements = np.empty((2 * len(q), 4), np.int64)
+    elements[0::2] = np.stack([2 * q, a, b, d], axis=1)
+    elements[1::2] = np.stack([2 * q + 1, a, d, c], axis=1)
+    return node_id, lon, lat, elements
 
 
 def synth_timeseries(spark: SparkSession, n: int, n_ts: int) -> DataFrame:
@@ -68,43 +75,21 @@ def synth_grid(grid_n: int) -> GridSpec:
     )
 
 
-# (applicationId, n, grid_n, bin_size) -> the one persisted weights
-# build for those parameters — same explicit-sharing stance as
-# domain_queries._weights_df (review r10: each invocation persisted a
-# fresh copy and relied on CacheManager plan-matching for reuse)
-_W_MEMO: dict = {}
-
-
-def _synth_weights(spark: SparkSession, n: int, grid_n: int,
-                   bin_size: float) -> DataFrame:
-    from adcirctime2cogs_spark.plans.weights import build_weights
-
-    key = (spark.sparkContext.applicationId, n, grid_n, bin_size)
-    hit = _W_MEMO.get(key)
-    if hit is not None:
-        return hit
-    cells = raster_cells(spark, synth_grid(grid_n))
-    w = build_weights(
-        cells, synth_nodes(spark, n), synth_elements(spark, n), bin_size
-    ).persist()
-    from adcirctime2cogs_spark.tables import evict_foreign_app_entries
-
-    evict_foreign_app_entries(_W_MEMO, key[0])
-    _W_MEMO[key] = w
-    return w
+def _synth_weights(spark: SparkSession, n: int, grid_n: int) -> DataFrame:
+    return weights_table(
+        spark, triangle_arrays(*synth_mesh(n)), synth_grid(grid_n)
+    )
 
 
 def synth_regrid(
-    spark: SparkSession, n: int, grid_n: int, n_ts: int, bin_size: float
+    spark: SparkSession, n: int, grid_n: int, n_ts: int
 ) -> DataFrame:
-    """End-to-end: generate mesh + field, build weights once, regrid all
+    """End-to-end: generate mesh + field, build weights, regrid all
     timesteps (the full SURVEY O11+O13-O17 pipeline at parameterized
     scale)."""
     from adcirctime2cogs_spark.plans.regrid import regrid
 
-    # weights are the compute-once static table (SURVEY P6), persisted
-    # once per parameter set via the shared memo
-    w = _synth_weights(spark, n, grid_n, bin_size)
+    w = _synth_weights(spark, n, grid_n)
     # params are known here: broadcast the node values when the whole
     # timeseries is under ~64 MB packed (16B/row), else shuffle-join
     broadcast_ts = n * n * n_ts * 16 < 64 * 1024 * 1024
@@ -112,14 +97,14 @@ def synth_regrid(
 
 
 def synth_regrid_multi(
-    spark: SparkSession, n: int, grid_n: int, n_ts: int, bin_size: float
+    spark: SparkSession, n: int, grid_n: int, n_ts: int
 ) -> DataFrame:
     """Two linear fields regridded in one pass (regrid_multi): value as
     in synth_timeseries, value2 = -3*lon + 5*lat + 11 + 2*k — both
     analytically checkable at every centroid."""
     from adcirctime2cogs_spark.plans.regrid import regrid_multi
 
-    w = _synth_weights(spark, n, grid_n, bin_size)
+    w = _synth_weights(spark, n, grid_n)
     ts = spark.range(n_ts).select(F.col("id").alias("k"))
     tsv = ts.crossJoin(synth_nodes(spark, n)).select(
         F.concat(F.lit("t"), F.col("k")).alias("ts"),

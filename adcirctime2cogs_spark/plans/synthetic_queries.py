@@ -24,9 +24,9 @@ from adcirctime2cogs_spark.plans.synthetic import synth_grid, synth_regrid
 QUERIES = {}
 ORACLES = {}
 
-# (n_nodes_side, grid_edges, timesteps, bin_size)
-SMALL = (6, 7, 2, 0.3)
-BENCH = (100, 200, 12, 0.02)
+# (n_nodes_side, grid_edges, timesteps)
+SMALL = (6, 7, 2)
+BENCH = (100, 200, 12)
 
 
 def _analytic_oracle(n: int, grid_n: int, n_ts: int) -> str:
@@ -45,10 +45,8 @@ def _analytic_oracle(n: int, grid_n: int, n_ts: int) -> str:
 
 
 def _make_query(params):
-    n, grid_n, n_ts, bin_size = params
-
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        out = synth_regrid(spark, n, grid_n, n_ts, bin_size)
+        out = synth_regrid(spark, *params)
         return out.select("ts", "grid_row", "grid_col", r4("value").alias("value"))
 
     return q
@@ -59,7 +57,7 @@ QUERIES["regrid_synthetic"].__doc__ = (
     "Synthetic-mesh regrid, small: 36 nodes / 50 triangles / 6x7 grid "
     "x 2 ts, verified against the analytic linear field."
 )
-ORACLES["regrid_synthetic"] = _analytic_oracle(*SMALL[:3])
+ORACLES["regrid_synthetic"] = _analytic_oracle(*SMALL)
 
 QUERIES["regrid_synthetic_bench"] = _make_query(BENCH)
 QUERIES["regrid_synthetic_bench"].__doc__ = (
@@ -68,7 +66,7 @@ QUERIES["regrid_synthetic_bench"].__doc__ = (
     "oracle — the HSOFS-shaped workload of the reference "
     "(run/adcircTime2cogs.py:166-168) scaled to test-box size."
 )
-ORACLES["regrid_synthetic_bench"] = _analytic_oracle(*BENCH[:3])
+ORACLES["regrid_synthetic_bench"] = _analytic_oracle(*BENCH)
 
 
 def _multivar_oracle(n: int, grid_n: int, n_ts: int) -> str:
@@ -90,12 +88,10 @@ def _multivar_oracle(n: int, grid_n: int, n_ts: int) -> str:
 
 
 def _multivar_query(params):
-    n, grid_n, n_ts, bin_size = params
-
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from adcirctime2cogs_spark.plans.synthetic import synth_regrid_multi
 
-        out = synth_regrid_multi(spark, n, grid_n, n_ts, bin_size)
+        out = synth_regrid_multi(spark, *params)
         return out.select(
             "ts",
             "grid_row",
@@ -114,4 +110,4 @@ QUERIES["regrid_multivar"].__doc__ = (
     "costs only an extra pair of aggregates on the same shuffle. Both "
     "fields verified against their analytic linear forms."
 )
-ORACLES["regrid_multivar"] = _multivar_oracle(*SMALL[:3])
+ORACLES["regrid_multivar"] = _multivar_oracle(*SMALL)

@@ -1,25 +1,10 @@
 """Point-in-triangle location + barycentric weights (SURVEY O13-O15 —
-the one genuinely custom operator), in two forms that give the same
-rows: a Spark SQL bin join and the CLI's row-band kernel.
+the one genuinely custom operator).
 
 The reference hides point location inside matplotlib/scipy C
 interpolators rebuilt per run (run/adcircTime2cogs.py:170-183,
 199-200); because the mesh connectivity is *given*
 (run/adcircTime2cogs.py:164-168), no Delaunay/Qhull is needed.
-
-`build_weights`, the registry and streaming path and the reference the
-CLI kernel is tested against, makes point location a join between
-raster centroids and the given triangles:
-
-1. key both sides by a spatial bin: cells by floor(cx/bin), floor(cy/bin);
-   triangles exploded to every bin their bbox overlaps (sequence+explode);
-2. equi-join on (bx, by) — a plain shuffle join Catalyst handles at any
-   scale (no O(cells x triangles) cross join);
-3. filter by the barycentric sign test, compute the 3 weights in column
-   arithmetic (whole-stage codegen, no UDF);
-4. dedupe boundary cells that land in two triangles (min elem_id — the
-   shared-edge value is identical either way, determinism is what
-   matters).
 
 The result is the static `weights(cell_id, grid_row, grid_col, elem_id,
 n0, n1, n2, w0, w1, w2)` table, computed ONCE per mesh+grid and reused
@@ -29,16 +14,28 @@ is our biggest structural win, SURVEY P6). Cells absent from `weights`
 are outside the mesh domain: the reference's ones-interpolation mask
 (run/adcircTime2cogs.py:178-185) falls out as a left-anti join.
 
-`build_band_weights`, the CLI's form, needs no join: on a regular
-raster the pixel centres inside a triangle's bbox are a closed-form row
-and column range. The raster rows are cut into bands and one map-only
-Spark stage runs one task per band (`spark.range(bands).mapInArrow`).
-Each task explodes the candidate centres of the triangles that reach
-its band, applies build_weights' arithmetic and pick in numpy
-(`band_weights`), and writes the band's rows as .npy arrays for the COG
-kernel (sinks/cog.write_cogs_from_nodes). No cell spans two bands, so
-the dedupe needs no shuffle, and no weight row passes through the
-driver.
+One kernel builds it for every caller: on a regular raster the pixel
+centres inside a triangle's bbox are a closed-form row and column
+range. The raster rows are cut into bands (`band_layout`) and one
+map-only Spark stage runs one task per band
+(`spark.range(bands).mapInArrow`). Each task explodes the candidate
+centres of the triangles that reach its band, applies the barycentric
+sign test and the min-elem_id pick in numpy (`band_weights`). No cell
+spans two bands, so the pick needs no shuffle. Two forms share it:
+
+- `weights_table` yields the band's rows as a DataFrame (the registry,
+  synthetic, streaming and scale-leg callers), the triangles riding in
+  the task closure;
+- `build_band_weights`, the CLI's form, writes each band's rows as .npy
+  arrays for the COG kernel (sinks/cog.write_cogs_from_nodes), the
+  triangles memory-mapped from disk, and no weight row passes through
+  the driver.
+
+`build_weights`, a Spark SQL join of raster centroids and triangles on
+a spatial bin, is the reference both forms are tested against row for
+row; no engine path runs it. Boundary cells that land in two triangles
+keep the lowest elem_id in every form: the shared-edge value is
+identical either way, determinism is what matters.
 """
 
 from __future__ import annotations
@@ -177,16 +174,18 @@ def domain_mask(cells: DataFrame, weights: DataFrame) -> DataFrame:
     return cells.join(weights.select("cell_id"), "cell_id", "left_anti")
 
 
-# The CLI's weights: raster rows cut into bands, one Spark task per
-# band. A band holds at most BAND_CELLS raster cells (unless one raster
-# row is longer), and a task explodes at most about that many candidate
-# pixels at a time, which bounds its memory at any mesh size.
+# Raster rows cut into bands, one Spark task per band. A band holds at
+# most BAND_CELLS raster cells (unless one raster row is longer), and a
+# task explodes at most about that many candidate pixels at a time,
+# which bounds its memory at any mesh size.
 BAND_CELLS = 1 << 21
-# per-band arrays: band-local cell index (row-major, ascending), the 3
-# vertex node ids and the 3 barycentric weights of each in-domain cell
+# the CLI's per-band arrays: band-local cell index (row-major,
+# ascending), the 3 vertex node ids and the 3 barycentric weights of
+# each in-domain cell
 BAND_ARRAYS = ("cell", "n0", "n1", "n2", "w0", "w1", "w2")
-# the triangles, sorted by elem_id: vertex node ids and coordinates
-TRIANGLE_ARRAYS = ("tri_n", "tri_x", "tri_y")
+# the triangles, sorted by elem_id: element ids, vertex node ids and
+# coordinates
+TRIANGLE_ARRAYS = ("tri_e", "tri_n", "tri_x", "tri_y")
 
 
 def triangle_arrays(
@@ -194,11 +193,19 @@ def triangle_arrays(
     elements: np.ndarray,
 ) -> dict[str, np.ndarray]:
     """triangles_with_coords on driver-side arrays (sources/mesh.
-    read_mesh_arrays): each element's 3 vertex ids and coordinates as
-    (T, 3) arrays, rows sorted by elem_id. An element with a vertex id
-    that mesh_nodes lacks is dropped, as the inner joins drop it."""
+    read_mesh_arrays): each element's id, and its 3 vertex ids and
+    coordinates as (T, 3) arrays, rows sorted by elem_id. An element
+    with a vertex id that mesh_nodes lacks is dropped, as the inner
+    joins drop it.
+
+    Raises ValueError naming the id when a node_id occurs twice: a join
+    on node_id would silently give every triangle that uses it one row
+    per copy."""
     order = np.argsort(node_id, kind="stable")
     ids = node_id[order]
+    dup = ids[1:][ids[1:] == ids[:-1]]
+    if dup.size:
+        raise ValueError(f"mesh_nodes has duplicate node_id {dup[0]}")
     verts = elements[:, 1:4]
     pos = np.searchsorted(ids, verts)
     found = pos < len(ids)
@@ -206,13 +213,14 @@ def triangle_arrays(
     keep = found.all(axis=1)
     by_elem = np.argsort(elements[keep, 0], kind="stable")
     idx = order[pos[keep][by_elem]]
-    return {"tri_n": verts[keep][by_elem], "tri_x": lon[idx],
+    return {"tri_e": elements[keep, 0][by_elem],
+            "tri_n": verts[keep][by_elem], "tri_x": lon[idx],
             "tri_y": lat[idx]}
 
 
 def band_weights(
-    tri_n: np.ndarray, tri_x: np.ndarray, tri_y: np.ndarray,
-    spec: GridSpec, r0: int, r1: int,
+    tri_e: np.ndarray, tri_n: np.ndarray, tri_x: np.ndarray,
+    tri_y: np.ndarray, spec: GridSpec, r0: int, r1: int,
 ) -> dict[str, np.ndarray]:
     """build_weights for raster rows r0..r1-1, in numpy, with the same
     float expressions in the same order: the pixel centres of
@@ -223,8 +231,8 @@ def band_weights(
 
     A triangle's candidates are the pixel centres in its bbox widened
     by one pixel on each side, so the -EPS slack and the rounding of
-    the range bounds cannot lose a match. Returns BAND_ARRAYS; `cell`
-    is (row - r0) * ncols + col, ascending."""
+    the range bounds cannot lose a match. Returns BAND_ARRAYS and the
+    winning `elem_id`; `cell` is (row - r0) * ncols + col, ascending."""
     ncols = spec.nx - 1
     res = spec.res
     rlo = np.maximum(np.ceil((spec.ul_lat - tri_y.max(1)) / res - 0.5) - 1, r0)
@@ -276,9 +284,55 @@ def band_weights(
     first = np.ones(len(order), bool)
     first[1:] = np.diff(cell[order]) != 0
     pick = order[first]
-    n = tri_n[hit[t[pick]]]
-    return {"cell": cell[pick], "n0": n[:, 0], "n1": n[:, 1], "n2": n[:, 2],
+    tri = hit[t[pick]]
+    n = tri_n[tri]
+    return {"cell": cell[pick], "elem_id": tri_e[tri],
+            "n0": n[:, 0], "n1": n[:, 1], "n2": n[:, 2],
             "w0": w0[pick], "w1": w1[pick], "w2": w2[pick]}
+
+
+def band_layout(spark: SparkSession, spec: GridSpec) -> tuple[int, int]:
+    """(rows per band, band count) of spec's raster: at least as many
+    bands as cores, and at most BAND_CELLS cells per band (unless one
+    raster row is longer)."""
+    nrows, ncols = spec.ny - 1, spec.nx - 1
+    per_core = -(-nrows // spark.sparkContext.defaultParallelism)
+    rows = max(1, min(per_core, BAND_CELLS // ncols))
+    return rows, -(-nrows // rows)
+
+
+def weights_table(
+    spark: SparkSession, tris: dict[str, np.ndarray], spec: GridSpec
+) -> DataFrame:
+    """build_weights' rows and schema from one map-only stage,
+    `spark.range(bands)`, each task yielding its band's band_weights.
+    `tris` (triangle_arrays) rides in the task closure: PySpark
+    broadcasts a pickled command over 1 MB on its own. (At HSOFS size
+    that is ~290 MB per Python worker, so the CLI memory-maps its
+    triangles from disk instead: build_band_weights.)"""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    rows, count = band_layout(spark, spec)
+    nrows, ncols = spec.ny - 1, spec.nx - 1
+    schema = pa.schema(  # build_weights' schema
+        [(c, pa.int64()) for c in ("cell_id", "grid_row", "grid_col",
+                                   "elem_id", "n0", "n1", "n2")]
+        + [(c, pa.float64()) for c in ("w0", "w1", "w2")])
+
+    def run(batches):
+        for batch in batches:
+            for band in batch.column(0).to_pylist():
+                r0 = band * rows
+                w = band_weights(**tris, spec=spec, r0=r0,
+                                 r1=min(r0 + rows, nrows))
+                cell = w.pop("cell") + r0 * ncols
+                yield pa.RecordBatch.from_pydict(
+                    {"cell_id": cell, "grid_row": cell // ncols,
+                     "grid_col": cell % ncols, **w}, schema=schema)
+
+    return spark.range(0, count, 1, count).mapInArrow(
+        run, from_arrow_schema(schema))
 
 
 @dataclass(frozen=True)
@@ -331,18 +385,15 @@ def build_band_weights(
     weights_dir: str,
 ) -> WeightBands:
     """The CLI's weights table as per-band arrays under weights_dir, in
-    one map-only Spark stage: `spark.range(bands)`, one task per band,
-    each running band_weights. No join, no shuffle, and no row goes
-    through task results. There are at least as many bands as cores,
-    and a band holds at most BAND_CELLS cells (unless one raster row
-    is longer). The triangle arrays (triangle_arrays) are written once
-    under weights_dir for the tasks to read, so weights_dir rests on
-    the same shared-storage assumption as the COG output dir."""
-    nrows, ncols = spec.ny - 1, spec.nx - 1
-    per_core = -(-nrows // spark.sparkContext.defaultParallelism)
-    rows = max(1, min(per_core, BAND_CELLS // ncols))
+    one map-only Spark stage: `spark.range(bands)`, one task per band
+    (band_layout), each running band_weights. No join, no shuffle, and
+    no row goes through task results. The triangle arrays
+    (triangle_arrays) are written once under weights_dir for the tasks
+    to read, so weights_dir rests on the same shared-storage assumption
+    as the COG output dir."""
+    rows, count = band_layout(spark, spec)
     n_nodes = int(tris["tri_n"].max()) + 1 if tris["tri_n"].size else 0
-    bands = WeightBands(weights_dir, rows, -(-nrows // rows), n_nodes)
+    bands = WeightBands(weights_dir, rows, count, n_nodes)
     os.makedirs(weights_dir, exist_ok=True)
     for name in TRIANGLE_ARRAYS:
         np.save(os.path.join(weights_dir, f"{name}.npy"), tris[name])

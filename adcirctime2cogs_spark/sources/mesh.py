@@ -75,11 +75,8 @@ def read_mesh_arrays(
     """The same two tables as driver-side numpy arrays, cast to the
     schema types above: (node_id, lon, lat, elements), elements being
     an (E, 4) int64 array of (elem_id, n0, n1, n2). Rows with a null in
-    these columns are dropped.
-
-    Raises ValueError naming the id when a node_id occurs twice: a join
-    on node_id would silently give every triangle that uses it one row
-    per copy."""
+    these columns are dropped. plans/weights.triangle_arrays rejects a
+    duplicate node_id."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -94,10 +91,6 @@ def read_mesh_arrays(
     elements = read("mesh_elements.parquet", pa.schema(
         [(c, pa.int64()) for c in ("elem_id", "n0", "n1", "n2")]))
     node_id, lon, lat = (nodes.column(c).to_numpy() for c in nodes.column_names)
-    ids = np.sort(node_id)
-    dup = ids[1:][ids[1:] == ids[:-1]]
-    if dup.size:
-        raise ValueError(f"mesh_nodes has duplicate node_id {dup[0]}")
     elems = np.stack([elements.column(c).to_numpy()
                       for c in elements.column_names], axis=1)
     return node_id, lon, lat, elems

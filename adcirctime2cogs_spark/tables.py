@@ -314,8 +314,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 def evict_foreign_app_entries(memo: dict, app_id: str) -> None:
     """Drop memo entries recorded by OTHER Spark applications. The
-    applicationId-keyed persist/layout memos (_WEIGHTS_MEMO, _W_MEMO,
-    _INC_LAYOUT_MEMO) never hit for a stopped application again, so a
+    applicationId-keyed persist/layout memos (_INC_LAYOUT_MEMO,
+    _KMEANS_MEMO, ...) never hit for a stopped application again, so a
     long-lived driver process that cycles sessions would accumulate
     dead DataFrame references and paths indefinitely (ADVICE r10).
     Callers invoke this on every insert under the single-active-

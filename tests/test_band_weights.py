@@ -1,11 +1,13 @@
-"""The CLI's weights: the row-band rasterization of plans/weights
-(band_weights, build_band_weights) against the Spark SQL bin join
-build_weights, row for row; atomic band writes; and the mesh input
-checks of the parquet-input path of run_pipeline."""
+"""The row-band weights kernel of plans/weights (band_weights, the
+CLI's build_band_weights and the DataFrame form weights_table) against
+the Spark SQL bin join build_weights, row for row; atomic band writes;
+and the mesh input checks."""
 
+import dataclasses
 import os
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -21,6 +23,7 @@ from adcirctime2cogs_spark.plans.weights import (
     build_band_weights,
     build_weights,
     triangle_arrays,
+    weights_table,
     write_band,
 )
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
@@ -52,14 +55,14 @@ def _spec(base, res):
          "lat_min": float(lat.min()), "lat_max": float(lat.max())}, res)
 
 
-def _sql_table(spark, base, spec):
-    """build_weights' rows sorted by cell, as arrays."""
+def _sql_weights(spark, base, spec):
     nodes, elements = load_mesh(spark, base)
-    pdf = build_weights(
-        raster_cells(spark, spec), nodes, elements, bin_size=spec.res * 4.0
-    ).toPandas().sort_values("cell_id")
-    return {"cell": pdf["cell_id"].to_numpy(),
-            **{c: pdf[c].to_numpy() for c in BAND_ARRAYS[1:]}}
+    return build_weights(
+        raster_cells(spark, spec), nodes, elements, bin_size=spec.res * 4.0)
+
+
+def _sorted(df):
+    return df.toPandas().sort_values("cell_id", ignore_index=True)
 
 
 def _concat(parts, rows, ncols):
@@ -68,22 +71,29 @@ def _concat(parts, rows, ncols):
         name: np.concatenate([
             p[name] + b * rows * ncols if name == "cell" else p[name]
             for b, p in enumerate(parts)
-        ]) for name in BAND_ARRAYS
+        ]) for name in parts[0]
     }
 
 
 def _assert_tables_equal(got, want):
-    for name in BAND_ARRAYS:
+    for name in got:
         np.testing.assert_array_equal(got[name], want[name], err_msg=name)
 
 
 def _check_parity(spark, base, res, tmp_path, monkeypatch):
-    """The Spark band stage, and band_weights over 2-row bands with a
-    7-candidate chunk budget, both equal build_weights exactly."""
+    """weights_table's rows, the Spark band stage, and band_weights
+    over 2-row bands with a 7-candidate chunk budget all equal
+    build_weights exactly."""
     spec = _spec(base, res)
-    want = _sql_table(spark, base, spec)
+    sql = _sql_weights(spark, base, spec)
+    want_df = _sorted(sql)
+    want = {"cell": want_df["cell_id"].to_numpy(),
+            **{c: want_df[c].to_numpy() for c in want_df.columns}}
     assert len(want["cell"])
     tris = triangle_arrays(*read_mesh_arrays(base))
+    table = weights_table(spark, tris, spec)
+    assert table.dtypes == sql.dtypes
+    pd.testing.assert_frame_equal(_sorted(table), want_df, check_exact=True)
     bands = build_band_weights(spark, tris, spec, str(tmp_path / "w"))
     ncols = spec.nx - 1
     _assert_tables_equal(
@@ -162,6 +172,20 @@ def test_band_weights_match_build_weights_degenerate(spark, tmp_path,
     assert np.isfinite(np.stack([got["w0"], got["w1"], got["w2"]])).all()
 
 
+def test_weights_table_of_off_raster_mesh_is_empty(spark, tmp_path):
+    """A mesh lying entirely off the raster gives an empty frame with
+    build_weights' schema, as build_weights does."""
+    base = str(tmp_path / "in")
+    _write_mesh(base, mm.NODES, mm.ELEMENTS)
+    spec = dataclasses.replace(mm.GRID, ul_lon=10.0)  # [10, 12] x [0, 2]
+    sql = _sql_weights(spark, base, spec)
+    table = weights_table(spark, triangle_arrays(*read_mesh_arrays(base)),
+                          spec)
+    assert table.dtypes == sql.dtypes
+    assert sql.count() == 0
+    assert table.collect() == []
+
+
 def test_band_rewrite_is_identical_and_leaves_no_temp(spark, tmp_path,
                                                      monkeypatch):
     """A retried band task writes over its own files: the same arrays,
@@ -201,14 +225,21 @@ def _write_micromesh_run(spark, base, nodes, elements):
 
 
 def test_duplicate_node_id_raises_before_any_spark_job(spark, tmp_path):
+    """A duplicated node_id raises on the CLI path (run_pipeline) and
+    on the DataFrame path (weights_table), before any Spark job."""
+    nodes = mm.NODES + [(4, 1.1, 1.2)]
     base = str(tmp_path / "in")
-    _write_micromesh_run(spark, base, mm.NODES + [(4, 1.1, 1.2)], mm.ELEMENTS)
+    _write_micromesh_run(spark, base, nodes, mm.ELEMENTS)
+    node_id, lon, lat = (np.array(c) for c in zip(*nodes))
     sc = spark.sparkContext
-    sc.setJobGroup("duplicate-node", "run_pipeline on a bad mesh")
+    sc.setJobGroup("duplicate-node", "weights of a bad mesh")
     try:
         with pytest.raises(ValueError, match="duplicate node_id 4"):
             run_pipeline(spark, base, str(tmp_path / "o"),
                          str(tmp_path / "f"), variable="zeta", res=0.4)
+        with pytest.raises(ValueError, match="duplicate node_id 4"):
+            weights_table(spark, triangle_arrays(
+                node_id, lon, lat, np.array(mm.ELEMENTS)), mm.GRID)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("duplicate-node") == []

@@ -15,7 +15,7 @@ from adcirctime2cogs_spark.plans.weights import build_weights, domain_mask
 @pytest.fixture(scope="module")
 def weights(spark):
     w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
+        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), 0.5
     )
     w.cache().count()
     return w
@@ -108,12 +108,12 @@ def _structured_mesh(spark, n: int):
 
 
 def test_random_triangles_match_numpy_bruteforce(spark):
-    """Randomized equivalence: build_weights, and the CLI's row-band
-    kernel band_weights, against a dense numpy brute force applying the
-    IDENTICAL rules (same barycentric formulas, same -EPS slack, same
-    min-elem_id dedupe) over a random triangle soup — catches any drift
-    in the bin-join or bbox candidate generation (a triangle missed
-    shows up as a set mismatch)."""
+    """Randomized equivalence: build_weights, the row-band kernel
+    band_weights, and its DataFrame form weights_table, against a dense
+    numpy brute force applying the IDENTICAL rules (same barycentric
+    formulas, same -EPS slack, same min-elem_id dedupe) over a random
+    triangle soup — catches any drift in the bin-join or bbox candidate
+    generation (a triangle missed shows up as a set mismatch)."""
     import numpy as np
 
     from adcirctime2cogs_spark.plans.weights import (
@@ -121,6 +121,7 @@ def test_random_triangles_match_numpy_bruteforce(spark):
         band_weights,
         build_weights,
         triangle_arrays,
+        weights_table,
     )
 
     rng = np.random.default_rng(20240813)
@@ -162,7 +163,7 @@ def test_random_triangles_match_numpy_bruteforce(spark):
             e = int(hits.min())  # min elem_id dedupe, same as the engine
             want[r.cell_id] = (e, w0[e], w1[e], w2[e])
 
-    # the band kernel over 4-row bands; elem_id shows through n0..n2
+    # the band kernel over 4-row bands, and its DataFrame form
     tri = triangle_arrays(
         np.arange(n_nodes), nx, ny_,
         np.column_stack([np.arange(n_tris), tris]).astype(np.int64),
@@ -172,19 +173,24 @@ def test_random_triangles_match_numpy_bruteforce(spark):
         b = band_weights(**tri, spec=spec, r0=r0, r1=min(r0 + 4, 14))
         for k, c in enumerate(b["cell"]):
             band[r0 * 14 + int(c)] = (
-                (b["n0"][k], b["n1"][k], b["n2"][k]),
+                b["elem_id"][k], (b["n0"][k], b["n1"][k], b["n2"][k]),
                 b["w0"][k], b["w1"][k], b["w2"][k],
             )
+    table = {
+        r.cell_id: (r.elem_id, (r.n0, r.n1, r.n2), r.w0, r.w1, r.w2)
+        for r in weights_table(spark, tri, spec).collect()
+    }
 
-    for engine in (got, band):
+    for engine in (got, band, table):
         assert set(engine) == set(want)
     for cid, (e, w0, w1, w2) in want.items():
         ge, g0, g1, g2 = got[cid]
         assert ge == e, (cid, ge, e)
         assert abs(g0 - w0) < 1e-12 and abs(g1 - w1) < 1e-12 and abs(g2 - w2) < 1e-12
-        bn, b0, b1, b2 = band[cid]
-        assert bn == tuple(tris[e]), (cid, bn, tris[e])
-        assert (b0, b1, b2) == (w0, w1, w2), cid
+        for be, bn, b0, b1, b2 in (band[cid], table[cid]):
+            assert be == e, (cid, be, e)
+            assert bn == tuple(tris[e]), (cid, bn, tris[e])
+            assert (b0, b1, b2) == (w0, w1, w2), cid
 
 
 def test_structured_mesh_linear_property(spark):

@@ -342,15 +342,12 @@ def test_real_decode_feeds_regrid_golden(spark, tmp_path):
     queries, equals the fixture-sourced regrid exactly (nulls at dry
     cells included)."""
     from adcirctime2cogs_spark.plans.regrid import regrid
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import weights_table
     from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark),
-        mm.BIN_SIZE,
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     from_nc = regrid(w, scan_netcdf(spark, p, "zeta"))
     from_fixture = regrid(w, mm.timeseries_df(spark))
 
@@ -377,7 +374,7 @@ def test_streaming_classic_drops_to_cog_zero_injection(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from adcirctime2cogs_spark.plans.regrid import regrid
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import weights_table
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
     from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
@@ -418,10 +415,7 @@ def test_streaming_classic_drops_to_cog_zero_injection(spark, tmp_path):
         .option("path", str(drops / "*.nc"))
         .load()
     )
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark),
-        mm.BIN_SIZE,
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     out_s = str(tmp_path / "cogs_live")
     n = rs.run_regrid_to_cogs(
         rs.regrid_stream(w, stream, watermark="30 minutes"),

@@ -6,11 +6,13 @@ import subprocess
 import sys
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.pipeline import run_pipeline
 from adcirctime2cogs_spark.plans.synthetic import (
-    synth_elements,
+    synth_mesh,
     synth_nodes,
     synth_timeseries,
 )
@@ -22,7 +24,12 @@ def _write_input(spark, base: str, n=12, n_ts=3):
     synth_nodes(spark, n).withColumn("depth", F.lit(5.0)).write.parquet(
         base + "/mesh_nodes.parquet"
     )
-    synth_elements(spark, n).write.parquet(base + "/mesh_elements.parquet")
+    elements = synth_mesh(n)[3]
+    pq.write_table(
+        pa.table({c: elements[:, i]
+                  for i, c in enumerate(("elem_id", "n0", "n1", "n2"))}),
+        base + "/mesh_elements.parquet",
+    )
     # pipeline expects ts-typed timeseries; synthetic uses string labels
     tsv = synth_timeseries(spark, n, n_ts).withColumn(
         "ts",

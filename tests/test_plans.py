@@ -64,7 +64,7 @@ def test_regrid_weights_join_is_equi_not_cross(spark):
     # every join count — inspect a fresh plan instead
     spark.catalog.clearCache()
     w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
+        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), 0.5
     )
     plan = _plan(w)
     # the cell-triangle candidate join hashes on the bin keys
@@ -108,7 +108,7 @@ def test_weights_dedupe_is_hash_agg_not_sort(spark):
 
     spark.catalog.clearCache()
     w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
+        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), 0.5
     )
     plan = _plan(w)
     assert "min_by" in plan
@@ -151,13 +151,11 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
 
     # queries whose plan legitimately contains broadcast NLJ generators
     bnlj_allowance = {
-        "micromesh_domain_mask": 2,   # grid gen under both join branches
-        "micromesh_regrid": 1,        # grid row x col generator
-        "micromesh_weights": 1,
+        "micromesh_domain_mask": 1,   # grid row x col generator (cells)
         "raster_grid_gen": 1,
-        "regrid_synthetic": 2,        # grid gen + ts x node generator
-        "regrid_synthetic_bench": 2,
-        "regrid_multivar": 2,         # same generators as regrid_synthetic
+        "regrid_synthetic": 1,        # ts x node generator
+        "regrid_synthetic_bench": 1,
+        "regrid_multivar": 1,         # same generator as regrid_synthetic
         "sim_topk_bruteforce": 1,     # broadcast probe ship
         "sim_maxsim_multivector": 1,  # broadcast probe ship (maxsim)
         "sim_topk_pq_adc": 1,         # broadcast probe-table ship
@@ -200,6 +198,10 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
         if plan.count("BroadcastNestedLoopJoin") > bnlj_allowance.get(name, 0):
             bad.append(f"{name}: unexpected BroadcastNestedLoopJoin")
     assert not bad, bad
+    # the weights are one map-only stage: no shuffle, no join
+    plan = _plan(registry.all_queries()["micromesh_weights"](spark, sf_dir))
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_asof_pick_is_hash_agg_not_sort(spark, sf_dir):

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans import micromesh as mm
 from adcirctime2cogs_spark.plans.regrid import regrid
-from adcirctime2cogs_spark.plans.weights import build_weights
+from adcirctime2cogs_spark.plans.weights import weights_table
 from adcirctime2cogs_spark.sinks.cog import write_cogs
 from adcirctime2cogs_spark.sinks.sidecar import (
     archive_output,
@@ -20,9 +20,7 @@ from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
 
 @pytest.fixture(scope="module")
 def raster_long(spark):
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     return regrid(w, mm.timeseries_df(spark))
 
 

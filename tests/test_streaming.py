@@ -231,12 +231,10 @@ def test_regrid_stream_matches_batch(spark, tmp_path):
     included."""
     from adcirctime2cogs_spark.plans import micromesh as mm
     from adcirctime2cogs_spark.plans.regrid import regrid
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import weights_table
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
 
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     ts_batch = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))
     src = str(tmp_path / "drops")
     # one file per timestep = the forecast-advisory arrival pattern
@@ -321,13 +319,11 @@ def test_streaming_cog_pipeline_end_to_end(spark, tmp_path):
 
     from adcirctime2cogs_spark.plans import micromesh as mm
     from adcirctime2cogs_spark.plans.regrid import regrid
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import weights_table
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
 
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     ts_batch = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))
     pdf = ts_batch.toPandas().sort_values(["ts", "node_id"])
     stamps = sorted(pdf["ts"].unique())
@@ -400,7 +396,7 @@ def test_netcdf_stream_to_cog_full_flow(spark, tmp_path):
 
     from adcirctime2cogs_spark.plans import micromesh as mm
     from adcirctime2cogs_spark.plans.regrid import regrid
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import weights_table
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
     from adcirctime2cogs_spark.streaming import regrid_stream as rs
@@ -452,9 +448,7 @@ def test_netcdf_stream_to_cog_full_flow(spark, tmp_path):
         .option("path", str(drops / "*.nc"))
         .load()
     )
-    w = build_weights(
-        mm.cells_df(spark), mm.nodes_df(spark), mm.elements_df(spark), mm.BIN_SIZE
-    )
+    w = weights_table(spark, mm.triangles(), mm.GRID)
     out_s = str(tmp_path / "cogs_live")
     n = rs.run_regrid_to_cogs(
         rs.regrid_stream(w, stream, watermark="30 minutes"),

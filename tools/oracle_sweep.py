@@ -10,10 +10,11 @@ just execute and count. One JSON line per sf_dir.
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adcirctime2cogs_spark import registry  # noqa: E402
 from adcirctime2cogs_spark.session import get_spark  # noqa: E402

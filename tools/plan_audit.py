@@ -15,10 +15,12 @@ generator/probe broadcasts (tests/test_plans.py pins the allowance).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
@@ -98,7 +100,7 @@ def _audit_body(spark, sf_dir: str) -> str:
 
 if __name__ == "__main__":
     out = audit()
-    with open("/root/repo/PLAN_AUDIT.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLAN_AUDIT.md"), "w") as fh:
         fh.write(out)
     print(out.splitlines()[0])
     print(f"{len(out.splitlines()) - 9} rows -> PLAN_AUDIT.md")

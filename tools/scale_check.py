@@ -26,7 +26,7 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -36,7 +36,7 @@ def run_leg(spark, leg: str, n: int, grid_n: int, n_ts: int) -> dict:
 
     spec = synth_grid(grid_n)
     t0 = time.time()
-    out = synth_regrid(spark, n, grid_n, n_ts, bin_size=4.0 / (grid_n - 1))
+    out = synth_regrid(spark, n, grid_n, n_ts)
     # analytic check distributed — never collect the raster
     cx = spec.ul_lon + (F.col("grid_col") + 0.5) * spec.res
     cy = spec.ul_lat - (F.col("grid_row") + 0.5) * spec.res
@@ -1083,13 +1083,12 @@ def run_production_multivar_leg(
     import numpy as np
 
     from adcirctime2cogs_spark.pipeline import run_pipeline
-    from adcirctime2cogs_spark.plans.grid import (
-        bounding_box,
-        grid_spec_from_bbox,
-        raster_cells,
-    )
+    from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
     from adcirctime2cogs_spark.plans.regrid import regrid_multi
-    from adcirctime2cogs_spark.plans.weights import build_weights
+    from adcirctime2cogs_spark.plans.weights import (
+        triangle_arrays,
+        weights_table,
+    )
     from adcirctime2cogs_spark.sinks.cog import write_cogs
     from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
     from adcirctime2cogs_spark.sinks.sidecar import (
@@ -1097,7 +1096,10 @@ def run_production_multivar_leg(
         write_mosaic_sidecars,
     )
     from adcirctime2cogs_spark.sources import netcdf3 as nc3
-    from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
+    from adcirctime2cogs_spark.sources.mesh import (
+        load_timeseries,
+        read_mesh_arrays,
+    )
     from adcirctime2cogs_spark.sources.netcdf import adcirc_nc_to_tables
 
     work = tempfile.mkdtemp(prefix="scale_multivar_")
@@ -1151,7 +1153,7 @@ def run_production_multivar_leg(
         # ---- scenario B: weights once, both variables on one
         # shuffle, same sinks ----------------------------------------
         t0 = time.time()
-        nodes, elements = load_mesh(spark, tables["zeta"])
+        node_id, lon_a, lat_a, elements = read_mesh_arrays(tables["zeta"])
         ts_zeta = load_timeseries(spark, tables["zeta"], "zeta")
         ts_vel = load_timeseries(spark, tables["vel"], "vel")
         wide = (
@@ -1159,10 +1161,12 @@ def run_production_multivar_leg(
             .join(ts_vel.withColumnRenamed("value", "vel"),
                   ["ts", "node_id"])
         )
-        spec = grid_spec_from_bbox(bounding_box(nodes), res)
-        cells = raster_cells(spark, spec)
-        weights = build_weights(
-            cells, nodes, elements, bin_size=res * 4.0
+        spec = grid_spec_from_bbox(
+            {"lon_min": float(lon_a.min()), "lon_max": float(lon_a.max()),
+             "lat_min": float(lat_a.min()), "lat_max": float(lat_a.max())},
+            res)
+        weights = weights_table(
+            spark, triangle_arrays(node_id, lon_a, lat_a, elements), spec
         ).cache()
         weights.count()
         broadcast_ts = wide.count() * 24 < 64 * 1024 * 1024

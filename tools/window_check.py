@@ -15,10 +15,11 @@ Exit code 1 on any mismatch; prints one line per query.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
