@@ -5,6 +5,15 @@ entry point all run the same configuration. Mirrors the reference's
 hand-placed execution settings with their Spark equivalents
 (SURVEY.md §4): dask lazy graphs → Catalyst laziness, chunk tuning →
 AQE, spill dir → spark.local.dir.
+
+Python workers import this package from the driver's checkout:
+`spark.executorEnv.PYTHONPATH` carries the package's parent directory,
+so a job runs the same from any working directory (shared storage is
+already assumed for `_weights/` and the COG directory). They run under
+`worker_daemon` (`spark.python.daemon.module`), which stops every task
+re-reading the `pyspark.zip` directory on Python < 3.13. Both are
+static core confs: a session that existed before `get_spark` keeps
+PySpark's own daemon, which is slower but gives the same answers.
 """
 
 from __future__ import annotations
@@ -27,13 +36,22 @@ def get_spark(
     (partition coalescing, skew-join splitting), Arrow for any
     Python<->JVM boundary, UTC session time so results are
     oracle-comparable, and shuffle partitions ~ cores locally
-    (overridden by AQE advisory sizing at scale).
+    (overridden by AQE advisory sizing at scale). Python workers get the
+    package's parent directory on their PYTHONPATH (before any
+    `spark.executorEnv.PYTHONPATH` in `extra_conf`) and run under
+    `worker_daemon`; without the first, the daemon and every task that
+    imports the package would fail outside the checkout.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    extra_conf = dict(extra_conf or {})
+    pythonpath = os.pathsep.join(filter(None, (
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        extra_conf.pop("spark.executorEnv.PYTHONPATH", ""),
+    )))
 
     builder = (
         SparkSession.builder.master(master)
@@ -56,8 +74,11 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS) which Spark's parquet
         # reader rejects; read as int64 ns and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # static core confs, so not in the re-apply loop below
+        .config("spark.python.daemon.module", "adcirctime2cogs_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # getOrCreate IGNORES every .config() when a session already
@@ -73,7 +94,7 @@ def get_spark(
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        **(extra_conf or {}),
+        **extra_conf,
     }.items():
         try:
             spark.conf.set(k, v)
