@@ -26,9 +26,9 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
-  scanned straight into the regrid through the `adcirc_netcdf`
-  DataSource (sources/netcdf.scan_netcdf), one task per byte-range
-  split, never staged.
+  scanned straight into the regrid by sources/netcdf.scan_netcdf:
+  the driver plans the byte-range splits and one mapInArrow task
+  decodes each split, never staged.
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \

@@ -2,29 +2,32 @@
 engine's relational tables, through one scan.
 
 `scan_netcdf(spark, path, variable)` reads a record variable as long
-(ts, node_id, value) rows through `spark.read.format("adcirc_netcdf")`,
-the Spark 4 Python DataSource defined here:
+(ts, node_id, value) rows:
 
-- the driver plans one InputPartition per byte-range split from file
-  metadata alone (`_default_splitter`): one per record of a classic
-  NetCDF-3 file (records over 4 MB sub-split into node ranges), one per
-  (record, compressed chunk) of a NetCDF-4 file — the reference's
-  chunks={'time': 1} (run/utilities/adcirc_dask_utilities.py:42);
-- each task reads only its byte range (`_default_range_decoder`) and
-  returns one Arrow RecordBatch, with _FillValue nodes as null.
+- the driver plans one byte-range split per task from file metadata
+  alone (`plan_scan` with `_default_splitter`): one per record of a
+  classic NetCDF-3 file (records over 4 MB sub-split into node
+  ranges), one per (record, compressed chunk) of a NetCDF-4 file — the
+  reference's chunks={'time': 1}
+  (run/utilities/adcirc_dask_utilities.py:42);
+- one `spark.range(n).mapInArrow` stage runs one task per split, which
+  reads only its byte range (`_default_range_decoder`) and returns one
+  Arrow RecordBatch, with _FillValue nodes as null. No Python planner
+  process starts.
 
     df = scan_netcdf(spark, "/data/fort.63.nc", "zeta")
 
 Both NetCDF flavours decode with no third-party library: classic
 NetCDF-3 through sources/netcdf3.py, HDF5-backed NetCDF-4 through the
 HDF5 subset in sources/hdf5.py. A planned variable that is missing or
-has no record dimension fails at plan time with a ValueError naming the
-problem; an HDF5 layout outside the subset raises
-hdf5.UnsupportedHDF5Feature. `AdcircNetCDFDataSource.with_codecs`
+has no record dimension fails when `scan_netcdf` is called, with a
+ValueError naming the problem; an HDF5 layout outside the subset
+raises hdf5.UnsupportedHDF5Feature. `AdcircNetCDFDataSource.with_codecs`
 injects other split/decode callables (tests, or xarray/h5py codecs on
-hosts that have them). The same source streams:
+hosts that have them), passed to `scan_netcdf` as `source`. The same
+codecs stream through the Spark 4 Python DataSource defined here:
 `spark.readStream.format("adcirc_netcdf")` over a directory of
-arriving files.
+arriving files, once the caller registers `AdcircNetCDFDataSource`.
 
 `write_static_tables` writes the mesh (and a time-less max variable)
 as sources/mesh.py parquet tables; `adcirc_nc_to_tables` adds the
@@ -42,12 +45,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 TIMESERIES_OUT_SCHEMA = "ts timestamp, node_id long, value double"
 _ARROW_SCHEMA = pa.schema([
@@ -105,7 +103,7 @@ def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     TypeError raised INSIDE a 3-arg splitter must propagate, not
     trigger a silent 2-arg re-invocation (which would mask the real
     bug, or re-plan different splits for a defaulted third param).
-    Shared by the batch and the stream reader."""
+    Shared by plan_scan and the stream reader."""
     try:
         params = list(inspect.signature(splitter).parameters.values())
         positional = [
@@ -150,65 +148,41 @@ def _decode_split(
     )
 
 
-class _TimestepSplit(InputPartition):
-    def __init__(self, path: str, t_idx: int, offset: int, nbytes: int):
-        self.path = path
-        self.t_idx = t_idx
-        self.offset = offset
-        self.nbytes = nbytes
-
-
-class _NetCDFReader(DataSourceReader):
-    def __init__(
-        self,
-        options: dict,
-        splitter: Callable,
-        range_decoder: Callable,
-    ):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("adcirc_netcdf requires .option('path', ...)")
-        self.variable = options.get("variable", "zeta")
-        self.splitter = splitter
-        self.range_decoder = range_decoder
-
-    def partitions(self):
-        """One InputPartition per byte-range split — planned
-        driver-side from file metadata, exactly like FileSourceScanExec
-        split planning; no file content is read here beyond the
-        splitter's header probe."""
-        paths = sorted(_glob.glob(self.path))
-        if not paths and os.path.exists(self.path):
-            # the literal filename contains glob metacharacters (e.g.
-            # /data/run[2020]/fort.63.nc) but the file itself exists —
-            # read it rather than mis-parsing the name as a pattern
-            paths = [self.path]
-        if not paths:
-            # Never fall back to treating the glob pattern itself as a
-            # file path — os.path.getsize on the raw pattern raises a
-            # baffling FileNotFoundError. (The STREAM reader returns
-            # empty for the same case because files may arrive later;
-            # a batch scan over zero files is almost always a typo.)
-            raise FileNotFoundError(
-                f"adcirc_netcdf: no files matched path pattern {self.path!r}"
-            )
-        return [
-            _TimestepSplit(p, int(t), int(off), int(nb))
-            for p in paths
-            for (t, off, nb) in plan_splits(
-                self.splitter, p, os.path.getsize(p), self.variable
-            )
-        ]
-
-    def read(self, split: _TimestepSplit) -> Iterator[pa.RecordBatch]:
-        yield _decode_split(
-            self.range_decoder, split.path, self.variable,
-            split.t_idx, split.offset, split.nbytes,
+def plan_scan(
+    path: str, variable: str, splitter: Callable
+) -> list[tuple[str, int, int, int]]:
+    """The byte-range splits of the file(s) at `path` (a file or a
+    glob) as [(path, t_idx, offset, nbytes), ...], planned from file
+    metadata alone, exactly like FileSourceScanExec split planning; no
+    file content is read beyond the splitter's header probe."""
+    paths = sorted(_glob.glob(path))
+    if not paths and os.path.exists(path):
+        # the literal filename contains glob metacharacters (e.g.
+        # /data/run[2020]/fort.63.nc) but the file itself exists —
+        # read it rather than mis-parsing the name as a pattern
+        paths = [path]
+    if not paths:
+        # Never fall back to treating the glob pattern itself as a
+        # file path — os.path.getsize on the raw pattern raises a
+        # baffling FileNotFoundError. (The STREAM reader returns
+        # empty for the same case because files may arrive later;
+        # a batch scan over zero files is almost always a typo.)
+        raise FileNotFoundError(
+            f"adcirc_netcdf: no files matched path pattern {path!r}"
         )
+    return [
+        (p, int(t), int(off), int(nb))
+        for p in paths
+        for (t, off, nb) in plan_splits(
+            splitter, p, os.path.getsize(p), variable
+        )
+    ]
 
 
 class AdcircNetCDFDataSource(DataSource):
-    """`format("adcirc_netcdf")` — per-timestep partitioned scan."""
+    """`readStream.format("adcirc_netcdf")` — micro-batches of the
+    splits of arriving files. Its codecs are also the ones `scan_netcdf`
+    runs."""
 
     _splitter = staticmethod(_default_splitter)
     _range_decoder = staticmethod(_default_range_decoder)
@@ -220,9 +194,6 @@ class AdcircNetCDFDataSource(DataSource):
     def schema(self) -> str:
         return TIMESERIES_OUT_SCHEMA
 
-    def reader(self, schema) -> _NetCDFReader:
-        return _NetCDFReader(self.options, self._splitter, self._range_decoder)
-
     def simpleStreamReader(self, schema) -> "_NetCDFStreamReader":
         return _NetCDFStreamReader(
             self.options, self._splitter, self._range_decoder
@@ -232,9 +203,10 @@ class AdcircNetCDFDataSource(DataSource):
     def with_codecs(
         cls, splitter: Callable, range_decoder: Callable
     ) -> type["AdcircNetCDFDataSource"]:
-        """A registerable subclass with injected split/decode callables
-        (the no-NetCDF-library test path, and the hook for xarray/h5py
-        codecs on equipped hosts)."""
+        """A subclass with injected split/decode callables (the
+        no-NetCDF-library test path, and the hook for xarray/h5py
+        codecs on equipped hosts): register it for a stream, or pass
+        it to `scan_netcdf` as `source`."""
         return type(
             "AdcircNetCDFDataSourceInjected",
             (cls,),
@@ -245,18 +217,32 @@ class AdcircNetCDFDataSource(DataSource):
         )
 
 
-def scan_netcdf(spark: SparkSession, path: str, variable: str) -> DataFrame:
+def scan_netcdf(
+    spark: SparkSession,
+    path: str,
+    variable: str,
+    source: type[AdcircNetCDFDataSource] = AdcircNetCDFDataSource,
+) -> DataFrame:
     """The record variable `variable` of the NetCDF file(s) at `path`
-    (a file or a glob) as (ts, node_id, value) rows, one Spark task per
-    planned split. Registers the default-codec `adcirc_netcdf` source
-    on the session first, so a `with_codecs` class registered under
-    the same name never decodes this scan."""
-    spark.dataSource.register(AdcircNetCDFDataSource)
-    return (
-        spark.read.format("adcirc_netcdf")
-        .option("path", path)
-        .option("variable", variable)
-        .load()
+    (a file or a glob) as (ts, node_id, value) rows. The splits are
+    planned here, in the driver, with `source`'s splitter, so a bad
+    variable, a non-NetCDF file or an empty glob raises before any
+    Spark job. Partition i of `spark.range(n, numPartitions=n)` holds
+    split id i, and its `mapInArrow` task decodes that split with
+    `source`'s range decoder into one Arrow batch: one task per split."""
+    splits = plan_scan(path, variable, source._splitter)
+    range_decoder = source._range_decoder
+
+    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                p, t_idx, offset, nbytes = splits[i]
+                yield _decode_split(
+                    range_decoder, p, variable, t_idx, offset, nbytes
+                )
+
+    return spark.range(len(splits), numPartitions=len(splits)).mapInArrow(
+        read, TIMESERIES_OUT_SCHEMA
     )
 
 

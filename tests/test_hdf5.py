@@ -496,19 +496,17 @@ def test_nc4_decode_feeds_regrid_golden(spark, tmp_path):
 
 
 def test_python_datasource_default_codecs_nc4(spark, tmp_path):
-    """spark.read.format('adcirc_netcdf') on a NetCDF-4 file with NO
-    injected codecs — one InputPartition per chunk via the B-tree."""
-    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+    """scan_netcdf with the DataSource's default codecs passed
+    explicitly as `source` on a NetCDF-4 file — one partition per
+    chunk via the B-tree."""
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        scan_netcdf,
+    )
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc4(p)
-    spark.dataSource.register(AdcircNetCDFDataSource)
-    df = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", p)
-        .option("variable", "zeta")
-        .load()
-    )
+    df = scan_netcdf(spark, p, "zeta", source=AdcircNetCDFDataSource)
     rows = df.collect()
     assert len(rows) == len(mm.TIMESERIES)
     nulls = {(str(r.ts), r.node_id) for r in rows if r.value is None}

@@ -316,20 +316,18 @@ def test_scan_split_default_codecs_match_distributed(spark, tmp_path):
 
 
 def test_python_datasource_default_codecs_real_file(spark, tmp_path):
-    """spark.read.format('adcirc_netcdf') with NO injected codecs on a
-    real classic file — the DataSource's default splitter/range-decoder
-    now decode CDF-1 natively (one InputPartition per timestep)."""
-    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+    """scan_netcdf with the DataSource's default splitter/range-decoder
+    passed explicitly as `source` on a real classic file — they decode
+    CDF-1 natively (one partition per timestep)."""
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        scan_netcdf,
+    )
 
     p = str(tmp_path / "fort.63.nc")
     _write_micromesh_nc(p)
-    spark.dataSource.register(AdcircNetCDFDataSource)
-    df = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", p)
-        .option("variable", "zeta")
-        .load()
-    )
+    df = scan_netcdf(spark, p, "zeta", source=AdcircNetCDFDataSource)
+    assert df.rdd.getNumPartitions() == 3
     rows = df.collect()
     assert len(rows) == len(mm.TIMESERIES)
     nulls = {(str(r.ts), r.node_id) for r in rows if r.value is None}
@@ -444,6 +442,7 @@ def test_classic_subsplit_large_records(spark, tmp_path):
     from adcirctime2cogs_spark.sources.netcdf import (
         AdcircNetCDFDataSource,
         _default_range_decoder,
+        scan_netcdf,
     )
 
     p = str(tmp_path / "fort.63.nc")
@@ -457,20 +456,18 @@ def test_classic_subsplit_large_records(spark, tmp_path):
     per_rec = [n for t, _, n in splits if t == 0]
     assert sum(per_rec) == slab and all(n % 8 == 0 for n in per_rec)
 
-    spark.dataSource.register(AdcircNetCDFDataSource.with_codecs(
-        lambda path, ln, var: nc3.classic_splitter(
-            path, ln, var, max_split_bytes=16
-        ),
-        _default_range_decoder,
+    split = scan_netcdf(spark, p, "zeta", source=(
+        AdcircNetCDFDataSource.with_codecs(
+            lambda path, ln, var: nc3.classic_splitter(
+                path, ln, var, max_split_bytes=16
+            ),
+            _default_range_decoder,
+        )
     ))
-    split = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", p).option("variable", "zeta").load()
-    )
     assert _scan_rows(split) == _reference_rows(p)
 
     # layout guarantee: exactly one split per task — each planned
-    # split is its own InputPartition, so no task idles while another
+    # split is its own partition, so no task idles while another
     # decodes two ranges
     from pyspark.sql import functions as F
 
@@ -617,19 +614,60 @@ def test_scan_rejects_bad_variable_at_plan_time(spark, tmp_path, fmt):
 
 
 @pytest.mark.parametrize("fmt", ["classic", "nc4"])
+def test_scan_plans_in_the_driver_before_any_spark_job(spark, tmp_path, fmt):
+    """scan_netcdf plans its splits when it is called: a missing
+    variable, a time-less variable and a non-NetCDF file raise the
+    planner's error there, and no Spark job starts. An injected-codec
+    scan of T splits has T partitions."""
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        _default_range_decoder,
+        scan_netcdf,
+    )
+    from tests.test_hdf5 import _write_micromesh_nc4
+
+    p = str(tmp_path / "fort.63.nc")
+    (_write_micromesh_nc if fmt == "classic" else _write_micromesh_nc4)(p)
+    junk = tmp_path / "junk.nc"
+    junk.write_bytes(b"00")
+    sc = spark.sparkContext
+    group = f"scan-plan-{fmt}"
+    sc.setJobGroup(group, "planning a NetCDF scan")
+    try:
+        with pytest.raises(ValueError, match=r"'zetta' not in .*has: \["):
+            scan_netcdf(spark, p, "zetta")
+        with pytest.raises(ValueError, match="'depth' .*not a record variable"):
+            scan_netcdf(spark, p, "depth")
+        with pytest.raises(ValueError, match="(?i)not a netcdf file"):
+            scan_netcdf(spark, str(junk), "zeta")
+        T = 5
+        df = scan_netcdf(spark, p, "zeta", source=(
+            AdcircNetCDFDataSource.with_codecs(
+                lambda path, ln: [(t % 3, 0, ln) for t in range(T)],
+                _default_range_decoder,
+            )
+        ))
+        assert df.rdd.getNumPartitions() == T
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize("fmt", ["classic", "nc4"])
 def test_reader_yields_one_arrow_batch_per_split(tmp_path, fmt):
-    """The batch reader's contract: read() yields exactly one Arrow
-    RecordBatch per planned split, typed like the declared schema,
-    with nulls exactly at the _FillValue nodes. The classic file is
-    planned in node-range sub-splits, the NetCDF-4 file in 2-node
-    chunks, so no split is a whole record."""
+    """The scan's per-split contract: _decode_split turns each split of
+    plan_scan into exactly one Arrow RecordBatch, typed like the
+    declared schema, with nulls exactly at the _FillValue nodes. The
+    classic file is planned in node-range sub-splits, the NetCDF-4 file
+    in 2-node chunks, so no split is a whole record."""
     import pyarrow as pa
 
     from adcirctime2cogs_spark.sources.netcdf import (
         _ARROW_SCHEMA,
+        _decode_split,
         _default_range_decoder,
         _default_splitter,
-        _NetCDFReader,
+        plan_scan,
     )
     from tests.test_hdf5 import _write_micromesh_nc4
 
@@ -643,15 +681,12 @@ def test_reader_yields_one_arrow_batch_per_split(tmp_path, fmt):
     else:
         _write_micromesh_nc4(p, node_chunk=2)
         splitter = _default_splitter
-    reader = _NetCDFReader({"path": p, "variable": "zeta"}, splitter,
-                           _default_range_decoder)
-    splits = reader.partitions()
+    splits = plan_scan(p, "zeta", splitter)
     assert len(splits) > 3  # more than one split per record
     rows = []
-    for split in splits:
-        batches = list(reader.read(split))
-        assert len(batches) == 1
-        batch = batches[0]
+    for path, t_idx, offset, nbytes in splits:
+        batch = _decode_split(_default_range_decoder, path, "zeta",
+                              t_idx, offset, nbytes)
         assert isinstance(batch, pa.RecordBatch)
         assert batch.schema == _ARROW_SCHEMA
         assert 0 < batch.num_rows < len(mm.NODES)

@@ -258,9 +258,10 @@ def test_pipeline_cli_unknown_nc_variable_exits_1(tmp_path, capsys):
 def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
     spark, tmp_path, monkeypatch
 ):
-    """The CLI reads a .nc record variable through the adcirc_netcdf
-    DataSource alone: the timeseries plan the COG sink consumes has no
-    binaryFile scan and no round-robin exchange."""
+    """The CLI reads a .nc record variable through scan_netcdf alone:
+    the timeseries plan the COG sink consumes is a MapInArrow over a
+    Range, with no DataSource BatchScan, no binaryFile scan and no
+    round-robin exchange."""
     from adcirctime2cogs_spark import pipeline
     from tests.test_netcdf3 import _write_micromesh_nc
 
@@ -284,7 +285,8 @@ def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
         "--res", "0.4",
     ]) == 0
     assert len(plans) == 1
-    assert "BatchScan adcirc_netcdf" in plans[0]
+    assert "MapInArrow" in plans[0] and "Range (0, " in plans[0]
+    assert "BatchScan" not in plans[0]
     assert "binaryFile" not in plans[0]
     assert "RoundRobinPartitioning" not in plans[0]
 

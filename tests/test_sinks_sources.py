@@ -1,5 +1,6 @@
 """COG sink, sidecar, mesh parquet round-trip, and the NetCDF adapter
-plumbing (the adcirc_netcdf DataSource with injected codecs)."""
+plumbing (scan_netcdf and the adcirc_netcdf stream with injected
+codecs)."""
 
 
 import numpy as np
@@ -150,10 +151,13 @@ def test_mesh_parquet_roundtrip(spark, tmp_path):
 
 
 def test_netcdf_adapter_with_injected_decoder(spark, tmp_path):
-    """The DataSource plumbing end-to-end with an injected codec pair
+    """The scan plumbing end-to-end with an injected codec pair
     (the with_codecs hook for library decoders, SURVEY O1): list
     node ids and None values from the decoder are accepted."""
-    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        scan_netcdf,
+    )
 
     nc = tmp_path / "fort.63.nc"
     nc.write_bytes(b"\x89HDF-fake")
@@ -167,12 +171,9 @@ def test_netcdf_adapter_with_injected_decoder(spark, tmp_path):
     def range_decoder(path, variable, t_idx, offset, nbytes):
         return times[t_idx], [0, 1, 2], values[t_idx]
 
-    spark.dataSource.register(
-        AdcircNetCDFDataSource.with_codecs(splitter, range_decoder)
-    )
-    df = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", str(nc)).option("variable", "zeta").load()
+    df = scan_netcdf(
+        spark, str(nc), "zeta",
+        source=AdcircNetCDFDataSource.with_codecs(splitter, range_decoder),
     )
     rows = df.collect()
     assert len(rows) == 6
@@ -185,7 +186,10 @@ def test_netcdf_split_scan_one_task_per_timestep(spark, tmp_path):
     """Large-file path (VERDICT #6): F files x T timesteps -> F*T
     byte-range tasks; no task ever sees whole-file content — the range
     decoder gets (path, offset, nbytes) and opens the file itself."""
-    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        scan_netcdf,
+    )
 
     HDR, T, NODES = 8, 3, 4
     block = NODES * 8
@@ -213,14 +217,9 @@ def test_netcdf_split_scan_one_task_per_timestep(spark, tmp_path):
             NODES
         ), vals
 
-    spark.dataSource.register(
-        AdcircNetCDFDataSource.with_codecs(splitter, range_decoder)
-    )
-    df = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", str(tmp_path / "*.nc"))
-        .option("variable", "zeta")
-        .load()
+    df = scan_netcdf(
+        spark, str(tmp_path / "*.nc"), "zeta",
+        source=AdcircNetCDFDataSource.with_codecs(splitter, range_decoder),
     )
     # one planned task per (file, timestep) split
     assert df.rdd.getNumPartitions() == 2 * T
@@ -236,10 +235,12 @@ def test_netcdf_split_scan_one_task_per_timestep(spark, tmp_path):
 
 
 def test_netcdf_python_datasource(spark, tmp_path):
-    """The same byte-range scan as a native Spark 4 Python DataSource:
-    format('adcirc_netcdf') with injected codecs — one InputPartition
-    per timestep, NaN→null at ingest."""
-    from adcirctime2cogs_spark.sources.netcdf import AdcircNetCDFDataSource
+    """The byte-range scan with injected codecs: the declared schema,
+    one partition per timestep, NaN→null at ingest."""
+    from adcirctime2cogs_spark.sources.netcdf import (
+        AdcircNetCDFDataSource,
+        scan_netcdf,
+    )
 
     HDR, T, NODES = 8, 3, 4
     block = NODES * 8
@@ -267,14 +268,9 @@ def test_netcdf_python_datasource(spark, tmp_path):
             vals,
         )
 
-    spark.dataSource.register(
-        AdcircNetCDFDataSource.with_codecs(splitter, range_decoder)
-    )
-    df = (
-        spark.read.format("adcirc_netcdf")
-        .option("path", str(tmp_path / "*.nc"))
-        .option("variable", "zeta")
-        .load()
+    df = scan_netcdf(
+        spark, str(tmp_path / "*.nc"), "zeta",
+        source=AdcircNetCDFDataSource.with_codecs(splitter, range_decoder),
     )
     assert df.schema.simpleString() == (
         "struct<ts:timestamp,node_id:bigint,value:double>"
@@ -439,9 +435,8 @@ def test_netcdf_default_codecs_gated(spark, tmp_path):
 
     _write_micromesh_nc(str(tmp_path / "a.nc"))
     (tmp_path / "x.nc").write_bytes(b"00")
-    df = scan_netcdf(spark, str(tmp_path / "*.nc"), "zeta")
     with pytest.raises(Exception, match="(?i)not a netcdf file"):
-        df.collect()
+        scan_netcdf(spark, str(tmp_path / "*.nc"), "zeta")
 
 
 def test_maxvar_dispatch(spark, tmp_path):
@@ -553,15 +548,10 @@ def test_netcdf_datasource_empty_glob_raises():
     may legitimately arrive later)."""
     import pytest
 
-    from adcirctime2cogs_spark.sources.netcdf import _NetCDFReader
+    from adcirctime2cogs_spark.sources.netcdf import plan_scan
 
-    reader = _NetCDFReader(
-        {"path": "/nonexistent-dir/*.nc"},
-        splitter=lambda p, n: [(0, 0, n)],
-        range_decoder=None,
-    )
     with pytest.raises(FileNotFoundError, match="no files matched"):
-        reader.partitions()
+        plan_scan("/nonexistent-dir/*.nc", "zeta", lambda p, n: [(0, 0, n)])
 
 
 def test_events_ts_probe_survives_unreadable_path(tmp_path):

@@ -766,8 +766,8 @@ def run_nc4_ingest_leg(
     var chunked (1, node_chunk), deflate — ceil(1.8225M/200k)=10
     chunks per timestep, so the split scan plans n_ts*10 byte-range
     tasks from the v1 B-tree). Green = both formats ingest through
-    scan_netcdf (the adcirc_netcdf DataSource) to IDENTICAL aggregate
-    checksums. This is the pure-Python HDF5 codec's scale proof:
+    scan_netcdf (splits planned in the driver, one mapInArrow task per
+    split) to IDENTICAL aggregate checksums. This is the pure-Python HDF5 codec's scale proof:
     multi-chunk deflate decode of a 1.8M-node record variable,
     distributed."""
     import shutil
