@@ -1737,7 +1737,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Java '.' excludes \r and three unicode separators, RE2 only \n
 # — review r12).
 
-_ENTROPY_SQL = f"""
+_ENTROPY_SQL = rf"""
 WITH ch AS (
   SELECT doc_id, unnest(regexp_extract_all(text, '[\s\S]')) AS c
   FROM documents

@@ -3,17 +3,18 @@
 
     mesh tables -> driver arrays -> bbox -> grid spec
       -> weights (one map-only Spark stage, one task per row band)
-      node values -> groupBy(ts) -> regrid + COG per ts -> mosaic
+      node values -> one task per ts: regrid + COG -> mosaic
       sidecars -> zip
 
-Three Spark jobs in all: the weights stage, and the COG kernel's
-shuffle and result stages.
+On a .nc record variable, two Spark jobs in all, each one map-only
+stage: the weights, then one task per timestep that decodes, regrids
+and writes (parquet input adds the groupBy's shuffle stage).
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
-- one Spark job regrids and writes every timestep: the node values of
-  each timestep go to one task, which regrids them against the weights
-  arrays and writes its COG (sinks/cog.write_cogs_from_nodes), where
-  the reference loops over timesteps sequentially (SURVEY P9);
+- one Spark job regrids and writes every timestep, one task per
+  timestep, each regridding its node values against the weights
+  arrays and writing its COG (sinks/cog.regrid_nodes), where the
+  reference loops over timesteps sequentially (SURVEY P9);
 - weights computed once and reused across every timestep (the
   reference rebuilds its interpolator per step, P6). The driver reads
   the mesh tables with pyarrow (sources/mesh.read_mesh_arrays), takes
@@ -26,9 +27,10 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
-  scanned straight into the regrid by sources/netcdf.scan_netcdf:
-  the driver plans the byte-range splits and one mapInArrow task
-  decodes each split, never staged.
+  never staged: the driver plans the byte-range splits of each record
+  (sources/netcdf.plan_records) and one mapInArrow task per record
+  decodes them straight into its regrid and COG
+  (sinks/cog.write_cogs_from_netcdf).
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \
@@ -45,17 +47,24 @@ import sys
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
 from adcirctime2cogs_spark.plans.weights import (
     build_band_weights,
     triangle_arrays,
 )
-from adcirctime2cogs_spark.sinks.cog import write_cogs_from_nodes
+from adcirctime2cogs_spark.sinks.cog import (
+    write_cogs_from_netcdf,
+    write_cogs_from_nodes,
+)
 from adcirctime2cogs_spark.sinks.sidecar import archive_output, write_mosaic_sidecars
 from adcirctime2cogs_spark.sources.mesh import load_timeseries, read_mesh_arrays
-from adcirctime2cogs_spark.sources.netcdf import scan_netcdf, write_static_tables
+from adcirctime2cogs_spark.sources.netcdf import (
+    AdcircNetCDFDataSource,
+    plan_records,
+    write_static_tables,
+)
 
 
 @dataclass
@@ -78,21 +87,28 @@ def run_pipeline(
     res: float,
     s3_bucket: str | None = None,
     s3_client=None,
-    timeseries: DataFrame | None = None,
+    nc_path: str | None = None,
 ) -> PipelineResult:
     """The whole dataflow; returns a small result summary (files are
     the real output, like the reference) plus per-phase wall timings
     (weights build / regrid+COG / sidecars+zip) so scale runs can
     attribute cost without re-instrumenting.
 
-    The mesh comes from input_dir. The node values are `timeseries`
-    (ts, node_id, value) when given, else the variable's table in
-    input_dir (sources/mesh.load_timeseries)."""
+    The mesh comes from input_dir. The node values are the record
+    variable `variable` of the NetCDF file(s) at `nc_path` when given:
+    its byte-range splits are planned here, before any Spark job, and
+    each timestep is decoded, regridded and written by one task
+    (sinks/cog.write_cogs_from_netcdf; two records with one ts raise
+    ValueError before the sidecars and the zip). Otherwise they are
+    the variable's table in input_dir (sources/mesh.load_timeseries)."""
     timings: dict[str, float] = {}
     t0 = time.time()
     node_id, lon, lat, elements = read_mesh_arrays(input_dir)
     tris = triangle_arrays(node_id, lon, lat, elements)
-    if timeseries is None:
+    if nc_path is not None:
+        records = plan_records(
+            nc_path, variable, AdcircNetCDFDataSource._splitter)
+    else:
         timeseries = load_timeseries(spark, input_dir, variable)
 
     bbox = {"lon_min": float(lon.min()), "lon_max": float(lon.max()),  # O7
@@ -108,9 +124,14 @@ def run_pipeline(
         bands = build_band_weights(spark, tris, spec, weights_dir)
         timings["weights"] = round(time.time() - t0, 2)
         t0 = time.time()
-        manifest = write_cogs_from_nodes(  # O16-O17 + O20
-            timeseries, bands, spec, cog_dir, prefix=variable
-        ).collect()
+        if nc_path is not None:  # O1-O6 + O16-O17 + O20
+            manifest = write_cogs_from_netcdf(
+                spark, records, variable, bands, spec, cog_dir,
+                prefix=variable)
+        else:  # O16-O17 + O20
+            manifest = write_cogs_from_nodes(
+                timeseries, bands, spec, cog_dir, prefix=variable
+            ).collect()
         timings["regrid_cog"] = round(time.time() - t0, 2)
     finally:
         # remove the arrays even when a phase throws: a long-lived
@@ -271,10 +292,6 @@ def main(argv: list[str] | None = None) -> int:
     from adcirctime2cogs_spark.session import get_spark
 
     spark = get_spark(app_name="adcirctime2cogs_pipeline")
-    timeseries = (
-        scan_netcdf(spark, nc_input, args.input_variable)
-        if record_nc else None
-    )
     result = run_pipeline(
         spark,
         base_dir,
@@ -283,7 +300,7 @@ def main(argv: list[str] | None = None) -> int:
         args.input_variable,
         args.res,
         s3_bucket=args.s3_bucket,
-        timeseries=timeseries,
+        nc_path=nc_input if record_nc else None,
     )
     print(
         f"wrote {result.n_timesteps} COGs ({result.n_cells} cells) to "

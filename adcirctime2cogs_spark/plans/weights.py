@@ -27,7 +27,7 @@ spans two bands, so the pick needs no shuffle. Two forms share it:
   synthetic, streaming and scale-leg callers), the triangles riding in
   the task closure;
 - `build_band_weights`, the CLI's form, writes each band's rows as .npy
-  arrays for the COG kernel (sinks/cog.write_cogs_from_nodes), the
+  arrays for the COG kernel (sinks/cog.regrid_nodes), the
   triangles memory-mapped from disk, and no weight row passes through
   the driver.
 

@@ -2,16 +2,21 @@
 
 The reference writes COGs sequentially inside its timestep loop
 (run/adcircTime2cogs.py:190-209, write_cog at :205-206 via
-datacube+GDAL). Here Spark fans out ONE TASK PER TIMESTEP with
-`groupBy('ts').applyInPandas`; each task builds its dense 2-D array
-and writes its own file — embarrassingly parallel, and GDAL never sees
-a shared file (SURVEY §7 "what's hard"). Two entry points:
+datacube+GDAL). Here Spark fans out ONE TASK PER TIMESTEP; each task
+builds its dense 2-D array and writes its own file — embarrassingly
+parallel, and GDAL never sees a shared file (SURVEY §7 "what's hard").
+A timestep's node values become its raster in `regrid_nodes` alone,
+against the per-band weight arrays that
+plans/weights.build_band_weights wrote once — per band a gather, a
+dot with the barycentric weights and a scatter into the raster. Three
+entry points:
 
-- `write_cogs_from_nodes` (the CLI): the groupBy ships each timestep's
-  NODE values, and the task regrids them itself against the per-band
-  weight arrays that plans/weights.build_band_weights wrote once — per
-  band a gather, a dot with the barycentric weights and a scatter into
-  the raster;
+- `write_cogs_from_netcdf` (the CLI on a .nc record variable): one
+  map-only stage, one task per record, each decoding its record's
+  byte ranges, regridding and writing the COG; no shuffle;
+- `write_cogs_from_nodes` (the CLI on parquet tables or a max
+  variable, the scale legs): `groupBy('ts').applyInPandas` ships each
+  timestep's node values of a DataFrame to one task;
 - `write_cogs`: the groupBy ships an already regridded long table
   (ts, grid_row, grid_col, value) and the task pivots it (the
   streaming job, whose watermarked aggregation needs that table).
@@ -25,15 +30,20 @@ injectable for custom drivers.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans.grid import GridSpec
 from adcirctime2cogs_spark.plans.weights import WeightBands
+from adcirctime2cogs_spark.sources.netcdf import (
+    AdcircNetCDFDataSource,
+    decode_record,
+)
 
 # the reference's filename timestamp format (run/adcircTime2cogs.py:192)
 TS_FMT = "%Y%m%dT%H%M%SZ"
@@ -164,6 +174,64 @@ def write_cogs(
     )
 
 
+def regrid_nodes(
+    node: np.ndarray, val: np.ndarray, bands: WeightBands,
+    nrows: int, ncols: int,
+) -> tuple[np.ndarray, int]:
+    """ONE timestep's node values -> its (nrows, ncols) raster and the
+    number of cells the weights cover, against the per-band weight
+    arrays of plans/weights.build_band_weights. The only place a COG
+    pixel is computed.
+
+    The rows are (node id, value) pairs with no nulls; NaN values stay.
+    It sums the values of each node (`tot`, NaN where any is
+    NaN) and counts them (`cnt`), then a cell's value is
+    w0*tot[n0] + w1*tot[n1] + w2*tot[n2], published only where
+    cnt[n0] + cnt[n1] + cnt[n2] == 3. That is
+    plans/regrid.aggregate_cells' "exactly 3 contributions" rule, so
+    dry nodes and missing or duplicate node rows give nodata here too.
+    Node ids no triangle uses are ignored."""
+    n_nodes = bands.n_nodes
+    keep = (node >= 0) & (node < n_nodes)
+    node, val = node[keep], val[keep]
+    # counts above 3 only need to stay above 3: clipped to 4 they fit
+    # uint8, so the per-cell count sum costs 1 byte per cell
+    cnt = np.minimum(np.bincount(node, minlength=n_nodes), 4
+                     ).astype(np.uint8)
+    tot = np.bincount(node, weights=val, minlength=n_nodes)
+    arr = np.full(nrows * ncols, np.nan, dtype="float64")
+    n_cells = 0
+    for b in range(bands.count):
+        wt = bands.load(b)
+        value = wt["w0"] * tot[wt["n0"]]
+        value += wt["w1"] * tot[wt["n1"]]
+        value += wt["w2"] * tot[wt["n2"]]
+        value[cnt[wt["n0"]] + cnt[wt["n1"]] + cnt[wt["n2"]] != 3] = np.nan
+        # band-local cell index: scatter through a view of the band
+        arr[b * bands.rows * ncols:][wt["cell"]] = value
+        n_cells += len(value)
+    return arr.reshape(nrows, ncols), n_cells
+
+
+def _timestep_writer(
+    bands: WeightBands, spec: GridSpec, out_dir: str, prefix: str
+) -> Callable[..., pd.DataFrame]:
+    """The executor-side `write(ts, node, val)` that regrids one
+    timestep's node values (regrid_nodes), writes its COG and returns
+    its manifest row."""
+    os.makedirs(out_dir, exist_ok=True)
+    nrows, ncols = spec.ny - 1, spec.nx - 1
+    transform = _geotransform(spec)
+    w = default_writer()
+
+    def write(ts, node: np.ndarray, val: np.ndarray) -> pd.DataFrame:
+        arr, n_cells = regrid_nodes(node, val, bands, nrows, ncols)
+        return _write_raster(out_dir, prefix, ts, arr, n_cells, transform,
+                             "EPSG:4326", w)
+
+    return write
+
+
 def write_cogs_from_nodes(
     timeseries: DataFrame,
     bands: WeightBands,
@@ -171,62 +239,79 @@ def write_cogs_from_nodes(
     out_dir: str,
     prefix: str,
 ) -> DataFrame:
-    """Regrid and write one COG per distinct ts straight from the node
-    values (ts, node_id, value), against the per-band weight arrays of
-    plans/weights.build_band_weights. Returns a manifest DataFrame (ts,
-    path, n_cells) — an action the caller triggers.
+    """Regrid (regrid_nodes) and write one COG per distinct ts straight
+    from the node values (ts, node_id, value) of a DataFrame: a parquet
+    table, a max variable, the scale legs. Returns a manifest DataFrame
+    (ts, path, n_cells) — an action the caller triggers.
 
     The groupBy ships N node values per timestep. Null node ids and
     null values are dropped before it, as the join and count(value)
-    of plans/regrid.aggregate_cells drop them; NaN values stay. Per
-    timestep the task sums the values of each node (`tot`, NaN where
-    any is NaN) and counts them (`cnt`), then a cell's value is
-    w0*tot[n0] + w1*tot[n1] + w2*tot[n2], published only where
-    cnt[n0] + cnt[n1] + cnt[n2] == 3. That is aggregate_cells' "exactly
-    3 contributions" rule, so dry nodes and missing or duplicate node
-    rows give nodata here too. Node ids no triangle uses are ignored.
+    of plans/regrid.aggregate_cells drop them; NaN values stay.
 
     The kernel stage's task count follows from the shuffle size. AQE
     (`coalescePartitions.parallelismFirst`) merges adjacent partitions
     up to max(min(shuffle bytes / cores, 64 MB advisory),
     `minPartitionSize` = 1 MB), so at small sizes the 1 MB floor rules
-    and partitions under it are merged: the 770 kB
-    benchmark shuffle (6 timesteps) becomes 1 task that writes the 6
-    COGs in about 0.45 s. At HSOFS size a timestep is ~44 MB of node
-    values, nothing is merged, and the kernel gets at most
-    `shuffle.partitions` = cores tasks, ~timesteps / cores COGs each.
+    and partitions under it are merged: a 770 kB shuffle of 6
+    timesteps becomes 1 task that writes the 6 COGs one after another.
+    At HSOFS size a timestep is ~44 MB of node values, nothing is
+    merged, and the kernel gets at most `shuffle.partitions` = cores
+    tasks, ~timesteps / cores COGs each. A NetCDF record variable
+    skips all this: write_cogs_from_netcdf runs one task per timestep.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    nrows, ncols = spec.ny - 1, spec.nx - 1
-    transform = _geotransform(spec)
-    w = default_writer()
+    write = _timestep_writer(bands, spec, out_dir, prefix)
 
     def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_nodes = bands.n_nodes
-        node = pdf["node_id"].to_numpy(dtype="int64")
-        val = pdf["value"].to_numpy(dtype="float64")
-        keep = (node >= 0) & (node < n_nodes)
-        node, val = node[keep], val[keep]
-        # counts above 3 only need to stay above 3: clipped to 4 they
-        # fit uint8, so the per-cell count sum costs 1 byte per cell
-        cnt = np.minimum(np.bincount(node, minlength=n_nodes), 4
-                         ).astype(np.uint8)
-        tot = np.bincount(node, weights=val, minlength=n_nodes)
-        arr = np.full(nrows * ncols, np.nan, dtype="float64")
-        n_cells = 0
-        for b in range(bands.count):
-            wt = bands.load(b)
-            value = wt["w0"] * tot[wt["n0"]]
-            value += wt["w1"] * tot[wt["n1"]]
-            value += wt["w2"] * tot[wt["n2"]]
-            value[cnt[wt["n0"]] + cnt[wt["n1"]] + cnt[wt["n2"]] != 3] = np.nan
-            # band-local cell index: scatter through a view of the band
-            arr[b * bands.rows * ncols:][wt["cell"]] = value
-            n_cells += len(value)
-        return _write_raster(out_dir, prefix, pdf["ts"].iloc[0],
-                             arr.reshape(nrows, ncols), n_cells,
-                             transform, "EPSG:4326", w)
+        return write(pdf["ts"].iloc[0],
+                     pdf["node_id"].to_numpy(dtype="int64"),
+                     pdf["value"].to_numpy(dtype="float64"))
 
     return timeseries.where(
         F.col("node_id").isNotNull() & F.col("value").isNotNull()
     ).groupBy("ts").applyInPandas(write_one, schema=MANIFEST_SCHEMA)
+
+
+def write_cogs_from_netcdf(
+    spark: SparkSession,
+    records: list[list[tuple[str, int, int, int]]],
+    variable: str,
+    bands: WeightBands,
+    spec: GridSpec,
+    out_dir: str,
+    prefix: str,
+    source: type[AdcircNetCDFDataSource] = AdcircNetCDFDataSource,
+) -> list[Row]:
+    """Decode, regrid (regrid_nodes) and write one COG per record of a
+    NetCDF record variable in one map-only stage, with no shuffle: task
+    i of `spark.range(T, numPartitions=T).mapInArrow` decodes the byte
+    ranges of records[i] (sources/netcdf.plan_records) with `source`'s
+    range decoder, drops the filled (NaN) nodes, as write_cogs_from_nodes
+    drops scan_netcdf's nulls, and writes its COG. Runs the job and
+    returns the manifest rows (ts, path, n_cells).
+
+    Two records with one ts would race on one file name: a manifest
+    that holds a ts twice raises ValueError naming it, before the
+    caller writes sidecars or an archive."""
+    write = _timestep_writer(bands, spec, out_dir, prefix)
+    range_decoder = source._range_decoder
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                ts, node, val = decode_record(range_decoder, variable,
+                                              records[i])
+                keep = ~np.isnan(val)
+                yield pa.RecordBatch.from_pandas(
+                    write(ts.tz_convert(None), node[keep], val[keep]),
+                    preserve_index=False)
+
+    manifest = spark.range(len(records), numPartitions=len(records)
+                           ).mapInArrow(run, MANIFEST_SCHEMA).collect()
+    seen: set[str] = set()
+    for row in manifest:
+        if row.ts in seen:
+            raise ValueError(
+                f"{prefix}: two records carry ts {row.ts}; their COGs "
+                "share one file name")
+        seen.add(row.ts)
+    return manifest

@@ -29,6 +29,11 @@ codecs stream through the Spark 4 Python DataSource defined here:
 `spark.readStream.format("adcirc_netcdf")` over a directory of
 arriving files, once the caller registers `AdcircNetCDFDataSource`.
 
+`plan_records` groups the same splits by record for the CLI, whose
+one task per timestep decodes every split of its record
+(`decode_record`) straight into its regrid and COG
+(sinks/cog.write_cogs_from_netcdf).
+
 `write_static_tables` writes the mesh (and a time-less max variable)
 as sources/mesh.py parquet tables; `adcirc_nc_to_tables` adds the
 record variable's ts-partitioned table.
@@ -118,25 +123,30 @@ def plan_splits(splitter: Callable, path: str, length: int, variable: str):
     return splitter(path, length)
 
 
-def _decode_split(
-    range_decoder: Callable, path: str, variable: str,
-    t_idx: int, offset: int, nbytes: int,
-) -> pa.RecordBatch:
-    """ONE split -> one (ts, node_id, value) RecordBatch. Decoders
-    return naive UTC stamps (NetCDF time axes carry no zone) as
-    numpy.datetime64, datetime or pandas.Timestamp; NaN fill values
-    become SQL null (reference masked array semantics,
-    run/utilities/adcirc_utilities.py:30)."""
-    ts, node_ids, values = range_decoder(
-        path, variable, int(t_idx), int(offset), int(nbytes)
-    )
+def _normalize(ts, node_ids, values):
+    """A range decoder's (ts, node_ids, values) as (UTC pd.Timestamp,
+    int64 ids, float64 values, NaN where filled). Decoders return naive
+    UTC stamps (NetCDF time axes carry no zone) as numpy.datetime64,
+    datetime or pandas.Timestamp."""
     ts = pd.Timestamp(ts)
     ts = ts.tz_localize("UTC") if ts.tzinfo is None else ts.tz_convert("UTC")
-    values = np.asarray(values, dtype="float64")
     if isinstance(node_ids, range):
         ids = np.arange(node_ids.start, node_ids.stop, node_ids.step)
     else:
         ids = np.asarray(node_ids, dtype="int64")
+    return ts, ids, np.asarray(values, dtype="float64")
+
+
+def _decode_split(
+    range_decoder: Callable, path: str, variable: str,
+    t_idx: int, offset: int, nbytes: int,
+) -> pa.RecordBatch:
+    """ONE split -> one (ts, node_id, value) RecordBatch. NaN fill
+    values become SQL null (reference masked array semantics,
+    run/utilities/adcirc_utilities.py:30)."""
+    ts, ids, values = _normalize(*range_decoder(
+        path, variable, int(t_idx), int(offset), int(nbytes)
+    ))
     return pa.RecordBatch.from_arrays(
         [
             pa.array(np.full(len(values), ts.value // 1000, dtype="int64"),
@@ -146,6 +156,22 @@ def _decode_split(
         ],
         schema=_ARROW_SCHEMA,
     )
+
+
+def decode_record(
+    range_decoder: Callable, variable: str,
+    splits: list[tuple[str, int, int, int]],
+):
+    """All splits of ONE record (one plan_records group) -> (UTC ts,
+    node ids, values) with NaN where filled: the rows _decode_split
+    yields for those splits, in plan order, as arrays. The ts is the
+    first split's."""
+    parts = [
+        _normalize(*range_decoder(p, variable, int(t), int(off), int(nb)))
+        for p, t, off, nb in splits
+    ]
+    return (parts[0][0], np.concatenate([ids for _, ids, _ in parts]),
+            np.concatenate([vals for _, _, vals in parts]))
 
 
 def plan_scan(
@@ -177,6 +203,18 @@ def plan_scan(
             splitter, p, os.path.getsize(p), variable
         )
     ]
+
+
+def plan_records(
+    path: str, variable: str, splitter: Callable
+) -> list[list[tuple[str, int, int, int]]]:
+    """plan_scan's splits grouped by record, (path, t_idx), in plan
+    order: one list of byte ranges per timestep of each file, which a
+    single task decodes whole (sinks/cog.write_cogs_from_netcdf)."""
+    records: dict[tuple[str, int], list] = {}
+    for split in plan_scan(path, variable, splitter):
+        records.setdefault(split[:2], []).append(split)
+    return list(records.values())
 
 
 class AdcircNetCDFDataSource(DataSource):
@@ -368,8 +406,9 @@ def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
     layout): mesh_nodes / mesh_elements from the grid variables, plus
     node_maxes.parquet when `variable` is time-less (a max field).
     Returns True when `variable` is a record variable, which the
-    caller scans per timestep (scan_netcdf). Raises ValueError naming
-    the file's variables when `variable` is not one of them.
+    caller reads per timestep (plan_records, scan_netcdf). Raises
+    ValueError naming the file's variables when `variable` is not one
+    of them.
 
     This is the reference-parity ingest: extract_url_grid +
     get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
@@ -456,8 +495,8 @@ def adcirc_nc_to_tables(
     (sources/mesh.py layout): the static tables of
     write_static_tables, plus {variable}.parquet for a record variable,
     decoded by scan_netcdf. For callers that query the tables
-    repeatedly; the CLI scans the record variable straight into its
-    regrid instead."""
+    repeatedly; the CLI decodes each record straight into its regrid
+    instead."""
     if write_static_tables(nc_path, out_dir, variable):
         # ts-partitioned: the O5 time-slice pruning story depends on
         # it (a flat directory would scan every row group for any ts

@@ -454,7 +454,10 @@ def masked_to_nan(arr: np.ndarray, v: NC3Var) -> np.ndarray:
 # decode tasks are CPU-light (frombuffer + mask), so smaller splits
 # win on parallelism long before scheduling overhead bites: an HSOFS
 # record (14.6 MB) planned at 4 MB = 4 tasks/record — measured 2.1-3.4s
-# vs 14s unsplit for a 2-record file on local[32]
+# vs 14s unsplit for a 2-record file on local[32]. That serves
+# scan_netcdf's callers (adcirc_nc_to_tables, the scale legs); the
+# CLI's one task per record (sinks/cog.write_cogs_from_netcdf) reads
+# all of a record's sub-splits itself
 MAX_SPLIT_BYTES = 4 * 1024 * 1024
 
 

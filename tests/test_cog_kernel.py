@@ -1,11 +1,15 @@
-"""The CLI's node-value COG kernel (sinks/cog.write_cogs_from_nodes,
-driven by pipeline.main / run_pipeline) against the long-table path
+"""The CLI's node-value COG kernel (sinks/cog.regrid_nodes, driven by
+pipeline.main / run_pipeline) against the long-table path
 write_cogs(regrid(...)) on the same inputs: the same file names, the
 same nodata pattern, and pixels within 4 ulp of the largest node value
-(the old path sums its 3 terms in no fixed order)."""
+(the old path sums its 3 terms in no fixed order). The CLI's one task
+per .nc timestep (write_cogs_from_netcdf) against the DataFrame entry
+write_cogs_from_nodes(scan_netcdf(...)): byte-identical COGs."""
 
+import hashlib
 import importlib.util
 import os
+import pathlib
 import sys
 
 import numpy as np
@@ -20,11 +24,25 @@ from adcirctime2cogs_spark.plans.grid import (
     raster_cells,
 )
 from adcirctime2cogs_spark.plans.regrid import regrid
-from adcirctime2cogs_spark.plans.weights import build_weights
-from adcirctime2cogs_spark.sinks.cog import write_cogs
+from adcirctime2cogs_spark.plans.weights import (
+    build_band_weights,
+    build_weights,
+    triangle_arrays,
+)
+from adcirctime2cogs_spark.sinks.cog import write_cogs, write_cogs_from_nodes
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
-from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
-from adcirctime2cogs_spark.sources.netcdf import scan_netcdf
+from adcirctime2cogs_spark.sources import netcdf3 as nc3
+from adcirctime2cogs_spark.sources.mesh import (
+    load_mesh,
+    load_timeseries,
+    read_mesh_arrays,
+)
+from adcirctime2cogs_spark.sources.netcdf import (
+    AdcircNetCDFDataSource,
+    _default_range_decoder,
+    plan_records,
+    scan_netcdf,
+)
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -213,3 +231,108 @@ def test_weights_arrays_removed_when_the_sink_fails(spark, tmp_path,
         run_pipeline(spark, base, str(tmp_path / "o"), str(tmp_path / "f"),
                      variable="zeta", res=0.4)
     assert not os.path.exists(tmp_path / "o" / "_weights")
+
+
+def _cli(in_dir, out, final, res):
+    return main([
+        "--input-dir", str(in_dir), "--output-dir", str(out),
+        "--final-dir", str(final), "--input-file", "fort.63.nc",
+        "--input-variable", "zeta", "--res", str(res),
+    ])
+
+
+def _tif_sha256(d):
+    return {f: hashlib.sha256(pathlib.Path(d, f).read_bytes()).hexdigest()
+            for f in sorted(os.listdir(d)) if f.endswith(".tif")}
+
+
+def _assert_cli_equals_scan_path(spark, tmp_path, res):
+    """The CLI on in/fort.63.nc against write_cogs_from_nodes over
+    scan_netcdf of the same file and weights of the same grid:
+    byte-identical COGs under the same names. Every record must span
+    more than one split."""
+    nc = str(tmp_path / "in" / "fort.63.nc")
+    assert all(len(r) > 1 for r in plan_records(
+        nc, "zeta", AdcircNetCDFDataSource._splitter))
+    out = tmp_path / "o"
+    assert _cli(tmp_path / "in", out, tmp_path / "f", res) == 0
+    node_id, lon, lat, elements = read_mesh_arrays(str(out / "_tables"))
+    spec = grid_spec_from_bbox(
+        {"lon_min": float(lon.min()), "lon_max": float(lon.max()),
+         "lat_min": float(lat.min()), "lat_max": float(lat.max())}, res)
+    bands = build_band_weights(
+        spark, triangle_arrays(node_id, lon, lat, elements), spec,
+        str(tmp_path / "w"))
+    write_cogs_from_nodes(scan_netcdf(spark, nc, "zeta"), bands, spec,
+                          str(tmp_path / "scan"), "zeta").collect()
+    cli = _tif_sha256(out / "zeta")
+    assert len(cli) == 3
+    assert cli == _tif_sha256(tmp_path / "scan")
+
+
+def test_cli_equals_scan_path_on_subsplit_classic_records(
+    spark, tmp_path, monkeypatch
+):
+    """Classic records cut into node-range splits: the CLI's task reads
+    every sub-split of its record."""
+    inputs = _perfbench_inputs()
+    (tmp_path / "in").mkdir()
+    inputs.write_fort63(str(tmp_path / "in" / "fort.63.nc"),
+                        inputs.make_mesh(5, 24, 20, 0.6, 0.5, 3))
+    monkeypatch.setattr(
+        AdcircNetCDFDataSource, "_splitter",
+        staticmethod(lambda path, ln, var: nc3.classic_splitter(
+            path, ln, var, max_split_bytes=1024)))
+    _assert_cli_equals_scan_path(spark, tmp_path, 0.01)
+
+
+def test_cli_equals_scan_path_on_nc4_chunked_records(spark, tmp_path):
+    """NetCDF-4 with 3 compressed chunks per record."""
+    from tests.test_hdf5 import _write_micromesh_nc4
+
+    (tmp_path / "in").mkdir()
+    _write_micromesh_nc4(str(tmp_path / "in" / "fort.63.nc"), node_chunk=2)
+    _assert_cli_equals_scan_path(spark, tmp_path, 0.4)
+
+
+def test_cli_equals_scan_path_on_fill_value_nodes(
+    spark, tmp_path, monkeypatch
+):
+    """The micromesh classic file, whose dry node at t2 is _FillValue,
+    split into 2 node ranges per record."""
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    (tmp_path / "in").mkdir()
+    _write_micromesh_nc(str(tmp_path / "in" / "fort.63.nc"))
+    monkeypatch.setattr(
+        AdcircNetCDFDataSource, "_splitter",
+        staticmethod(lambda path, ln, var: nc3.classic_splitter(
+            path, ln, var, max_split_bytes=24)))
+    _assert_cli_equals_scan_path(spark, tmp_path, 0.4)
+    t1, t2, _ = (read_geotiff(str(tmp_path / "o" / "zeta" / f))[0]
+                 for f in sorted(_tif_sha256(tmp_path / "o" / "zeta")))
+    assert np.isnan(t2).sum() > np.isnan(t1).sum()  # the dry node
+
+
+def test_two_records_with_one_ts_raise_before_sidecars_and_zip(
+    spark, tmp_path, monkeypatch
+):
+    """Two records that decode to one ts would write one file name:
+    the CLI raises ValueError naming the ts, and writes no sidecars
+    and no zip."""
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    def one_ts_for_two_records(path, variable, t_idx, offset, nbytes):
+        ts, ids, values = _default_range_decoder(
+            path, variable, t_idx, offset, nbytes)
+        return (mm.T1 if t_idx == 1 else ts), ids, values
+
+    (tmp_path / "in").mkdir()
+    _write_micromesh_nc(str(tmp_path / "in" / "fort.63.nc"))
+    monkeypatch.setattr(AdcircNetCDFDataSource, "_range_decoder",
+                        staticmethod(one_ts_for_two_records))
+    with pytest.raises(ValueError, match=f"ts {mm.T1}"):
+        _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4)
+    assert all(f.endswith(".tif")
+               for f in os.listdir(tmp_path / "o" / "zeta"))
+    assert not os.path.exists(tmp_path / "f")

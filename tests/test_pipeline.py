@@ -255,40 +255,68 @@ def test_pipeline_cli_unknown_nc_variable_exits_1(tmp_path, capsys):
     assert "Traceback" not in err
 
 
-def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
-    spark, tmp_path, monkeypatch
-):
-    """The CLI reads a .nc record variable through scan_netcdf alone:
-    the timeseries plan the COG sink consumes is a MapInArrow over a
-    Range, with no DataSource BatchScan, no binaryFile scan and no
-    round-robin exchange."""
+def _cli_nc_jobs(spark, in_dir, out_root, groups):
+    """Run the CLI on in_dir/fort.63.nc once per job group; returns
+    the status tracker."""
     from adcirctime2cogs_spark import pipeline
+
+    sc = spark.sparkContext
+    try:
+        for group in groups:
+            sc.setJobGroup(group, "CLI job")
+            assert pipeline.main([
+                "--input-dir", str(in_dir),
+                "--output-dir", str(out_root / group / "o"),
+                "--final-dir", str(out_root / group / "f"),
+                "--input-file", "fort.63.nc",
+                "--input-variable", "zeta",
+                "--res", "0.4",
+            ]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker()
+
+
+def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
+    spark, tmp_path
+):
+    """The CLI reads a .nc record variable in its COG job alone: that
+    job's plan is a MapInArrow over a Range, with no exchange, no
+    DataSource BatchScan, no binaryFile scan and no round-robin
+    exchange."""
     from tests.test_netcdf3 import _write_micromesh_nc
 
-    plans = []
-    sink = pipeline.write_cogs_from_nodes
-
-    def spy(timeseries, *args, **kwargs):
-        plans.append(timeseries._jdf.queryExecution().toString())
-        return sink(timeseries, *args, **kwargs)
-
-    monkeypatch.setattr(pipeline, "write_cogs_from_nodes", spy)
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     _write_micromesh_nc(str(in_dir / "fort.63.nc"))
-    assert pipeline.main([
-        "--input-dir", str(in_dir),
-        "--output-dir", str(tmp_path / "o"),
-        "--final-dir", str(tmp_path / "f"),
-        "--input-file", "fort.63.nc",
-        "--input-variable", "zeta",
-        "--res", "0.4",
-    ]) == 0
+    st = _cli_nc_jobs(spark, in_dir, tmp_path, ["plan-shape"])
+    plans = _plans_of_jobs(spark, [max(st.getJobIdsForGroup("plan-shape"))])
     assert len(plans) == 1
+    assert "n_cells" in plans[0]  # the COG job's manifest schema
     assert "MapInArrow" in plans[0] and "Range (0, " in plans[0]
+    assert "Exchange" not in plans[0]
     assert "BatchScan" not in plans[0]
     assert "binaryFile" not in plans[0]
     assert "RoundRobinPartitioning" not in plans[0]
+
+
+def test_warm_nc_cli_job_runs_two_jobs_one_task_per_timestep(
+    spark, tmp_path
+):
+    """A warm CLI job on a .nc record variable runs exactly 2 Spark
+    jobs: the weights, then one stage of one task per timestep that
+    decodes, regrids and writes each COG."""
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_micromesh_nc(str(in_dir / "fort.63.nc"))  # 3 timesteps
+    st = _cli_nc_jobs(spark, in_dir, tmp_path, ["nc-cold", "nc-warm"])
+    jobs = sorted(st.getJobIdsForGroup("nc-warm"))
+    assert len(jobs) == 2
+    stages = st.getJobInfo(jobs[1]).stageIds
+    assert len(stages) == 1
+    assert st.getStageInfo(stages[0]).numTasks == 3
 
 
 def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):

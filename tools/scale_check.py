@@ -907,7 +907,10 @@ def run_production_e2e_leg(
     CLI dataflow (pipeline.run_pipeline): bbox -> 8838x8000-edge grid
     (the reference's production raster, run/adcircTime2cogs.py:151-158)
     -> weights -> all-ts regrid -> REAL pure-Python COG bytes at
-    8837x7999 = 70.66M pixels/timestep -> mosaic sidecars -> zip.
+    8837x7999 = 70.66M pixels/timestep -> mosaic sidecars -> zip. Then
+    the CLI (pipeline.main) on the same fort.63.nc, which decodes,
+    regrids and writes one task per record with no staging: its COGs
+    must be sha256-identical to the staged run's.
 
     zeta is a linear field (4*lon - 7*lat + 2 + t), so barycentric
     interpolation is EXACT: every non-nodata pixel of the final COG
@@ -916,13 +919,14 @@ def run_production_e2e_leg(
     Records per-phase wall plus driver peak RSS — this leg is the
     scale proof for the COG writer at 70.7M-pixel images, the one
     surface the synthetic legs never exercised."""
+    import hashlib
     import resource
     import shutil
     import tempfile
 
     import numpy as np
 
-    from adcirctime2cogs_spark.pipeline import run_pipeline
+    from adcirctime2cogs_spark.pipeline import main, run_pipeline
     from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
     from adcirctime2cogs_spark.sources import netcdf3 as nc3
     from adcirctime2cogs_spark.sources.netcdf import adcirc_nc_to_tables
@@ -1007,10 +1011,33 @@ def run_production_e2e_leg(
                 )
         coverage = checked / (len(cogs) * nrows * ncols)
         t_verify = time.time() - t0
+        # the staged run's peak, before the CLI phase below adds its own
+        peak_rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+
+        # ---- the CLI straight from the .nc ---------------------------
+        t0 = time.time()
+        rc = main([
+            "--input-dir", work, "--output-dir", f"{work}/out_nc",
+            "--final-dir", f"{work}/final_nc", "--input-file", "fort.63.nc",
+            "--input-variable", "zeta", "--res", str(res),
+        ])
+        t_nc_direct = time.time() - t0
+
+        def sha256s(paths):
+            out = []
+            for path in paths:
+                h = hashlib.sha256()
+                with open(path, "rb") as fh:
+                    for block in iter(lambda: fh.read(1 << 24), b""):
+                        h.update(block)
+                out.append((path.rsplit("/", 1)[1], h.hexdigest()))
+            return out
+
+        nc_direct_identical = rc == 0 and sha256s(cogs) == sha256s(
+            sorted(_glob.glob(f"{work}/out_nc/zeta/zeta.*")))
 
         import os as _os
 
-        peak_rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
         cog_bytes = sum(_os.path.getsize(p) for p in cogs)
         return {
             "leg": "production_e2e_hsofs",
@@ -1030,11 +1057,14 @@ def run_production_e2e_leg(
             "wall_pipeline": round(t_pipeline, 2),
             "pipeline_phases": result.timings,
             "wall_verify": round(t_verify, 2),
+            "wall_nc_direct": round(t_nc_direct, 2),
+            "nc_direct_identical": nc_direct_identical,
             "cells_per_sec": int(len(cogs) * nrows * ncols / t_pipeline),
             "driver_peak_rss_mb": int(peak_rss_mb),
             "violations": violations
             + int(len(cogs) != n_ts)
-            + int(not result.archive),
+            + int(not result.archive)
+            + int(not nc_direct_identical),
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
