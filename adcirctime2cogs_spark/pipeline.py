@@ -55,6 +55,7 @@ from adcirctime2cogs_spark.plans.weights import (
     triangle_arrays,
 )
 from adcirctime2cogs_spark.sinks.cog import (
+    DuplicateTimestepError,
     write_cogs_from_netcdf,
     write_cogs_from_nodes,
 )
@@ -99,8 +100,9 @@ def run_pipeline(
     its byte-range splits are planned here, before any Spark job, and
     each timestep is decoded, regridded and written by one task
     (sinks/cog.write_cogs_from_netcdf; two records with one ts raise
-    ValueError before the sidecars and the zip). Otherwise they are
-    the variable's table in input_dir (sources/mesh.load_timeseries)."""
+    DuplicateTimestepError, a ValueError, before the sidecars and the
+    zip, and main exits 1). Otherwise they are the variable's table in
+    input_dir (sources/mesh.load_timeseries)."""
     timings: dict[str, float] = {}
     t0 = time.time()
     node_id, lon, lat, elements = read_mesh_arrays(input_dir)
@@ -292,16 +294,20 @@ def main(argv: list[str] | None = None) -> int:
     from adcirctime2cogs_spark.session import get_spark
 
     spark = get_spark(app_name="adcirctime2cogs_pipeline")
-    result = run_pipeline(
-        spark,
-        base_dir,
-        args.output_dir,
-        args.final_dir,
-        args.input_variable,
-        args.res,
-        s3_bucket=args.s3_bucket,
-        nc_path=nc_input if record_nc else None,
-    )
+    try:
+        result = run_pipeline(
+            spark,
+            base_dir,
+            args.output_dir,
+            args.final_dir,
+            args.input_variable,
+            args.res,
+            s3_bucket=args.s3_bucket,
+            nc_path=nc_input if record_nc else None,
+        )
+    except DuplicateTimestepError as exc:  # two records, one ts
+        print(exc, file=sys.stderr)
+        return 1
     print(
         f"wrote {result.n_timesteps} COGs ({result.n_cells} cells) to "
         f"{result.cog_dir}; archive {result.archive}"

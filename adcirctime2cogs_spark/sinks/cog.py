@@ -271,6 +271,10 @@ def write_cogs_from_nodes(
     ).groupBy("ts").applyInPandas(write_one, schema=MANIFEST_SCHEMA)
 
 
+class DuplicateTimestepError(ValueError):
+    """Two records of one NetCDF input carry the same ts."""
+
+
 def write_cogs_from_netcdf(
     spark: SparkSession,
     records: list[list[tuple[str, int, int, int]]],
@@ -279,21 +283,22 @@ def write_cogs_from_netcdf(
     spec: GridSpec,
     out_dir: str,
     prefix: str,
-    source: type[AdcircNetCDFDataSource] = AdcircNetCDFDataSource,
 ) -> list[Row]:
     """Decode, regrid (regrid_nodes) and write one COG per record of a
     NetCDF record variable in one map-only stage, with no shuffle: task
     i of `spark.range(T, numPartitions=T).mapInArrow` decodes the byte
-    ranges of records[i] (sources/netcdf.plan_records) with `source`'s
-    range decoder, drops the filled (NaN) nodes, as write_cogs_from_nodes
+    ranges of records[i] (sources/netcdf.plan_records, planned with
+    AdcircNetCDFDataSource._splitter) with the same class's range
+    decoder, drops the filled (NaN) nodes, as write_cogs_from_nodes
     drops scan_netcdf's nulls, and writes its COG. Runs the job and
     returns the manifest rows (ts, path, n_cells).
 
     Two records with one ts would race on one file name: a manifest
-    that holds a ts twice raises ValueError naming it, before the
-    caller writes sidecars or an archive."""
+    that holds a ts twice raises DuplicateTimestepError (a ValueError)
+    naming it, before the caller writes sidecars or an archive. The
+    COGs the job wrote stay in out_dir."""
     write = _timestep_writer(bands, spec, out_dir, prefix)
-    range_decoder = source._range_decoder
+    range_decoder = AdcircNetCDFDataSource._range_decoder
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -310,7 +315,7 @@ def write_cogs_from_netcdf(
     seen: set[str] = set()
     for row in manifest:
         if row.ts in seen:
-            raise ValueError(
+            raise DuplicateTimestepError(
                 f"{prefix}: two records carry ts {row.ts}; their COGs "
                 "share one file name")
         seen.add(row.ts)

@@ -315,11 +315,11 @@ def test_cli_equals_scan_path_on_fill_value_nodes(
 
 
 def test_two_records_with_one_ts_raise_before_sidecars_and_zip(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, capsys
 ):
     """Two records that decode to one ts would write one file name:
-    the CLI raises ValueError naming the ts, and writes no sidecars
-    and no zip."""
+    the CLI prints the error naming the ts, with no traceback, exits 1
+    and writes no sidecars and no zip."""
     from tests.test_netcdf3 import _write_micromesh_nc
 
     def one_ts_for_two_records(path, variable, t_idx, offset, nbytes):
@@ -331,8 +331,10 @@ def test_two_records_with_one_ts_raise_before_sidecars_and_zip(
     _write_micromesh_nc(str(tmp_path / "in" / "fort.63.nc"))
     monkeypatch.setattr(AdcircNetCDFDataSource, "_range_decoder",
                         staticmethod(one_ts_for_two_records))
-    with pytest.raises(ValueError, match=f"ts {mm.T1}"):
-        _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4)
+    assert _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4) == 1
+    err = capsys.readouterr().err
+    assert f"ts {mm.T1}" in err
+    assert "Traceback" not in err
     assert all(f.endswith(".tif")
                for f in os.listdir(tmp_path / "o" / "zeta"))
     assert not os.path.exists(tmp_path / "f")

@@ -380,8 +380,8 @@ def test_warm_cli_job_builds_weights_in_one_map_only_stage(
 ):
     """A warm CLI job on the micromesh .nc builds its weights in one
     Spark job of one stage, with no exchange and no join, and runs at
-    most 3 Spark jobs in all (the weights, then the COG kernel's
-    shuffle and result stages)."""
+    most 3 Spark jobs in all (the weights, then the one-task-per-
+    timestep COG stage: 2 jobs)."""
     from adcirctime2cogs_spark import pipeline
     from tests.test_netcdf3 import _write_micromesh_nc
 
