@@ -2,13 +2,15 @@
 (run/adcircTime2cogs.py:242-279 argparse -> main() :121-240).
 
     mesh tables -> driver arrays -> bbox -> grid spec
-      -> weights (one map-only Spark stage, one task per row band)
+      -> weights laid out as row bands, each built once by a task
       node values -> one task per ts: regrid + COG -> mosaic
       sidecars -> zip
 
-On a .nc record variable, two Spark jobs in all, each one map-only
-stage: the weights, then one task per timestep that decodes, regrids
-and writes (parquet input adds the groupBy's shuffle stage).
+On a .nc record variable, one Spark job of one map-only stage in all:
+max(timesteps, bands) tasks that build the weight bands and decode,
+regrid and write one timestep each. Parquet input and max variables
+build the bands in a map-only stage of their own first and add the
+groupBy's shuffle stage.
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
 - one Spark job regrids and writes every timestep, one task per
@@ -18,12 +20,13 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
 - weights computed once and reused across every timestep (the
   reference rebuilds its interpolator per step, P6). The driver reads
   the mesh tables with pyarrow (sources/mesh.read_mesh_arrays), takes
-  the bbox with numpy and writes the triangles once as arrays; each
-  task of one `spark.range(bands).mapInArrow` stage rasterizes one band
-  of raster rows in closed form and writes that band's weight arrays
-  (plans/weights.build_band_weights). No join, no shuffle, no parquet
-  round trip; the registry and streaming paths run the same kernel as
-  a DataFrame (plans/weights.weights_table);
+  the bbox with numpy, lays the raster rows out as bands and writes
+  the triangles once as arrays (plans/weights.prepare_band_weights);
+  the first task that needs a band rasterizes it in closed form and
+  writes its weight arrays, under a per-band file lock
+  (plans/weights.ensure_band). No join, no shuffle, no parquet round
+  trip; the registry and streaming paths run the same kernel as a
+  DataFrame (plans/weights.weights_table);
 - input is either the engine-native parquet layout (sources/mesh.py)
   or one fort.*.nc: its mesh becomes parquet tables
   (sources/netcdf.write_static_tables) and its record variable is
@@ -52,6 +55,7 @@ from pyspark.sql import SparkSession
 from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
 from adcirctime2cogs_spark.plans.weights import (
     build_band_weights,
+    prepare_band_weights,
     triangle_arrays,
 )
 from adcirctime2cogs_spark.sinks.cog import (
@@ -92,8 +96,10 @@ def run_pipeline(
 ) -> PipelineResult:
     """The whole dataflow; returns a small result summary (files are
     the real output, like the reference) plus per-phase wall timings
-    (weights build / regrid+COG / sidecars+zip) so scale runs can
-    attribute cost without re-instrumenting.
+    (load_bbox / weights / regrid_cog / sidecar_zip) so scale runs can
+    attribute cost without re-instrumenting. On a .nc record variable
+    the weight bands are built inside the COG stage, so `timings` has
+    no `weights` key there and `regrid_cog` covers both.
 
     The mesh comes from input_dir. The node values are the record
     variable `variable` of the NetCDF file(s) at `nc_path` when given:
@@ -123,14 +129,15 @@ def run_pipeline(
     weights_dir = os.path.join(output_dir, "_weights")
     try:
         # O11 + O13-O15, once (P6)
-        bands = build_band_weights(spark, tris, spec, weights_dir)
-        timings["weights"] = round(time.time() - t0, 2)
-        t0 = time.time()
         if nc_path is not None:  # O1-O6 + O16-O17 + O20
+            bands = prepare_band_weights(spark, tris, spec, weights_dir)
             manifest = write_cogs_from_netcdf(
                 spark, records, variable, bands, spec, cog_dir,
                 prefix=variable)
         else:  # O16-O17 + O20
+            bands = build_band_weights(spark, tris, spec, weights_dir)
+            timings["weights"] = round(time.time() - t0, 2)
+            t0 = time.time()
             manifest = write_cogs_from_nodes(
                 timeseries, bands, spec, cog_dir, prefix=variable
             ).collect()

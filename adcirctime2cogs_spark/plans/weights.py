@@ -17,19 +17,24 @@ are outside the mesh domain: the reference's ones-interpolation mask
 One kernel builds it for every caller: on a regular raster the pixel
 centres inside a triangle's bbox are a closed-form row and column
 range. The raster rows are cut into bands (`band_layout`) and one
-map-only Spark stage runs one task per band
-(`spark.range(bands).mapInArrow`). Each task explodes the candidate
+Spark task builds each band. Each task explodes the candidate
 centres of the triangles that reach its band, applies the barycentric
 sign test and the min-elem_id pick in numpy (`band_weights`). No cell
 spans two bands, so the pick needs no shuffle. Two forms share it:
 
 - `weights_table` yields the band's rows as a DataFrame (the registry,
-  synthetic, streaming and scale-leg callers), the triangles riding in
-  the task closure;
-- `build_band_weights`, the CLI's form, writes each band's rows as .npy
-  arrays for the COG kernel (sinks/cog.regrid_nodes), the
-  triangles memory-mapped from disk, and no weight row passes through
-  the driver.
+  synthetic, streaming and scale-leg callers) from one map-only
+  `spark.range(bands).mapInArrow` stage, the triangles riding in the
+  task closure;
+- the CLI's form writes each band's rows as .npy arrays for the COG
+  kernel (sinks/cog.regrid_nodes), the triangles memory-mapped from
+  disk, and no weight row passes through the driver. The driver only
+  lays the bands out (`prepare_band_weights`); `ensure_band` builds a
+  band the first time a task needs it, under a per-band file lock. On
+  a NetCDF record variable the COG stage's own tasks build them
+  (sinks/cog.write_cogs_from_netcdf), with no Spark job of their own;
+  other inputs prefetch every band in one stage first
+  (`build_band_weights`).
 
 `build_weights`, a Spark SQL join of raster centroids and triangles on
 a spatial bin, is the reference both forms are tested against row for
@@ -40,6 +45,7 @@ identical either way, determinism is what matters.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import uuid
 from dataclasses import dataclass
@@ -309,7 +315,7 @@ def weights_table(
     `tris` (triangle_arrays) rides in the task closure: PySpark
     broadcasts a pickled command over 1 MB on its own. (At HSOFS size
     that is ~290 MB per Python worker, so the CLI memory-maps its
-    triangles from disk instead: build_band_weights.)"""
+    triangles from disk instead: prepare_band_weights.)"""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -338,13 +344,15 @@ def weights_table(
 @dataclass(frozen=True)
 class WeightBands:
     """The CLI's weights on disk: `count` bands of `rows` raster rows
-    each (the last may be shorter), BAND_ARRAYS per band under `dir`,
-    and the node-id bound of the triangles (largest vertex id + 1)."""
+    each (the last may be shorter) of spec's raster, BAND_ARRAYS per
+    band under `dir`, and the node-id bound of the triangles (largest
+    vertex id + 1)."""
 
     dir: str
     rows: int
     count: int
     n_nodes: int
+    spec: GridSpec
 
     def path(self, band: int, name: str) -> str:
         return os.path.join(self.dir, f"band{band:05d}.{name}.npy")
@@ -369,7 +377,7 @@ def _save_atomic(path: str, arr: np.ndarray) -> None:
 
 def write_band(bands: WeightBands, spec: GridSpec, band: int) -> None:
     """Executor-side: rasterize one band against the triangle arrays
-    under bands.dir and write its BAND_ARRAYS."""
+    under bands.dir and write its BAND_ARRAYS, in order."""
     tris = {name: np.load(os.path.join(bands.dir, f"{name}.npy"),
                           mmap_mode="r")
             for name in TRIANGLE_ARRAYS}
@@ -380,28 +388,67 @@ def write_band(bands: WeightBands, spec: GridSpec, band: int) -> None:
         _save_atomic(bands.path(band, name), arrays[name])
 
 
+def ensure_band(bands: WeightBands, band: int) -> dict[str, np.ndarray]:
+    """Executor-side: one band's arrays (WeightBands.load), built first
+    (write_band) if no task has built them yet. The only place a band
+    is built.
+
+    write_band saves BAND_ARRAYS in order, each atomically, so a band
+    is complete once its last array exists: then no lock is taken.
+    Otherwise the task takes an exclusive fcntl.flock on
+    `band<NNNNN>.lock` under bands.dir, checks again and builds. So
+    each band is built once, and a waiter only ever waits on a running
+    holder; a holder killed mid-band drops its lock with its process
+    and leaves no last array, so the next holder rebuilds the whole
+    band. A task holds at most one lock and waits on nothing while it
+    holds it, so tasks that share bands cannot deadlock. The lock rests
+    on the shared-storage assumption of bands.dir
+    (prepare_band_weights); Linux NFSv4 clients emulate flock with
+    POSIX byte-range locks."""
+    done = bands.path(band, BAND_ARRAYS[-1])
+    if not os.path.exists(done):
+        lock = os.path.join(bands.dir, f"band{band:05d}.lock")
+        with open(lock, "a") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)  # released on close
+            if not os.path.exists(done):
+                write_band(bands, bands.spec, band)
+    return bands.load(band)
+
+
+def prepare_band_weights(
+    spark: SparkSession, tris: dict[str, np.ndarray], spec: GridSpec,
+    weights_dir: str,
+) -> WeightBands:
+    """Driver-only, no Spark job: lay the CLI's weights out as bands of
+    raster rows (band_layout) under weights_dir and write the triangle
+    arrays (triangle_arrays) there once for the tasks that build the
+    bands (ensure_band). weights_dir rests on the same shared-storage
+    assumption as the COG output dir."""
+    rows, count = band_layout(spark, spec)
+    n_nodes = int(tris["tri_n"].max()) + 1 if tris["tri_n"].size else 0
+    os.makedirs(weights_dir, exist_ok=True)
+    for name in TRIANGLE_ARRAYS:
+        np.save(os.path.join(weights_dir, f"{name}.npy"), tris[name])
+    return WeightBands(weights_dir, rows, count, n_nodes, spec)
+
+
 def build_band_weights(
     spark: SparkSession, tris: dict[str, np.ndarray], spec: GridSpec,
     weights_dir: str,
 ) -> WeightBands:
-    """The CLI's weights table as per-band arrays under weights_dir, in
-    one map-only Spark stage: `spark.range(bands)`, one task per band
-    (band_layout), each running band_weights. No join, no shuffle, and
-    no row goes through task results. The triangle arrays
-    (triangle_arrays) are written once under weights_dir for the tasks
-    to read, so weights_dir rests on the same shared-storage assumption
-    as the COG output dir."""
-    rows, count = band_layout(spark, spec)
-    n_nodes = int(tris["tri_n"].max()) + 1 if tris["tri_n"].size else 0
-    bands = WeightBands(weights_dir, rows, count, n_nodes)
-    os.makedirs(weights_dir, exist_ok=True)
-    for name in TRIANGLE_ARRAYS:
-        np.save(os.path.join(weights_dir, f"{name}.npy"), tris[name])
+    """prepare_band_weights, then build every band in one map-only
+    Spark stage: `spark.range(bands)`, one task per band, each running
+    ensure_band. No join, no shuffle, and no row goes through task
+    results. Serves the COG kernel's DataFrame entry
+    (sinks/cog.write_cogs_from_nodes); a NetCDF record variable skips
+    this stage, as its per-timestep tasks build the bands themselves
+    (sinks/cog.write_cogs_from_netcdf)."""
+    bands = prepare_band_weights(spark, tris, spec, weights_dir)
 
     def run(batches):
         for batch in batches:
             for band in batch.column(0).to_pylist():
-                write_band(bands, spec, band)
+                ensure_band(bands, band)
             yield batch
 
     spark.range(0, bands.count, 1, bands.count).mapInArrow(

@@ -6,14 +6,16 @@ datacube+GDAL). Here Spark fans out ONE TASK PER TIMESTEP; each task
 builds its dense 2-D array and writes its own file — embarrassingly
 parallel, and GDAL never sees a shared file (SURVEY §7 "what's hard").
 A timestep's node values become its raster in `regrid_nodes` alone,
-against the per-band weight arrays that
-plans/weights.build_band_weights wrote once — per band a gather, a
-dot with the barycentric weights and a scatter into the raster. Three
-entry points:
+against the per-band weight arrays of plans/weights, each built once
+by whichever task first needs it (plans/weights.ensure_band) — per
+band a gather, a dot with the barycentric weights and a scatter into
+the raster. Three entry points:
 
-- `write_cogs_from_netcdf` (the CLI on a .nc record variable): one
-  map-only stage, one task per record, each decoding its record's
-  byte ranges, regridding and writing the COG; no shuffle;
+- `write_cogs_from_netcdf` (the CLI on a .nc record variable): the
+  whole job is one map-only stage, one task per record (and at least
+  one per band), each building its share of the weight bands,
+  decoding its record's byte ranges, regridding and writing the COG;
+  no shuffle;
 - `write_cogs_from_nodes` (the CLI on parquet tables or a max
   variable, the scale legs): `groupBy('ts').applyInPandas` ships each
   timestep's node values of a DataFrame to one task;
@@ -39,7 +41,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans.grid import GridSpec
-from adcirctime2cogs_spark.plans.weights import WeightBands
+from adcirctime2cogs_spark.plans.weights import WeightBands, ensure_band
 from adcirctime2cogs_spark.sources.netcdf import (
     AdcircNetCDFDataSource,
     decode_record,
@@ -175,13 +177,15 @@ def write_cogs(
 
 
 def regrid_nodes(
-    node: np.ndarray, val: np.ndarray, bands: WeightBands,
-    nrows: int, ncols: int,
+    node: np.ndarray, val: np.ndarray, bands: WeightBands, first: int = 0,
 ) -> tuple[np.ndarray, int]:
-    """ONE timestep's node values -> its (nrows, ncols) raster and the
+    """ONE timestep's node values -> its raster of bands.spec and the
     number of cells the weights cover, against the per-band weight
-    arrays of plans/weights.build_band_weights. The only place a COG
-    pixel is computed.
+    arrays, each read through plans/weights.ensure_band (which builds a
+    band no task has built yet). The only place a COG pixel is
+    computed. The bands are walked from band `first` on, wrapping
+    around, so tasks that start at different bands build different
+    ones; bands are disjoint, so the order changes no pixel.
 
     The rows are (node id, value) pairs with no nulls; NaN values stay.
     It sums the values of each node (`tot`, NaN where any is
@@ -191,6 +195,7 @@ def regrid_nodes(
     plans/regrid.aggregate_cells' "exactly 3 contributions" rule, so
     dry nodes and missing or duplicate node rows give nodata here too.
     Node ids no triangle uses are ignored."""
+    nrows, ncols = bands.spec.ny - 1, bands.spec.nx - 1
     n_nodes = bands.n_nodes
     keep = (node >= 0) & (node < n_nodes)
     node, val = node[keep], val[keep]
@@ -201,8 +206,9 @@ def regrid_nodes(
     tot = np.bincount(node, weights=val, minlength=n_nodes)
     arr = np.full(nrows * ncols, np.nan, dtype="float64")
     n_cells = 0
-    for b in range(bands.count):
-        wt = bands.load(b)
+    for k in range(bands.count):
+        b = (first + k) % bands.count
+        wt = ensure_band(bands, b)
         value = wt["w0"] * tot[wt["n0"]]
         value += wt["w1"] * tot[wt["n1"]]
         value += wt["w2"] * tot[wt["n2"]]
@@ -216,16 +222,16 @@ def regrid_nodes(
 def _timestep_writer(
     bands: WeightBands, spec: GridSpec, out_dir: str, prefix: str
 ) -> Callable[..., pd.DataFrame]:
-    """The executor-side `write(ts, node, val)` that regrids one
-    timestep's node values (regrid_nodes), writes its COG and returns
-    its manifest row."""
+    """The executor-side `write(ts, node, val, first=0)` that regrids
+    one timestep's node values (regrid_nodes, from band `first`),
+    writes its COG and returns its manifest row."""
     os.makedirs(out_dir, exist_ok=True)
-    nrows, ncols = spec.ny - 1, spec.nx - 1
     transform = _geotransform(spec)
     w = default_writer()
 
-    def write(ts, node: np.ndarray, val: np.ndarray) -> pd.DataFrame:
-        arr, n_cells = regrid_nodes(node, val, bands, nrows, ncols)
+    def write(ts, node: np.ndarray, val: np.ndarray,
+              first: int = 0) -> pd.DataFrame:
+        arr, n_cells = regrid_nodes(node, val, bands, first)
         return _write_raster(out_dir, prefix, ts, arr, n_cells, transform,
                              "EPSG:4326", w)
 
@@ -284,14 +290,28 @@ def write_cogs_from_netcdf(
     out_dir: str,
     prefix: str,
 ) -> list[Row]:
-    """Decode, regrid (regrid_nodes) and write one COG per record of a
-    NetCDF record variable in one map-only stage, with no shuffle: task
-    i of `spark.range(T, numPartitions=T).mapInArrow` decodes the byte
-    ranges of records[i] (sources/netcdf.plan_records, planned with
+    """Build the weight bands, then decode, regrid (regrid_nodes) and
+    write one COG per record of a NetCDF record variable, all in one
+    map-only stage with no shuffle. `bands` need only be laid out
+    (plans/weights.prepare_band_weights): with T records and B bands,
+    task i of `spark.range(max(T, B), numPartitions=max(T, B))
+    .mapInArrow` first builds band i mod B (plans/weights.ensure_band),
+    so the bands are built in parallel even when T is below the core
+    count. If i < T it then decodes the byte ranges of records[i]
+    (sources/netcdf.plan_records, planned with
     AdcircNetCDFDataSource._splitter) with the same class's range
     decoder, drops the filled (NaN) nodes, as write_cogs_from_nodes
-    drops scan_netcdf's nulls, and writes its COG. Runs the job and
-    returns the manifest rows (ts, path, n_cells).
+    drops scan_netcdf's nulls, and regrids from band i mod B on,
+    building any band still missing, and writes its COG. Tasks with
+    i >= T yield no row. Runs the job and returns the manifest rows
+    (ts, path, n_cells).
+
+    A task's memory: its raster (8 B per pixel), its record's node
+    values (N ids and values, plus per-node sums), and at most one band
+    build at a time. A build explodes at most about
+    plans/weights.BAND_CELLS candidate pixels at once, beside a few
+    arrays per triangle (numpy peak ~485 MB for a 1.32M-cell band of a
+    3.64M-triangle mesh). The band arrays are memory-mapped.
 
     Two records with one ts would race on one file name: a manifest
     that holds a ts twice raises DuplicateTimestepError (a ValueError)
@@ -299,18 +319,24 @@ def write_cogs_from_netcdf(
     COGs the job wrote stay in out_dir."""
     write = _timestep_writer(bands, spec, out_dir, prefix)
     range_decoder = AdcircNetCDFDataSource._range_decoder
+    n_tasks = max(len(records), bands.count)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for i in batch.column("id").to_pylist():
+                first = i % bands.count
+                ensure_band(bands, first)
+                if i >= len(records):
+                    continue
                 ts, node, val = decode_record(range_decoder, variable,
                                               records[i])
                 keep = ~np.isnan(val)
                 yield pa.RecordBatch.from_pandas(
-                    write(ts.tz_convert(None), node[keep], val[keep]),
+                    write(ts.tz_convert(None), node[keep], val[keep],
+                          first),
                     preserve_index=False)
 
-    manifest = spark.range(len(records), numPartitions=len(records)
+    manifest = spark.range(n_tasks, numPartitions=n_tasks
                            ).mapInArrow(run, MANIFEST_SCHEMA).collect()
     seen: set[str] = set()
     for row in manifest:

@@ -1,10 +1,13 @@
 """The row-band weights kernel of plans/weights (band_weights, the
 CLI's build_band_weights and the DataFrame form weights_table) against
 the Spark SQL bin join build_weights, row for row; atomic band writes;
-and the mesh input checks."""
+building a band once under its lock (ensure_band); and the mesh input
+checks."""
 
 import dataclasses
+import multiprocessing
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -22,10 +25,13 @@ from adcirctime2cogs_spark.plans.weights import (
     band_weights,
     build_band_weights,
     build_weights,
+    ensure_band,
+    prepare_band_weights,
     triangle_arrays,
     weights_table,
     write_band,
 )
+from adcirctime2cogs_spark.sinks.cog import regrid_nodes
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
 from adcirctime2cogs_spark.sources.mesh import load_mesh, read_mesh_arrays
 from tests.test_cog_kernel import _perfbench_inputs
@@ -216,6 +222,129 @@ def test_band_rewrite_is_identical_and_leaves_no_temp(spark, tmp_path,
         write_band(bands, spec, 1)
     assert not [f for f in os.listdir(bands.dir)
                 if f.startswith("band00001.") and f.endswith(".npy")]
+
+
+def _micromesh_bands(spark, tmp_path):
+    """The micromesh's bands at res 0.4, laid out but none built, and
+    its triangle arrays."""
+    base = str(tmp_path / "in")
+    _write_mesh(base, mm.NODES, mm.ELEMENTS)
+    tris = triangle_arrays(*read_mesh_arrays(base))
+    bands = prepare_band_weights(spark, tris, _spec(base, 0.4),
+                                 str(tmp_path / "w"))
+    assert bands.count > 1
+    return bands, tris
+
+
+def _band_weights_of(bands, tris, band):
+    r0 = band * bands.rows
+    got = band_weights(**tris, spec=bands.spec, r0=r0,
+                       r1=min(r0 + bands.rows, bands.spec.ny - 1))
+    return {name: got[name] for name in BAND_ARRAYS}
+
+
+def _counted_ensure_band(bands, band, counter, barrier, out):
+    """One process of the race below: wrap write_band so that each
+    build appends a line to `counter` (under the band's lock) and
+    lingers, wait for the other processes, call ensure_band and save
+    what it returned to `out`."""
+    real = wmod.write_band
+
+    def counted(*args):
+        with open(counter, "a") as fh:
+            fh.write(f"{os.getpid()}\n")
+        time.sleep(0.3)  # hold the lock while the others arrive
+        real(*args)
+
+    wmod.write_band = counted
+    barrier.wait(60)
+    np.savez(out, **ensure_band(bands, band))
+
+
+def test_ensure_band_builds_once_across_processes(spark, tmp_path):
+    """6 processes (more than the usual 4 cores) ask for one unbuilt
+    band at once: write_band runs exactly once, and every process reads
+    band_weights' arrays."""
+    bands, tris = _micromesh_bands(spark, tmp_path)
+    ctx = multiprocessing.get_context("spawn")
+    barrier = ctx.Barrier(6)
+    counter = str(tmp_path / "builds.txt")
+    outs = [str(tmp_path / f"got{i}.npz") for i in range(6)]
+    procs = [ctx.Process(target=_counted_ensure_band,
+                         args=(bands, 1, counter, barrier, out))
+             for out in outs]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(120)
+        if p.is_alive():
+            p.terminate()
+    assert [p.exitcode for p in procs] == [0] * 6
+    with open(counter) as fh:
+        assert len(fh.read().split()) == 1
+    want = _band_weights_of(bands, tris, 1)
+    for out in outs:
+        with np.load(out) as got:
+            _assert_tables_equal(dict(got), want)
+    _assert_tables_equal(bands.load(1), want)
+    assert not [f for f in os.listdir(bands.dir) if ".tmp-" in f]
+
+
+def test_ensure_band_rebuilds_a_band_missing_its_last_array(spark,
+                                                             tmp_path):
+    """A band whose first arrays exist but whose last is missing (its
+    builder was killed) is rebuilt whole: a stale first array is
+    replaced too."""
+    bands, tris = _micromesh_bands(spark, tmp_path)
+    write_band(bands, bands.spec, 0)
+    os.remove(bands.path(0, BAND_ARRAYS[-1]))
+    np.save(bands.path(0, BAND_ARRAYS[0]), np.zeros(1, np.int64))
+    _assert_tables_equal(ensure_band(bands, 0),
+                         _band_weights_of(bands, tris, 0))
+    _assert_tables_equal(bands.load(0), _band_weights_of(bands, tris, 0))
+
+
+def test_ensure_band_reads_a_complete_band_without_the_lock(
+    spark, tmp_path, monkeypatch
+):
+    """A complete band is read as it is: no lock file, no flock, no
+    build."""
+    bands, tris = _micromesh_bands(spark, tmp_path)
+    write_band(bands, bands.spec, 1)
+
+    def refuse(*args):
+        raise AssertionError("a complete band took a lock or a build")
+
+    monkeypatch.setattr(wmod.fcntl, "flock", refuse)
+    monkeypatch.setattr(wmod, "write_band", refuse)
+    _assert_tables_equal(ensure_band(bands, 1),
+                         _band_weights_of(bands, tris, 1))
+    assert not [f for f in os.listdir(bands.dir) if f.endswith(".lock")]
+
+
+def test_regrid_nodes_on_unbuilt_bands_equals_prefetched(spark, tmp_path):
+    """regrid_nodes on bands no task has built yet, walked from any
+    first band, gives the raster and cell count that it gives after
+    the prefetch stage (build_band_weights)."""
+    case = _perfbench_inputs().make_mesh(5, 24, 20, 0.6, 0.5, 1)
+    base = str(tmp_path / "in")
+    _write_mesh(
+        base, [(i, x, y) for i, (x, y) in enumerate(zip(case.lon, case.lat))],
+        [(e, *map(int, t - 1)) for e, t in enumerate(case.element)])
+    spec = _spec(base, 0.01)
+    tris = triangle_arrays(*read_mesh_arrays(base))
+    built = build_band_weights(spark, tris, spec, str(tmp_path / "built"))
+    assert built.count > 1
+    node = np.arange(len(case.lon), dtype=np.int64)
+    val = np.random.default_rng(0).normal(size=len(node))
+    val[7] = np.nan  # a dry node
+    want, want_cells = regrid_nodes(node, val, built)
+    for first in (0, built.count - 1):
+        lazy = prepare_band_weights(spark, tris, spec,
+                                    str(tmp_path / f"lazy{first}"))
+        got, n_cells = regrid_nodes(node, val, lazy, first)
+        np.testing.assert_array_equal(got, want)
+        assert n_cells == want_cells
 
 
 def _write_micromesh_run(spark, base, nodes, elements):

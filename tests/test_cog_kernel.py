@@ -4,13 +4,15 @@ write_cogs(regrid(...)) on the same inputs: the same file names, the
 same nodata pattern, and pixels within 4 ulp of the largest node value
 (the old path sums its 3 terms in no fixed order). The CLI's one task
 per .nc timestep (write_cogs_from_netcdf) against the DataFrame entry
-write_cogs_from_nodes(scan_netcdf(...)): byte-identical COGs."""
+write_cogs_from_nodes(scan_netcdf(...)): byte-identical COGs, also
+when that one stage has more bands to build than cores."""
 
 import hashlib
 import importlib.util
 import os
 import pathlib
 import sys
+import threading
 
 import numpy as np
 import pytest
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.pipeline import main, run_pipeline
 from adcirctime2cogs_spark.plans import micromesh as mm
+from adcirctime2cogs_spark.plans import weights as wmod
 from adcirctime2cogs_spark.plans.grid import (
     bounding_box,
     grid_spec_from_bbox,
@@ -312,6 +315,77 @@ def test_cli_equals_scan_path_on_fill_value_nodes(
     t1, t2, _ = (read_geotiff(str(tmp_path / "o" / "zeta" / f))[0]
                  for f in sorted(_tif_sha256(tmp_path / "o" / "zeta")))
     assert np.isnan(t2).sum() > np.isnan(t1).sum()  # the dry node
+
+
+def _finishes(spark, seconds, fn, *args):
+    """fn(*args) in a thread under its own job group; fails, cancelling
+    the group's Spark jobs, if it has not returned after `seconds`."""
+    sc = spark.sparkContext
+    errors = []
+
+    def run():
+        sc.setJobGroup("must-finish", "bounded wait")
+        try:
+            fn(*args)
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    if t.is_alive():
+        sc.cancelJobGroup("must-finish")
+        t.join(60)
+        pytest.fail(f"not finished after {seconds} s")
+    if errors:
+        raise errors[0]
+
+
+def _split_micromesh_nc(tmp_path, monkeypatch):
+    """The micromesh classic file (3 records), split into 2 node ranges
+    per record."""
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    (tmp_path / "in").mkdir()
+    _write_micromesh_nc(str(tmp_path / "in" / "fort.63.nc"))
+    monkeypatch.setattr(
+        AdcircNetCDFDataSource, "_splitter",
+        staticmethod(lambda path, ln, var: nc3.classic_splitter(
+            path, ln, var, max_split_bytes=24)))
+
+
+def test_cli_with_more_bands_than_cores_finishes_and_equals_scan_path(
+    spark, tmp_path, monkeypatch
+):
+    """One raster row per band (BAND_CELLS patched in the driver only):
+    20 bands, more than the cores, and 3 records. The CLI's one stage
+    of 20 tasks builds every band once under its lock, finishes, and
+    writes the COGs of the scan path over prefetched bands."""
+    _split_micromesh_nc(tmp_path, monkeypatch)
+    res = 0.1  # a 20 x 20 raster
+    monkeypatch.setattr(wmod, "BAND_CELLS", 20)
+    spec = grid_spec_from_bbox(
+        {"lon_min": 0.0, "lon_max": 2.0, "lat_min": 0.0, "lat_max": 2.0},
+        res)
+    rows, count = wmod.band_layout(spark, spec)
+    assert rows == 1
+    assert count > spark.sparkContext.defaultParallelism
+    assert count > 3
+    _finishes(spark, 300, _assert_cli_equals_scan_path, spark, tmp_path,
+              res)
+
+
+def test_cli_with_fewer_bands_than_records_equals_scan_path(
+    spark, tmp_path, monkeypatch
+):
+    """2 bands of 3 raster rows and 3 records: tasks 0 and 2 start
+    their regrid at the same band, and task 1 builds the other."""
+    _split_micromesh_nc(tmp_path, monkeypatch)
+    monkeypatch.setattr(wmod, "band_layout", lambda spark, spec: (3, 2))
+    _finishes(spark, 300, _assert_cli_equals_scan_path, spark, tmp_path,
+              0.4)
 
 
 def test_two_records_with_one_ts_raise_before_sidecars_and_zip(

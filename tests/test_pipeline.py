@@ -300,12 +300,14 @@ def test_pipeline_cli_scans_nc_without_binaryfile_or_round_robin(
     assert "RoundRobinPartitioning" not in plans[0]
 
 
-def test_warm_nc_cli_job_runs_two_jobs_one_task_per_timestep(
+def test_warm_nc_cli_job_runs_one_job_of_max_timesteps_bands_tasks(
     spark, tmp_path
 ):
-    """A warm CLI job on a .nc record variable runs exactly 2 Spark
-    jobs: the weights, then one stage of one task per timestep that
-    decodes, regrids and writes each COG."""
+    """A warm CLI job on a .nc record variable runs exactly 1 Spark
+    job of one stage with max(timesteps, bands) tasks, which build the
+    weight bands and decode, regrid and write each COG."""
+    from adcirctime2cogs_spark.plans import micromesh as mm
+    from adcirctime2cogs_spark.plans.weights import band_layout
     from tests.test_netcdf3 import _write_micromesh_nc
 
     in_dir = tmp_path / "in"
@@ -313,10 +315,11 @@ def test_warm_nc_cli_job_runs_two_jobs_one_task_per_timestep(
     _write_micromesh_nc(str(in_dir / "fort.63.nc"))  # 3 timesteps
     st = _cli_nc_jobs(spark, in_dir, tmp_path, ["nc-cold", "nc-warm"])
     jobs = sorted(st.getJobIdsForGroup("nc-warm"))
-    assert len(jobs) == 2
-    stages = st.getJobInfo(jobs[1]).stageIds
+    assert len(jobs) == 1
+    stages = st.getJobInfo(jobs[0]).stageIds
     assert len(stages) == 1
-    assert st.getStageInfo(stages[0]).numTasks == 3
+    _, n_bands = band_layout(spark, mm.GRID)  # the CLI's grid at res 0.4
+    assert st.getStageInfo(stages[0]).numTasks == max(3, n_bands)
 
 
 def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):
@@ -378,16 +381,13 @@ def _plans_of_jobs(spark, job_ids):
 def test_warm_cli_job_builds_weights_in_one_map_only_stage(
     spark, tmp_path, monkeypatch
 ):
-    """A warm CLI job on the micromesh .nc builds its weights in one
-    Spark job of one stage, with no exchange and no join, and runs at
-    most 3 Spark jobs in all (the weights, then the one-task-per-
-    timestep COG stage: 2 jobs)."""
+    """A warm CLI job on parquet input builds its weights in one Spark
+    job of one stage, with no exchange and no join, and runs at most 3
+    Spark jobs in all (the weights, then the groupBy COG kernel)."""
     from adcirctime2cogs_spark import pipeline
-    from tests.test_netcdf3 import _write_micromesh_nc
 
     in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    _write_micromesh_nc(str(in_dir / "fort.63.nc"))
+    _write_input(spark, str(in_dir))
     sc = spark.sparkContext
     build = pipeline.build_band_weights
 
@@ -406,9 +406,8 @@ def test_warm_cli_job_builds_weights_in_one_map_only_stage(
                 "--input-dir", str(in_dir),
                 "--output-dir", str(tmp_path / group / "o"),
                 "--final-dir", str(tmp_path / group / "f"),
-                "--input-file", "fort.63.nc",
                 "--input-variable", "zeta",
-                "--res", "0.4",
+                "--res", "0.1",
             ]) == 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
