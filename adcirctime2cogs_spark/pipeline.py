@@ -1,16 +1,14 @@
 """End-to-end pipeline: the Spark-first equivalent of the reference CLI
 (run/adcircTime2cogs.py:242-279 argparse -> main() :121-240).
 
-    mesh tables -> driver arrays -> bbox -> grid spec
+    input adapter -> mesh arrays + records -> bbox -> grid spec
       -> weights laid out as row bands, each built once by a task
-      node values -> one task per ts: regrid + COG -> mosaic
+      -> one task per record: decode + regrid + COG -> mosaic
       sidecars -> zip
 
-On a .nc record variable, one Spark job of one map-only stage in all:
-max(timesteps, bands) tasks that build the weight bands and decode,
-regrid and write one timestep each. Parquet input and max variables
-build the bands in a map-only stage of their own first and add the
-groupBy's shuffle stage.
+Every input runs one Spark job of one map-only stage: max(records,
+bands) tasks that build the weight bands and decode, regrid and write
+one timestep each (sinks/cog.write_cogs_from_records).
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
 - one Spark job regrids and writes every timestep, one task per
@@ -18,22 +16,25 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
   arrays and writing its COG (sinks/cog.regrid_nodes), where the
   reference loops over timesteps sequentially (SURVEY P9);
 - weights computed once and reused across every timestep (the
-  reference rebuilds its interpolator per step, P6). The driver reads
-  the mesh tables with pyarrow (sources/mesh.read_mesh_arrays), takes
-  the bbox with numpy, lays the raster rows out as bands and writes
-  the triangles once as arrays (plans/weights.prepare_band_weights);
-  the first task that needs a band rasterizes it in closed form and
-  writes its weight arrays, under a per-band file lock
-  (plans/weights.ensure_band). No join, no shuffle, no parquet round
-  trip; the registry and streaming paths run the same kernel as a
-  DataFrame (plans/weights.weights_table);
-- input is either the engine-native parquet layout (sources/mesh.py)
-  or one fort.*.nc: its mesh becomes parquet tables
-  (sources/netcdf.write_static_tables) and its record variable is
-  never staged: the driver plans the byte-range splits of each record
-  (sources/netcdf.plan_records) and one mapInArrow task per record
-  decodes them straight into its regrid and COG
-  (sinks/cog.write_cogs_from_netcdf).
+  reference rebuilds its interpolator per step, P6). The driver takes
+  the bbox of the mesh arrays with numpy, lays the raster rows out as
+  bands and writes the triangles once as arrays
+  (plans/weights.prepare_band_weights); the first task that needs a
+  band rasterizes it in closed form and writes its weight arrays,
+  under a per-band file lock (plans/weights.ensure_band). No join, no
+  shuffle, no parquet round trip; the registry and streaming paths
+  run the same kernel as a DataFrame (plans/weights.weights_table);
+- input is either one fort.*.nc or the engine-native parquet layout,
+  each through a thin adapter that returns the mesh arrays, one
+  picklable record per timestep and the decoder a task runs on it:
+  - sources/netcdf.nc_input: the mesh read into driver memory, never
+    staged; a record variable's byte-range splits planned per record
+    (sources/netcdf.plan_records), or a time-less max variable read
+    whole by its one task;
+  - sources/mesh.table_input: mesh_nodes / mesh_elements read with
+    pyarrow, and {variable}.parquet planned one record per ts from
+    hive `ts=` directories and row-group statistics, or node_maxes
+    as one record.
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \
@@ -54,22 +55,16 @@ from pyspark.sql import SparkSession
 
 from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
 from adcirctime2cogs_spark.plans.weights import (
-    build_band_weights,
     prepare_band_weights,
     triangle_arrays,
 )
 from adcirctime2cogs_spark.sinks.cog import (
     DuplicateTimestepError,
-    write_cogs_from_netcdf,
-    write_cogs_from_nodes,
+    write_cogs_from_records,
 )
 from adcirctime2cogs_spark.sinks.sidecar import archive_output, write_mosaic_sidecars
-from adcirctime2cogs_spark.sources.mesh import load_timeseries, read_mesh_arrays
-from adcirctime2cogs_spark.sources.netcdf import (
-    AdcircNetCDFDataSource,
-    plan_records,
-    write_static_tables,
-)
+from adcirctime2cogs_spark.sources.mesh import table_input, table_name
+from adcirctime2cogs_spark.sources.netcdf import nc_input, open_nc
 
 
 @dataclass
@@ -96,29 +91,25 @@ def run_pipeline(
 ) -> PipelineResult:
     """The whole dataflow; returns a small result summary (files are
     the real output, like the reference) plus per-phase wall timings
-    (load_bbox / weights / regrid_cog / sidecar_zip) so scale runs can
-    attribute cost without re-instrumenting. On a .nc record variable
-    the weight bands are built inside the COG stage, so `timings` has
-    no `weights` key there and `regrid_cog` covers both.
+    (load_bbox / regrid_cog / sidecar_zip) so scale runs can attribute
+    cost without re-instrumenting. The weight bands are built inside
+    the COG stage, so `regrid_cog` covers both.
 
-    The mesh comes from input_dir. The node values are the record
-    variable `variable` of the NetCDF file(s) at `nc_path` when given:
-    its byte-range splits are planned here, before any Spark job, and
-    each timestep is decoded, regridded and written by one task
-    (sinks/cog.write_cogs_from_netcdf; two records with one ts raise
+    The mesh and the node values come from the fort.*.nc at `nc_path`
+    when given (sources/netcdf.nc_input), else from the tables in
+    input_dir (sources/mesh.table_input). Either adapter plans its
+    records here, before any Spark job, and each timestep is decoded,
+    regridded and written by one task (sinks/cog.
+    write_cogs_from_records; two records with one ts raise
     DuplicateTimestepError, a ValueError, before the sidecars and the
-    zip, and main exits 1). Otherwise they are the variable's table in
-    input_dir (sources/mesh.load_timeseries)."""
+    zip, and main exits 1)."""
     timings: dict[str, float] = {}
     t0 = time.time()
-    node_id, lon, lat, elements = read_mesh_arrays(input_dir)
-    tris = triangle_arrays(node_id, lon, lat, elements)
-    if nc_path is not None:
-        records = plan_records(
-            nc_path, variable, AdcircNetCDFDataSource._splitter)
-    else:
-        timeseries = load_timeseries(spark, input_dir, variable)
-
+    mesh, records, decode = (
+        nc_input(nc_path, variable) if nc_path is not None
+        else table_input(input_dir, variable))
+    tris = triangle_arrays(*mesh)
+    _, lon, lat, _ = mesh
     bbox = {"lon_min": float(lon.min()), "lon_max": float(lon.max()),  # O7
             "lat_min": float(lat.min()), "lat_max": float(lat.max())}
     spec = grid_spec_from_bbox(bbox, res)  # D4
@@ -128,19 +119,10 @@ def run_pipeline(
     cog_dir = os.path.join(output_dir, variable)
     weights_dir = os.path.join(output_dir, "_weights")
     try:
-        # O11 + O13-O15, once (P6)
-        if nc_path is not None:  # O1-O6 + O16-O17 + O20
-            bands = prepare_band_weights(spark, tris, spec, weights_dir)
-            manifest = write_cogs_from_netcdf(
-                spark, records, variable, bands, spec, cog_dir,
-                prefix=variable)
-        else:  # O16-O17 + O20
-            bands = build_band_weights(spark, tris, spec, weights_dir)
-            timings["weights"] = round(time.time() - t0, 2)
-            t0 = time.time()
-            manifest = write_cogs_from_nodes(
-                timeseries, bands, spec, cog_dir, prefix=variable
-            ).collect()
+        # O11 + O13-O15, once (P6); O1-O6 + O16-O17 + O20 per record
+        bands = prepare_band_weights(spark, tris, spec, weights_dir)
+        manifest = write_cogs_from_records(
+            spark, records, decode, bands, cog_dir, prefix=variable)
         timings["regrid_cog"] = round(time.time() - t0, 2)
     finally:
         # remove the arrays even when a phase throws: a long-lived
@@ -260,31 +242,20 @@ def main(argv: list[str] | None = None) -> int:
     if missing:
         p.error(f"missing required: {', '.join(m.replace('_', '-') for m in missing)}")
 
-    # mirror load_timeseries' max-variable dispatch: max vars live in
-    # node_maxes.parquet, so probing {variable}.parquet would reject
-    # every valid max-variable run at the CLI door
-    import re as _re
-
-    probe_name = (
-        "node_maxes" if _re.search("max", args.input_variable)
-        else args.input_variable
-    )
-    probe = os.path.join(args.input_dir, f"{probe_name}.parquet")
-    nc_input = os.path.join(args.input_dir, args.input_file)
-    base_dir = args.input_dir
-    record_nc = False
+    # a max variable lives in node_maxes.parquet (table_name), so
+    # probing {variable}.parquet would reject every max-variable run
+    probe = os.path.join(
+        args.input_dir, f"{table_name(args.input_variable)}.parquet")
+    nc_path = None
     if not os.path.exists(probe):
-        if args.input_file.endswith(".nc") and os.path.exists(nc_input):
+        nc_path = os.path.join(args.input_dir, args.input_file)
+        if args.input_file.endswith(".nc") and os.path.exists(nc_path):
             # the reference's actual entry point: ONE fort.*.nc carrying
-            # mesh + variable (run/adcircTime2cogs.py:148-156). The mesh
-            # (and a time-less max variable) becomes parquet tables under
-            # output-dir; a record variable is scanned per timestep
-            # straight into the regrid below, never staged.
-            base_dir = os.path.join(args.output_dir, "_tables")
+            # mesh + variable (run/adcircTime2cogs.py:148-156), read
+            # straight into the record stage, never staged; its header
+            # is checked here, before the JVM starts
             try:
-                record_nc = write_static_tables(
-                    nc_input, base_dir, args.input_variable
-                )
+                open_nc(nc_path, args.input_variable)
             except ValueError as exc:  # e.g. a mistyped --input-variable
                 print(exc, file=sys.stderr)
                 return 1
@@ -304,13 +275,13 @@ def main(argv: list[str] | None = None) -> int:
     try:
         result = run_pipeline(
             spark,
-            base_dir,
+            args.input_dir,
             args.output_dir,
             args.final_dir,
             args.input_variable,
             args.res,
             s3_bucket=args.s3_bucket,
-            nc_path=nc_input if record_nc else None,
+            nc_path=nc_path,
         )
     except DuplicateTimestepError as exc:  # two records, one ts
         print(exc, file=sys.stderr)

@@ -30,11 +30,11 @@ spans two bands, so the pick needs no shuffle. Two forms share it:
   kernel (sinks/cog.regrid_nodes), the triangles memory-mapped from
   disk, and no weight row passes through the driver. The driver only
   lays the bands out (`prepare_band_weights`); `ensure_band` builds a
-  band the first time a task needs it, under a per-band file lock. On
-  a NetCDF record variable the COG stage's own tasks build them
-  (sinks/cog.write_cogs_from_netcdf), with no Spark job of their own;
-  other inputs prefetch every band in one stage first
-  (`build_band_weights`).
+  band the first time a task needs it, under a per-band file lock.
+  The COG stage's own tasks build them
+  (sinks/cog.write_cogs_from_records), with no Spark job of their
+  own; that stage given no records builds every band and writes
+  nothing.
 
 `build_weights`, a Spark SQL join of raster centroids and triangles on
 a spatial bin, is the reference both forms are tested against row for
@@ -431,27 +431,3 @@ def prepare_band_weights(
         np.save(os.path.join(weights_dir, f"{name}.npy"), tris[name])
     return WeightBands(weights_dir, rows, count, n_nodes, spec)
 
-
-def build_band_weights(
-    spark: SparkSession, tris: dict[str, np.ndarray], spec: GridSpec,
-    weights_dir: str,
-) -> WeightBands:
-    """prepare_band_weights, then build every band in one map-only
-    Spark stage: `spark.range(bands)`, one task per band, each running
-    ensure_band. No join, no shuffle, and no row goes through task
-    results. Serves the COG kernel's DataFrame entry
-    (sinks/cog.write_cogs_from_nodes); a NetCDF record variable skips
-    this stage, as its per-timestep tasks build the bands themselves
-    (sinks/cog.write_cogs_from_netcdf)."""
-    bands = prepare_band_weights(spark, tris, spec, weights_dir)
-
-    def run(batches):
-        for batch in batches:
-            for band in batch.column(0).to_pylist():
-                ensure_band(bands, band)
-            yield batch
-
-    spark.range(0, bands.count, 1, bands.count).mapInArrow(
-        run, "id long"
-    ).collect()
-    return bands

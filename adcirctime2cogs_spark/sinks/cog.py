@@ -9,24 +9,20 @@ A timestep's node values become its raster in `regrid_nodes` alone,
 against the per-band weight arrays of plans/weights, each built once
 by whichever task first needs it (plans/weights.ensure_band) — per
 band a gather, a dot with the barycentric weights and a scatter into
-the raster. Three entry points:
+the raster. Two entry points:
 
-- `write_cogs_from_netcdf` (the CLI on a .nc record variable): the
-  whole job is one map-only stage, one task per record (and at least
-  one per band), each building its share of the weight bands,
-  decoding its record's byte ranges, regridding and writing the COG;
+- `write_cogs_from_records` (the CLI, on every input): the whole job
+  is one map-only stage, one task per record (and at least one per
+  band), each building its share of the weight bands, decoding its
+  record with its source's decoder, regridding and writing the COG;
   no shuffle;
-- `write_cogs_from_nodes` (the CLI on parquet tables or a max
-  variable, the scale legs): `groupBy('ts').applyInPandas` ships each
-  timestep's node values of a DataFrame to one task;
 - `write_cogs`: the groupBy ships an already regridded long table
   (ts, grid_row, grid_col, value) and the task pivots it (the
   streaming job, whose watermarked aggregation needs that table).
 
-The default writer emits REAL tiled-deflate COGs through the pure
-struct+zlib codec in sinks/geotiff.py (no GDAL needed); when rasterio
-IS present its COG driver is preferred, and the writer stays
-injectable for custom drivers.
+The writer emits REAL tiled-deflate COGs through the pure
+struct+zlib codec in sinks/geotiff.py (no GDAL), so the COG bytes do
+not depend on the executor image; `write_cogs` takes another writer.
 """
 
 from __future__ import annotations
@@ -38,14 +34,9 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
 from adcirctime2cogs_spark.plans.grid import GridSpec
 from adcirctime2cogs_spark.plans.weights import WeightBands, ensure_band
-from adcirctime2cogs_spark.sources.netcdf import (
-    AdcircNetCDFDataSource,
-    decode_record,
-)
 
 # the reference's filename timestamp format (run/adcircTime2cogs.py:192)
 TS_FMT = "%Y%m%dT%H%M%SZ"
@@ -58,7 +49,7 @@ def _geotransform(spec: GridSpec) -> list[float]:
     return [spec.ul_lon, spec.res, 0.0, spec.ul_lat, 0.0, -spec.res]
 
 
-def _fallback_writer(
+def cog_writer(
     fname: str, arr: np.ndarray, transform: list[float], crs: str
 ) -> None:
     """No-GDAL writer: a real tiled-deflate COG via the pure-Python
@@ -75,49 +66,6 @@ def _fallback_writer(
     tmp = f"{fname}.tif.tmp-{uuid.uuid4().hex[:8]}"
     write_geotiff(tmp, arr, transform, crs, nodata=float("nan"))
     os.replace(tmp, fname + ".tif")
-
-
-def _rasterio_writer(
-    fname: str, arr: np.ndarray, transform: list[float], crs: str
-) -> None:
-    """Same atomicity contract as _fallback_writer: write to a temp
-    name that no *.tif glob matches, os.replace into place — a task
-    killed mid-write by speculation/executor loss must never leave a
-    truncated OR temp-named .tif for a mosaic indexer to pick up
-    (review r10 + ADVICE r10)."""
-    import uuid
-
-    import rasterio
-    from rasterio.transform import Affine
-
-    t = Affine(transform[1], transform[2], transform[0],
-               transform[4], transform[5], transform[3])
-    tmp = f"{fname}.tif.tmp-{uuid.uuid4().hex[:8]}"
-    with rasterio.open(
-        tmp, "w", driver="COG", height=arr.shape[0],
-        width=arr.shape[1], count=1, dtype="float64", crs=crs,
-        transform=t, nodata=float("nan"), compress="deflate",
-    ) as dst:
-        dst.write(arr, 1)
-    os.replace(tmp, fname + ".tif")
-
-
-def _auto_writer(
-    fname: str, arr: np.ndarray, transform: list[float], crs: str
-) -> None:
-    """Probe rasterio AT CALL TIME — the writer executes on executors,
-    and a driver-side probe would bind the choice to the wrong
-    environment when driver and executor images differ."""
-    try:
-        import rasterio  # noqa: F401
-    except ImportError:
-        _fallback_writer(fname, arr, transform, crs)
-    else:
-        _rasterio_writer(fname, arr, transform, crs)
-
-
-def default_writer() -> Callable:
-    return _auto_writer
 
 
 def _write_raster(
@@ -147,7 +95,7 @@ def write_cogs(
     out_dir: str,
     prefix: str = "raster",
     crs: str = "EPSG:4326",
-    writer: Callable | None = None,
+    writer: Callable = cog_writer,
 ) -> DataFrame:
     """Write one COG per distinct ts from the long regrid output
     (ts, grid_row, grid_col, value). Returns a manifest DataFrame
@@ -161,7 +109,6 @@ def write_cogs(
     os.makedirs(out_dir, exist_ok=True)
     nrows, ncols = spec.ny - 1, spec.nx - 1
     transform = _geotransform(spec)
-    w = writer or default_writer()
 
     def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.full((nrows, ncols), np.nan, dtype="float64")
@@ -169,7 +116,7 @@ def write_cogs(
             pdf["value"].to_numpy(dtype="float64")
         )
         return _write_raster(out_dir, prefix, pdf["ts"].iloc[0], arr,
-                             len(pdf), transform, crs, w)
+                             len(pdf), transform, crs, writer)
 
     return raster_long.groupBy("ts").applyInPandas(
         write_one, schema=MANIFEST_SCHEMA
@@ -219,92 +166,34 @@ def regrid_nodes(
     return arr.reshape(nrows, ncols), n_cells
 
 
-def _timestep_writer(
-    bands: WeightBands, spec: GridSpec, out_dir: str, prefix: str
-) -> Callable[..., pd.DataFrame]:
-    """The executor-side `write(ts, node, val, first=0)` that regrids
-    one timestep's node values (regrid_nodes, from band `first`),
-    writes its COG and returns its manifest row."""
-    os.makedirs(out_dir, exist_ok=True)
-    transform = _geotransform(spec)
-    w = default_writer()
-
-    def write(ts, node: np.ndarray, val: np.ndarray,
-              first: int = 0) -> pd.DataFrame:
-        arr, n_cells = regrid_nodes(node, val, bands, first)
-        return _write_raster(out_dir, prefix, ts, arr, n_cells, transform,
-                             "EPSG:4326", w)
-
-    return write
-
-
-def write_cogs_from_nodes(
-    timeseries: DataFrame,
-    bands: WeightBands,
-    spec: GridSpec,
-    out_dir: str,
-    prefix: str,
-) -> DataFrame:
-    """Regrid (regrid_nodes) and write one COG per distinct ts straight
-    from the node values (ts, node_id, value) of a DataFrame: a parquet
-    table, a max variable, the scale legs. Returns a manifest DataFrame
-    (ts, path, n_cells) — an action the caller triggers.
-
-    The groupBy ships N node values per timestep. Null node ids and
-    null values are dropped before it, as the join and count(value)
-    of plans/regrid.aggregate_cells drop them; NaN values stay.
-
-    The kernel stage's task count follows from the shuffle size. AQE
-    (`coalescePartitions.parallelismFirst`) merges adjacent partitions
-    up to max(min(shuffle bytes / cores, 64 MB advisory),
-    `minPartitionSize` = 1 MB), so at small sizes the 1 MB floor rules
-    and partitions under it are merged: a 770 kB shuffle of 6
-    timesteps becomes 1 task that writes the 6 COGs one after another.
-    At HSOFS size a timestep is ~44 MB of node values, nothing is
-    merged, and the kernel gets at most `shuffle.partitions` = cores
-    tasks, ~timesteps / cores COGs each. A NetCDF record variable
-    skips all this: write_cogs_from_netcdf runs one task per timestep.
-    """
-    write = _timestep_writer(bands, spec, out_dir, prefix)
-
-    def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        return write(pdf["ts"].iloc[0],
-                     pdf["node_id"].to_numpy(dtype="int64"),
-                     pdf["value"].to_numpy(dtype="float64"))
-
-    return timeseries.where(
-        F.col("node_id").isNotNull() & F.col("value").isNotNull()
-    ).groupBy("ts").applyInPandas(write_one, schema=MANIFEST_SCHEMA)
-
-
 class DuplicateTimestepError(ValueError):
-    """Two records of one NetCDF input carry the same ts."""
+    """Two records of one input carry the same ts."""
 
 
-def write_cogs_from_netcdf(
+def write_cogs_from_records(
     spark: SparkSession,
-    records: list[list[tuple[str, int, int, int]]],
-    variable: str,
+    records: list,
+    decode: Callable[..., tuple],
     bands: WeightBands,
-    spec: GridSpec,
     out_dir: str,
     prefix: str,
 ) -> list[Row]:
     """Build the weight bands, then decode, regrid (regrid_nodes) and
-    write one COG per record of a NetCDF record variable, all in one
-    map-only stage with no shuffle. `bands` need only be laid out
+    write one COG per record, all in one map-only stage with no
+    shuffle. `records` are picklable descriptors, and `decode(record)
+    -> (ts, node ids, values)` runs in the task: each source's adapter
+    supplies both (sources/netcdf.nc_input, sources/mesh.table_input)
+    and applies its own input's null rule, so the rows come with no
+    nulls. `bands` need only be laid out
     (plans/weights.prepare_band_weights): with T records and B bands,
     task i of `spark.range(max(T, B), numPartitions=max(T, B))
     .mapInArrow` first builds band i mod B (plans/weights.ensure_band),
     so the bands are built in parallel even when T is below the core
-    count. If i < T it then decodes the byte ranges of records[i]
-    (sources/netcdf.plan_records, planned with
-    AdcircNetCDFDataSource._splitter) with the same class's range
-    decoder, drops the filled (NaN) nodes, as write_cogs_from_nodes
-    drops scan_netcdf's nulls, and regrids from band i mod B on,
-    building any band still missing, and writes its COG. Tasks with
-    i >= T yield no row. Runs the job and returns the manifest rows
-    (ts, path, n_cells).
+    count. If i < T it then decodes records[i], regrids from band
+    i mod B on, building any band still missing, and writes its COG,
+    named by its ts. Tasks with i >= T yield no row; with no records
+    the stage only builds the bands. Runs the job and returns the
+    manifest rows (ts, path, n_cells).
 
     A task's memory: its raster (8 B per pixel), its record's node
     values (N ids and values, plus per-node sums), and at most one band
@@ -317,8 +206,8 @@ def write_cogs_from_netcdf(
     that holds a ts twice raises DuplicateTimestepError (a ValueError)
     naming it, before the caller writes sidecars or an archive. The
     COGs the job wrote stay in out_dir."""
-    write = _timestep_writer(bands, spec, out_dir, prefix)
-    range_decoder = AdcircNetCDFDataSource._range_decoder
+    os.makedirs(out_dir, exist_ok=True)
+    transform = _geotransform(bands.spec)
     n_tasks = max(len(records), bands.count)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -328,12 +217,11 @@ def write_cogs_from_netcdf(
                 ensure_band(bands, first)
                 if i >= len(records):
                     continue
-                ts, node, val = decode_record(range_decoder, variable,
-                                              records[i])
-                keep = ~np.isnan(val)
+                ts, node, val = decode(records[i])
+                arr, n_cells = regrid_nodes(node, val, bands, first)
                 yield pa.RecordBatch.from_pandas(
-                    write(ts.tz_convert(None), node[keep], val[keep],
-                          first),
+                    _write_raster(out_dir, prefix, ts, arr, n_cells,
+                                  transform, "EPSG:4326", cog_writer),
                     preserve_index=False)
 
     manifest = spark.range(n_tasks, numPartitions=n_tasks

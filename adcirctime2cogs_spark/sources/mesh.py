@@ -14,13 +14,23 @@ ts-partitioned parquet gives the reference's `chunks={'time': 1}`
 partition pruning (SURVEY P2) for free, plus column pruning at the scan
 (P3). sources/netcdf.py is the one-shot adapter from NetCDF into this
 layout.
+
+`table_input` is the CLI's adapter for this layout: the mesh as arrays,
+one record per timestep planned from parquet metadata, and the decoder
+a COG task runs on its record (sinks/cog.write_cogs_from_records).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -77,8 +87,6 @@ def read_mesh_arrays(
     an (E, 4) int64 array of (elem_id, n0, n1, n2). Rows with a null in
     these columns are dropped. plans/weights.triangle_arrays rejects a
     duplicate node_id."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     def read(name: str, schema: pa.Schema) -> pa.Table:
         return pq.read_table(
@@ -96,6 +104,13 @@ def read_mesh_arrays(
     return node_id, lon, lat, elems
 
 
+def table_name(variable: str) -> str:
+    """The table under a base dir that holds `variable`: the time-less
+    node_maxes for a `max`-named variable (the reference's regex
+    dispatch, adcirc_dask_utilities.py:27), else {variable}.parquet."""
+    return "node_maxes" if re.search("max", variable) else variable
+
+
 def load_timeseries(
     spark: SparkSession, base_dir: str, variable: str = "timeseries"
 ) -> DataFrame:
@@ -106,11 +121,9 @@ def load_timeseries(
     groups by ts) and the COG sink (which names files by ts) run
     unchanged and emit one `raster.<variable>` file, matching the
     reference's one-raster-per-max-variable output."""
-    import re
-
     from pyspark.sql import functions as F
 
-    if re.search("max", variable):
+    if table_name(variable) == "node_maxes":
         maxes = spark.read.schema(NODE_MAXES_SCHEMA).parquet(
             os.path.join(base_dir, "node_maxes.parquet")
         )
@@ -120,3 +133,85 @@ def load_timeseries(
     return spark.read.schema(TIMESERIES_SCHEMA).parquet(
         os.path.join(base_dir, f"{variable}.parquet")
     )
+
+
+def _utc(ts) -> pd.Timestamp:
+    """A ts as a naive UTC pd.Timestamp, the CLI's file-name clock."""
+    ts = pd.Timestamp(ts)
+    return ts.tz_convert("UTC").tz_localize(None) if ts.tzinfo else ts
+
+
+def plan_table_records(path: str) -> list:
+    """One record per distinct non-null ts of the (ts, node_id, value)
+    table at `path` (a file or a directory), from metadata where it
+    can: (ts, [(file, row groups or None), ...]), sorted by ts. None
+    means the whole file holds that ts.
+
+    - A hive `ts=` directory gives its ts directly (Spark writes it
+      URL-encoded, in its session time zone: UTC under
+      session.get_spark); `__HIVE_DEFAULT_PARTITION__` holds null ts.
+    - A row group whose ts statistics have min == max holds that ts.
+    - Any other row group's `ts` column is read here, in the driver.
+    """
+    parts: dict[pd.Timestamp, dict[str, list | None]] = {}
+    for frag in ds.dataset(path, format="parquet",
+                           partitioning="hive").get_fragments():
+        hive = ds.get_partition_keys(frag.partition_expression).get("ts")
+        if hive is not None:
+            if hive != "__HIVE_DEFAULT_PARTITION__":
+                parts.setdefault(_utc(hive), {})[frag.path] = None
+            continue
+        pf = pq.ParquetFile(frag.path)
+        col = pf.schema_arrow.names.index("ts")
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(col).statistics
+            if st is not None and st.has_min_max and st.min == st.max:
+                stamps = [st.min]
+            else:
+                stamps = pc.unique(pf.read_row_group(rg, columns=["ts"])
+                                   .column(0)).drop_null().to_pylist()
+            for ts in stamps:
+                parts.setdefault(_utc(ts), {}).setdefault(
+                    frag.path, []).append(rg)
+    return [(ts, list(files.items())) for ts, files in sorted(parts.items())]
+
+
+def decode_table_record(record) -> tuple:
+    """Executor-side: one record of table_input -> (ts, node ids,
+    values). Reads only the record's files or row groups, keeps the
+    rows of its ts where a row group holds others too, and drops rows
+    with a null node_id or value, as the join and count(value) of
+    plans/regrid.aggregate_cells drop them. NaN values stay."""
+    ts, files = record
+    node, val = [], []
+    for path, row_groups in files:
+        pf = pq.ParquetFile(path)
+        if row_groups is None:
+            t = pf.read(columns=["node_id", "value"])
+        else:
+            t = pf.read_row_groups(row_groups,
+                                   columns=["ts", "node_id", "value"])
+            t = t.filter(pc.equal(t["ts"].cast(pa.timestamp("us")),
+                                  pa.scalar(ts, pa.timestamp("us"))))
+        t = t.filter(pc.and_(t["node_id"].is_valid(), t["value"].is_valid()))
+        node.append(t["node_id"].cast(pa.int64()).to_numpy())
+        val.append(t["value"].cast(pa.float64()).to_numpy())
+    return ts, np.concatenate(node), np.concatenate(val)
+
+
+def table_input(base_dir: str, variable: str) -> tuple:
+    """The CLI's input from the tables under base_dir: (mesh arrays of
+    read_mesh_arrays, records, decode_table_record). A `max` variable
+    (table_name) is one record named by the variable, so it writes one
+    `<variable>.<variable>Z` raster, the reference's one raster per max
+    variable; otherwise plan_table_records plans one record per ts of
+    {variable}.parquet."""
+    name = table_name(variable)
+    path = os.path.join(base_dir, f"{name}.parquet")
+    if name == "node_maxes":
+        records = [(variable, [
+            (frag.path, None) for frag in
+            ds.dataset(path, format="parquet").get_fragments()])]
+    else:
+        records = plan_table_records(path)
+    return read_mesh_arrays(base_dir), records, decode_table_record

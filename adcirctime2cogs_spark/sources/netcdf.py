@@ -29,10 +29,11 @@ codecs stream through the Spark 4 Python DataSource defined here:
 `spark.readStream.format("adcirc_netcdf")` over a directory of
 arriving files, once the caller registers `AdcircNetCDFDataSource`.
 
-`plan_records` groups the same splits by record for the CLI, whose
-one task per timestep decodes every split of its record
-(`decode_record`) straight into its regrid and COG
-(sinks/cog.write_cogs_from_netcdf).
+`nc_input` is the CLI's adapter: the mesh as arrays (`read_nc_mesh`),
+and the records its COG tasks decode straight into their regrid
+(sinks/cog.write_cogs_from_records): a record variable's splits
+grouped by record (`plan_records`), or a time-less max variable read
+whole in one task.
 
 `write_static_tables` writes the mesh (and a time-less max variable)
 as sources/mesh.py parquet tables; `adcirc_nc_to_tables` adds the
@@ -44,7 +45,9 @@ from __future__ import annotations
 import glob as _glob
 import inspect
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Collection, Iterator
+from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -158,22 +161,6 @@ def _decode_split(
     )
 
 
-def decode_record(
-    range_decoder: Callable, variable: str,
-    splits: list[tuple[str, int, int, int]],
-):
-    """All splits of ONE record (one plan_records group) -> (UTC ts,
-    node ids, values) with NaN where filled: the rows _decode_split
-    yields for those splits, in plan order, as arrays. The ts is the
-    first split's."""
-    parts = [
-        _normalize(*range_decoder(p, variable, int(t), int(off), int(nb)))
-        for p, t, off, nb in splits
-    ]
-    return (parts[0][0], np.concatenate([ids for _, ids, _ in parts]),
-            np.concatenate([vals for _, _, vals in parts]))
-
-
 def plan_scan(
     path: str, variable: str, splitter: Callable
 ) -> list[tuple[str, int, int, int]]:
@@ -210,7 +197,7 @@ def plan_records(
 ) -> list[list[tuple[str, int, int, int]]]:
     """plan_scan's splits grouped by record, (path, t_idx), in plan
     order: one list of byte ranges per timestep of each file, which a
-    single task decodes whole (sinks/cog.write_cogs_from_netcdf)."""
+    single task decodes whole (nc_input)."""
     records: dict[tuple[str, int], list] = {}
     for split in plan_scan(path, variable, splitter):
         records.setdefault(split[:2], []).append(split)
@@ -401,83 +388,146 @@ class _NetCDFStreamReader(SimpleDataSourceStreamReader):
                 yield from self._decode_rows(path, splits)
 
 
-def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
-    """The static tables of one ADCIRC fort.*.nc (sources/mesh.py
-    layout): mesh_nodes / mesh_elements from the grid variables, plus
-    node_maxes.parquet when `variable` is time-less (a max field).
-    Returns True when `variable` is a record variable, which the
-    caller reads per timestep (plan_records, scan_netcdf). Raises
+@dataclass(frozen=True)
+class NcFile:
+    """One classic NetCDF-3 or HDF5-backed NetCDF-4 file, read whole
+    per variable by the codec its signature calls for: its variable
+    names, raw reads, reads with fill values as NaN, and which
+    variables have the record dimension."""
+
+    names: Collection[str]
+    read: Callable[[str], np.ndarray]
+    masked: Callable[[str], np.ndarray]
+    is_record: Callable[[str], bool]
+
+
+def open_nc(nc_path: str, variable: str) -> NcFile:
+    """NcFile of one ADCIRC fort.*.nc, from its header alone. Raises
     ValueError naming the file's variables when `variable` is not one
-    of them.
-
-    This is the reference-parity ingest: extract_url_grid +
-    get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
-    read the same x/y/depth/element/zeta variables. Arrays are
-    materialized driver-side like the reference's grid dict (an HSOFS
-    mesh is ~50 MB — metadata next to the fact table)."""
-    import pyarrow.parquet as pq
-
+    of them."""
     from adcirctime2cogs_spark.sources import hdf5, netcdf3
 
     try:
         h = netcdf3.header_for(nc_path)
-
-        def _read(name):
-            return netcdf3.read_var(nc_path, h, name)
-
-        def _masked(name):
-            return netcdf3.masked_to_nan(_read(name), h.vars[name])
-
-        var_names = h.vars
-
-        def _is_record(name):
-            return h.is_record(h.vars[name])
+        nc = NcFile(
+            h.vars, lambda name: netcdf3.read_var(nc_path, h, name),
+            lambda name: netcdf3.masked_to_nan(
+                netcdf3.read_var(nc_path, h, name), h.vars[name]),
+            lambda name: h.is_record(h.vars[name]))
     except netcdf3.NotClassicNetCDF:
-        nc4 = hdf5.nc4_for(nc_path)
-
-        def _read(name):
-            return nc4.read_var(name)
-
-        def _masked(name):
-            return hdf5._masked_to_nan(_read(name), nc4.vars[name].atts)
-
-        var_names = nc4.vars
-        _is_record = nc4.is_record
-    if variable not in var_names:
+        f = hdf5.nc4_for(nc_path)
+        nc = NcFile(
+            f.vars, f.read_var,
+            lambda name: hdf5._masked_to_nan(f.read_var(name),
+                                             f.vars[name].atts),
+            f.is_record)
+    if variable not in nc.names:
         raise ValueError(
             f"variable {variable!r} not in {nc_path!r} "
-            f"(has: {sorted(var_names)})"
+            f"(has: {sorted(nc.names)})"
         )
-    is_record = _is_record(variable)
+    return nc
+
+
+def read_nc_mesh(nc: NcFile) -> tuple[np.ndarray, ...]:
+    """The mesh of one fort.*.nc as sources/mesh.read_mesh_arrays
+    returns it: (node_id, lon, lat, elements), node ids 0..N-1 and
+    elements an (E, 4) int64 array of (elem_id, n0, n1, n2) with 0-based
+    vertices (O4).
+
+    This is the reference-parity ingest: extract_url_grid +
+    get_adcirc_slice (run/utilities/adcirc_dask_utilities.py:15-33)
+    read the same x/y/element variables. Arrays are materialized
+    driver-side like the reference's grid dict (an HSOFS mesh is
+    ~50 MB — metadata next to the fact table)."""
+    x = nc.read("x").astype("float64").ravel()
+    y = nc.read("y").astype("float64").ravel()
+    el = nc.read("element").astype("int64") - 1  # O4
+    return (np.arange(len(x)), x, y,
+            np.column_stack([np.arange(len(el)), el]))
+
+
+def _decode_nc_record(range_decoder: Callable, variable: str, splits):
+    """Executor-side: all splits of ONE record (one plan_records group)
+    -> (naive UTC ts of its first split, node ids, values): the rows
+    _decode_split yields for those splits, in plan order, as arrays,
+    with the filled (NaN) nodes that scan_netcdf makes null dropped."""
+    parts = [
+        _normalize(*range_decoder(p, variable, int(t), int(off), int(nb)))
+        for p, t, off, nb in splits
+    ]
+    node = np.concatenate([ids for _, ids, _ in parts])
+    val = np.concatenate([vals for _, _, vals in parts])
+    keep = ~np.isnan(val)
+    return parts[0][0].tz_convert(None), node[keep], val[keep]
+
+
+def _decode_nc_static(variable: str, nc_path: str):
+    """Executor-side: a time-less (max) variable read whole from the
+    .nc -> (the variable name as its ts, node ids, values), its filled
+    nodes dropped."""
+    val = open_nc(nc_path, variable).masked(variable).ravel()
+    node = np.flatnonzero(~np.isnan(val))
+    return variable, node, val[node]
+
+
+def nc_input(
+    nc_path: str, variable: str,
+    source: type[AdcircNetCDFDataSource] = AdcircNetCDFDataSource,
+) -> tuple:
+    """The CLI's input from one fort.*.nc: (read_nc_mesh's arrays,
+    records, decode). A record variable gives one record per timestep,
+    its byte-range splits planned here with `source`'s splitter
+    (plan_records) and decoded in the task with its range decoder. A
+    time-less max variable is one record, read from the .nc in its
+    task and named by the variable, so it writes one
+    `<variable>.<variable>Z` raster like the reference. Nothing is
+    staged as parquet."""
+    nc = open_nc(nc_path, variable)
+    if nc.is_record(variable):
+        records = plan_records(nc_path, variable, source._splitter)
+        decode = partial(_decode_nc_record, source._range_decoder, variable)
+    else:
+        records, decode = [nc_path], partial(_decode_nc_static, variable)
+    return read_nc_mesh(nc), records, decode
+
+
+def write_static_tables(nc_path: str, out_dir: str, variable: str) -> bool:
+    """The static tables of one ADCIRC fort.*.nc (sources/mesh.py
+    layout): mesh_nodes / mesh_elements from the grid variables
+    (read_nc_mesh, plus depth), and node_maxes.parquet when `variable`
+    is time-less (a max field). Returns True when `variable` is a
+    record variable (plan_records, scan_netcdf). Raises ValueError
+    naming the file's variables when `variable` is not one of them."""
+    import pyarrow.parquet as pq
+
+    nc = open_nc(nc_path, variable)
+    node_id, x, y, el = read_nc_mesh(nc)
     os.makedirs(out_dir, exist_ok=True)
-    x = _read("x").astype("float64").ravel()
-    y = _read("y").astype("float64").ravel()
     depth = (
-        _masked("depth").ravel()
-        if "depth" in var_names
+        nc.masked("depth").ravel()
+        if "depth" in nc.names
         else np.full(len(x), np.nan)
     )
     pq.write_table(
         pa.table({
-            "node_id": pa.array(np.arange(len(x)), pa.int64()),
+            "node_id": pa.array(node_id, pa.int64()),
             "lon": pa.array(x, pa.float64()),
             "lat": pa.array(y, pa.float64()),
             "depth": pa.array(depth, pa.float64()),
         }),
         os.path.join(out_dir, "mesh_nodes.parquet"),
     )
-    el = _read("element").astype("int64") - 1  # O4
     pq.write_table(
         pa.table({
-            "elem_id": pa.array(np.arange(el.shape[0]), pa.int64()),
-            "n0": pa.array(el[:, 0], pa.int64()),
-            "n1": pa.array(el[:, 1], pa.int64()),
-            "n2": pa.array(el[:, 2], pa.int64()),
+            name: pa.array(el[:, k], pa.int64())
+            for k, name in enumerate(("elem_id", "n0", "n1", "n2"))
         }),
         os.path.join(out_dir, "mesh_elements.parquet"),
     )
+    is_record = nc.is_record(variable)
     if not is_record:
-        vals = _masked(variable).ravel()
+        vals = nc.masked(variable).ravel()
         pq.write_table(
             pa.table({
                 "node_id": pa.array(np.arange(len(vals)), pa.int64()),

@@ -456,7 +456,7 @@ def masked_to_nan(arr: np.ndarray, v: NC3Var) -> np.ndarray:
 # record (14.6 MB) planned at 4 MB = 4 tasks/record — measured 2.1-3.4s
 # vs 14s unsplit for a 2-record file on local[32]. That serves
 # scan_netcdf's callers (adcirc_nc_to_tables, the scale legs); the
-# CLI's one task per record (sinks/cog.write_cogs_from_netcdf) reads
+# CLI's one task per record (sinks/cog.write_cogs_from_records) reads
 # all of a record's sub-splits itself: 0.02 s for that HSOFS record on
 # a 4-vCPU host, next to 1.0-1.4 s for the task's regrid and COG write
 # at 2200x2400 pixels

@@ -1,5 +1,6 @@
 """The row-band weights kernel of plans/weights (band_weights, the
-CLI's build_band_weights and the DataFrame form weights_table) against
+CLI's bands built by the record stage with no records, and the
+DataFrame form weights_table) against
 the Spark SQL bin join build_weights, row for row; atomic band writes;
 building a band once under its lock (ensure_band); and the mesh input
 checks."""
@@ -23,7 +24,6 @@ from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox, raster_cells
 from adcirctime2cogs_spark.plans.weights import (
     BAND_ARRAYS,
     band_weights,
-    build_band_weights,
     build_weights,
     ensure_band,
     prepare_band_weights,
@@ -31,7 +31,10 @@ from adcirctime2cogs_spark.plans.weights import (
     weights_table,
     write_band,
 )
-from adcirctime2cogs_spark.sinks.cog import regrid_nodes
+from adcirctime2cogs_spark.sinks.cog import (
+    regrid_nodes,
+    write_cogs_from_records,
+)
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
 from adcirctime2cogs_spark.sources.mesh import load_mesh, read_mesh_arrays
 from tests.test_cog_kernel import _perfbench_inputs
@@ -59,6 +62,14 @@ def _spec(base, res):
     return grid_spec_from_bbox(
         {"lon_min": float(lon.min()), "lon_max": float(lon.max()),
          "lat_min": float(lat.min()), "lat_max": float(lat.max())}, res)
+
+
+def _built_bands(spark, tris, spec, weights_dir):
+    """Every band built: the record stage given no records."""
+    bands = prepare_band_weights(spark, tris, spec, weights_dir)
+    assert write_cogs_from_records(spark, [], None, bands,
+                                   weights_dir + "_cogs", "none") == []
+    return bands
 
 
 def _sql_weights(spark, base, spec):
@@ -100,7 +111,7 @@ def _check_parity(spark, base, res, tmp_path, monkeypatch):
     table = weights_table(spark, tris, spec)
     assert table.dtypes == sql.dtypes
     pd.testing.assert_frame_equal(_sorted(table), want_df, check_exact=True)
-    bands = build_band_weights(spark, tris, spec, str(tmp_path / "w"))
+    bands = _built_bands(spark, tris, spec, str(tmp_path / "w"))
     ncols = spec.nx - 1
     _assert_tables_equal(
         _concat([bands.load(b) for b in range(bands.count)], bands.rows,
@@ -201,7 +212,7 @@ def test_band_rewrite_is_identical_and_leaves_no_temp(spark, tmp_path,
     _write_mesh(base, mm.NODES, mm.ELEMENTS)
     spec = _spec(base, 0.4)
     tris = triangle_arrays(*read_mesh_arrays(base))
-    bands = build_band_weights(spark, tris, spec, str(tmp_path / "w"))
+    bands = _built_bands(spark, tris, spec, str(tmp_path / "w"))
     first = {n: np.array(a) for n, a in bands.load(1).items()}
     before = sorted(os.listdir(bands.dir))
     write_band(bands, spec, 1)
@@ -325,7 +336,7 @@ def test_ensure_band_reads_a_complete_band_without_the_lock(
 def test_regrid_nodes_on_unbuilt_bands_equals_prefetched(spark, tmp_path):
     """regrid_nodes on bands no task has built yet, walked from any
     first band, gives the raster and cell count that it gives after
-    the prefetch stage (build_band_weights)."""
+    the record stage built them all with no records (_built_bands)."""
     case = _perfbench_inputs().make_mesh(5, 24, 20, 0.6, 0.5, 1)
     base = str(tmp_path / "in")
     _write_mesh(
@@ -333,7 +344,7 @@ def test_regrid_nodes_on_unbuilt_bands_equals_prefetched(spark, tmp_path):
         [(e, *map(int, t - 1)) for e, t in enumerate(case.element)])
     spec = _spec(base, 0.01)
     tris = triangle_arrays(*read_mesh_arrays(base))
-    built = build_band_weights(spark, tris, spec, str(tmp_path / "built"))
+    built = _built_bands(spark, tris, spec, str(tmp_path / "built"))
     assert built.count > 1
     node = np.arange(len(case.lon), dtype=np.int64)
     val = np.random.default_rng(0).normal(size=len(node))

@@ -2,10 +2,11 @@
 pipeline.main / run_pipeline) against the long-table path
 write_cogs(regrid(...)) on the same inputs: the same file names, the
 same nodata pattern, and pixels within 4 ulp of the largest node value
-(the old path sums its 3 terms in no fixed order). The CLI's one task
-per .nc timestep (write_cogs_from_netcdf) against the DataFrame entry
-write_cogs_from_nodes(scan_netcdf(...)): byte-identical COGs, also
-when that one stage has more bands to build than cores."""
+(the old path sums its 3 terms in no fixed order). The CLI's record
+stage (write_cogs_from_records) on a .nc against the same stage on the
+parquet tables of the same records (adcirc_nc_to_tables, flat or
+ts-partitioned): byte-identical COGs, also when that one stage has
+more bands to build than cores."""
 
 import hashlib
 import importlib.util
@@ -27,24 +28,18 @@ from adcirctime2cogs_spark.plans.grid import (
     raster_cells,
 )
 from adcirctime2cogs_spark.plans.regrid import regrid
-from adcirctime2cogs_spark.plans.weights import (
-    build_band_weights,
-    build_weights,
-    triangle_arrays,
-)
-from adcirctime2cogs_spark.sinks.cog import write_cogs, write_cogs_from_nodes
+from adcirctime2cogs_spark.plans.weights import build_weights
+from adcirctime2cogs_spark.sinks.cog import write_cogs
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
 from adcirctime2cogs_spark.sources import netcdf3 as nc3
-from adcirctime2cogs_spark.sources.mesh import (
-    load_mesh,
-    load_timeseries,
-    read_mesh_arrays,
-)
+from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
 from adcirctime2cogs_spark.sources.netcdf import (
     AdcircNetCDFDataSource,
     _default_range_decoder,
+    adcirc_nc_to_tables,
     plan_records,
     scan_netcdf,
+    write_static_tables,
 )
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,13 +98,14 @@ def test_kernel_matches_join_path_micromesh_nc(spark, tmp_path):
         "--final-dir", str(tmp_path / "f"), "--input-file", "fort.63.nc",
         "--input-variable", "zeta", "--res", "0.4",
     ]) == 0
-    # only the static tables are staged; the records never are
-    assert sorted(os.listdir(out / "_tables")) == [
-        "mesh_elements.parquet", "mesh_nodes.parquet"]
+    # nothing is staged: neither the mesh nor the records
+    assert not os.path.exists(out / "_tables")
     assert not os.path.exists(out / "_weights")
 
+    mesh_dir = str(tmp_path / "mesh")
+    write_static_tables(nc, mesh_dir, "zeta")
     tsv = mm.timeseries_df(spark).withColumn("ts", F.to_timestamp("ts"))
-    _join_path_cogs(spark, str(out / "_tables"), tsv, "zeta", 0.4,
+    _join_path_cogs(spark, mesh_dir, tsv, "zeta", 0.4,
                     str(tmp_path / "join"))
     _assert_same_cogs(str(out / "zeta"), str(tmp_path / "join"),
                       _scale(spark, tsv))
@@ -133,8 +129,10 @@ def test_kernel_matches_join_path_jittered_mesh(spark, tmp_path):
     assert len([f for f in os.listdir(out / "zeta")
                 if f.endswith(".tif")]) == 3
 
+    mesh_dir = str(tmp_path / "mesh")
+    write_static_tables(nc, mesh_dir, "zeta")
     tsv = scan_netcdf(spark, nc, "zeta")
-    _join_path_cogs(spark, str(out / "_tables"), tsv, "zeta", 0.01,
+    _join_path_cogs(spark, mesh_dir, tsv, "zeta", 0.01,
                     str(tmp_path / "join"))
     _assert_same_cogs(str(out / "zeta"), str(tmp_path / "join"),
                       _scale(spark, tsv))
@@ -229,18 +227,18 @@ def test_weights_arrays_removed_when_the_sink_fails(spark, tmp_path,
         assert os.listdir(os.path.join(tmp_path, "o", "_weights"))
         raise RuntimeError("sink failed")
 
-    monkeypatch.setattr(pipeline, "write_cogs_from_nodes", failing)
+    monkeypatch.setattr(pipeline, "write_cogs_from_records", failing)
     with pytest.raises(RuntimeError, match="sink failed"):
         run_pipeline(spark, base, str(tmp_path / "o"), str(tmp_path / "f"),
                      variable="zeta", res=0.4)
     assert not os.path.exists(tmp_path / "o" / "_weights")
 
 
-def _cli(in_dir, out, final, res):
+def _cli(in_dir, out, final, res, input_file="fort.63.nc", variable="zeta"):
     return main([
         "--input-dir", str(in_dir), "--output-dir", str(out),
-        "--final-dir", str(final), "--input-file", "fort.63.nc",
-        "--input-variable", "zeta", "--res", str(res),
+        "--final-dir", str(final), "--input-file", input_file,
+        "--input-variable", variable, "--res", str(res),
     ])
 
 
@@ -250,8 +248,9 @@ def _tif_sha256(d):
 
 
 def _assert_cli_equals_scan_path(spark, tmp_path, res):
-    """The CLI on in/fort.63.nc against write_cogs_from_nodes over
-    scan_netcdf of the same file and weights of the same grid:
+    """The CLI on in/fort.63.nc against the CLI on the
+    adcirc_nc_to_tables output of the same file, whose records
+    scan_netcdf decodes and the parquet decoder reads back:
     byte-identical COGs under the same names. Every record must span
     more than one split."""
     nc = str(tmp_path / "in" / "fort.63.nc")
@@ -259,18 +258,12 @@ def _assert_cli_equals_scan_path(spark, tmp_path, res):
         nc, "zeta", AdcircNetCDFDataSource._splitter))
     out = tmp_path / "o"
     assert _cli(tmp_path / "in", out, tmp_path / "f", res) == 0
-    node_id, lon, lat, elements = read_mesh_arrays(str(out / "_tables"))
-    spec = grid_spec_from_bbox(
-        {"lon_min": float(lon.min()), "lon_max": float(lon.max()),
-         "lat_min": float(lat.min()), "lat_max": float(lat.max())}, res)
-    bands = build_band_weights(
-        spark, triangle_arrays(node_id, lon, lat, elements), spec,
-        str(tmp_path / "w"))
-    write_cogs_from_nodes(scan_netcdf(spark, nc, "zeta"), bands, spec,
-                          str(tmp_path / "scan"), "zeta").collect()
+    tables = tmp_path / "tables"
+    adcirc_nc_to_tables(spark, nc, str(tables), "zeta")
+    assert _cli(tables, tmp_path / "scan", tmp_path / "scan_f", res) == 0
     cli = _tif_sha256(out / "zeta")
     assert len(cli) == 3
-    assert cli == _tif_sha256(tmp_path / "scan")
+    assert cli == _tif_sha256(tmp_path / "scan" / "zeta")
 
 
 def test_cli_equals_scan_path_on_subsplit_classic_records(
@@ -362,7 +355,7 @@ def test_cli_with_more_bands_than_cores_finishes_and_equals_scan_path(
     """One raster row per band (BAND_CELLS patched in the driver only):
     20 bands, more than the cores, and 3 records. The CLI's one stage
     of 20 tasks builds every band once under its lock, finishes, and
-    writes the COGs of the scan path over prefetched bands."""
+    writes the COGs of the CLI on the same records' parquet tables."""
     _split_micromesh_nc(tmp_path, monkeypatch)
     res = 0.1  # a 20 x 20 raster
     monkeypatch.setattr(wmod, "BAND_CELLS", 20)
@@ -412,3 +405,89 @@ def test_two_records_with_one_ts_raise_before_sidecars_and_zip(
     assert all(f.endswith(".tif")
                for f in os.listdir(tmp_path / "o" / "zeta"))
     assert not os.path.exists(tmp_path / "f")
+
+
+def test_cli_on_nc_max_variable_runs_one_job_and_matches_join_path(
+    spark, tmp_path
+):
+    """A classic file with a time-less zeta_max, one node of it
+    _FillValue: the CLI reads it in the one task of its one Spark job of
+    one stage and writes one raster named by the variable, equal to the
+    join path over the same values."""
+    from tests.test_netcdf3 import FILL
+
+    n = len(mm.NODES)
+    zeta_max = np.array([1.5 * lon - lat for _, lon, lat in mm.NODES])
+    zeta_max[3] = FILL
+    (tmp_path / "in").mkdir()
+    nc = str(tmp_path / "in" / "maxele.63.nc")
+    nc3.write_classic(
+        nc,
+        dims=[("node", n), ("nele", len(mm.ELEMENTS)), ("nvertex", 3)],
+        variables=[
+            {"name": "x", "dims": ["node"],
+             "data": np.array([x for _, x, _ in mm.NODES])},
+            {"name": "y", "dims": ["node"],
+             "data": np.array([y for _, _, y in mm.NODES])},
+            {"name": "element", "dims": ["nele", "nvertex"],
+             "data": np.array([e[1:] for e in mm.ELEMENTS],
+                              dtype="int32") + 1},
+            {"name": "zeta_max", "dims": ["node"], "data": zeta_max,
+             "atts": {"_FillValue": FILL, "units": "m"}},
+        ])
+    sc = spark.sparkContext
+    sc.setJobGroup("nc-max", "CLI job")
+    try:
+        assert _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4,
+                    "maxele.63.nc", "zeta_max") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("nc-max")
+    assert len(jobs) == 1
+    assert len(st.getJobInfo(jobs[0]).stageIds) == 1
+    cog_dir = tmp_path / "o" / "zeta_max"
+    assert list(_tif_sha256(cog_dir)) == ["zeta_max.zeta_maxZ.tif"]
+    assert sorted(os.listdir(tmp_path / "o")) == ["zeta_max"]
+
+    tables = str(tmp_path / "tables")
+    write_static_tables(nc, tables, "zeta_max")
+    _join_path_cogs(spark, tables, load_timeseries(spark, tables, "zeta_max"),
+                    "zeta_max", 0.4, str(tmp_path / "join"))
+    _assert_same_cogs(str(cog_dir), str(tmp_path / "join"), 3.0)
+    arr, _ = read_geotiff(str(cog_dir / "zeta_max.zeta_maxZ.tif"))
+    assert np.isnan(arr).any() and (~np.isnan(arr)).any()
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_cli_on_parquet_equals_cli_on_nc(spark, tmp_path, layout):
+    """The CLI on parquet tables of the micromesh records, written
+    flat as one file whose row group spans every ts, or
+    partitionBy("ts"), against the CLI on the .nc itself:
+    byte-identical COGs under the same names."""
+    import pyarrow.parquet as pq
+
+    from tests.test_netcdf3 import _write_micromesh_nc
+
+    (tmp_path / "in").mkdir()
+    nc = str(tmp_path / "in" / "fort.63.nc")
+    _write_micromesh_nc(nc)
+    assert _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4) == 0
+    tables = tmp_path / "tables"
+    if layout == "flat":
+        write_static_tables(nc, str(tables), "zeta")
+        scan_netcdf(spark, nc, "zeta").coalesce(1).write.parquet(
+            str(tables / "zeta.parquet"))
+        (part,) = (tables / "zeta.parquet").glob("*.parquet")
+        stats = pq.ParquetFile(part).metadata.row_group(0).column(0).statistics
+        assert stats.min != stats.max
+    else:
+        adcirc_nc_to_tables(spark, nc, str(tables), "zeta")
+        assert sorted(p.name for p in (tables / "zeta.parquet").iterdir()
+                      if p.is_dir()) == [
+            "ts=2024-01-01 00%3A00%3A00", "ts=2024-01-01 01%3A00%3A00",
+            "ts=2024-01-01 02%3A00%3A00"]
+    assert _cli(tables, tmp_path / "p", tmp_path / "pf", 0.4) == 0
+    cli = _tif_sha256(tmp_path / "o" / "zeta")
+    assert len(cli) == 3
+    assert _tif_sha256(tmp_path / "p" / "zeta") == cli

@@ -352,7 +352,7 @@ def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):
     )
     fname = str(tmp_path / "raster_000")
     try:
-        cog._fallback_writer(fname, arr, tf, "EPSG:4326")
+        cog.cog_writer(fname, arr, tf, "EPSG:4326")
     except RuntimeError:
         pass
     assert glob.glob(str(tmp_path / "*.tif")) == []
@@ -364,7 +364,7 @@ def test_cog_writer_temp_name_never_matches_tif_glob(tmp_path, monkeypatch):
         "adcirctime2cogs_spark.sinks.geotiff.write_geotiff", real_write
     )
     os.remove(tmp_path / residue[0])
-    cog._fallback_writer(fname, arr, tf, "EPSG:4326")
+    cog.cog_writer(fname, arr, tf, "EPSG:4326")
     assert os.listdir(tmp_path) == ["raster_000.tif"]
 
 
@@ -378,27 +378,21 @@ def _plans_of_jobs(spark, job_ids):
     ]
 
 
-def test_warm_cli_job_builds_weights_in_one_map_only_stage(
-    spark, tmp_path, monkeypatch
+def test_warm_parquet_cli_job_runs_one_job_of_max_timesteps_bands_tasks(
+    spark, tmp_path
 ):
-    """A warm CLI job on parquet input builds its weights in one Spark
-    job of one stage, with no exchange and no join, and runs at most 3
-    Spark jobs in all (the weights, then the groupBy COG kernel)."""
+    """A warm CLI job on parquet input runs exactly 1 Spark job of one
+    map-only stage, with no exchange and no join, and max(timesteps,
+    bands) tasks, which build the weight bands and decode, regrid and
+    write each COG."""
     from adcirctime2cogs_spark import pipeline
+    from adcirctime2cogs_spark.plans.grid import grid_spec_from_bbox
+    from adcirctime2cogs_spark.plans.weights import band_layout
+    from adcirctime2cogs_spark.sources.mesh import read_mesh_arrays
 
     in_dir = tmp_path / "in"
-    _write_input(spark, str(in_dir))
+    _write_input(spark, str(in_dir))  # 3 timesteps
     sc = spark.sparkContext
-    build = pipeline.build_band_weights
-
-    def in_group(*args, **kwargs):
-        sc.setJobGroup("weights", "band weights")
-        try:
-            return build(*args, **kwargs)
-        finally:
-            sc.setJobGroup(group, "CLI job")
-
-    monkeypatch.setattr(pipeline, "build_band_weights", in_group)
     try:
         for group in ("cold", "warm"):
             sc.setJobGroup(group, "CLI job")
@@ -412,12 +406,17 @@ def test_warm_cli_job_builds_weights_in_one_map_only_stage(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     st = sc.statusTracker()
-    weights_jobs = st.getJobIdsForGroup("weights")
-    assert len(weights_jobs) == 2  # one per CLI job
-    warm = max(weights_jobs)
-    assert len(st.getJobInfo(warm).stageIds) == 1
-    plans = _plans_of_jobs(spark, [warm])
+    jobs = st.getJobIdsForGroup("warm")
+    assert len(jobs) == 1
+    stages = st.getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1
+    _, lon, lat, _ = read_mesh_arrays(str(in_dir))
+    spec = grid_spec_from_bbox(
+        {"lon_min": float(lon.min()), "lon_max": float(lon.max()),
+         "lat_min": float(lat.min()), "lat_max": float(lat.max())}, 0.1)
+    _, n_bands = band_layout(spark, spec)
+    assert st.getStageInfo(stages[0]).numTasks == max(3, n_bands)
+    plans = _plans_of_jobs(spark, jobs)
     assert len(plans) == 1
     assert "Exchange" not in plans[0] and "Join" not in plans[0]
     assert "MapInArrow" in plans[0]
-    assert 1 + len(st.getJobIdsForGroup("warm")) <= 3
