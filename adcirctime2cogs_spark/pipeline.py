@@ -8,13 +8,13 @@
 
 Every input runs one Spark job of one map-only stage: max(records,
 bands) tasks that build the weight bands and decode, regrid and write
-one timestep each (sinks/cog.write_cogs_from_records).
+their records' timesteps (sinks/cog.write_cogs_from_records).
 
 Differences from the reference, by design (SURVEY §3.1 mapping):
-- one Spark job regrids and writes every timestep, one task per
-  timestep, each regridding its node values against the weights
-  arrays and writing its COG (sinks/cog.regrid_nodes), where the
-  reference loops over timesteps sequentially (SURVEY P9);
+- one Spark job regrids and writes every timestep, each task
+  regridding its node values against the weights arrays and writing
+  the COG (sinks/cog.regrid_nodes), where the reference loops over
+  timesteps sequentially (SURVEY P9);
 - weights computed once and reused across every timestep (the
   reference rebuilds its interpolator per step, P6). The driver takes
   the bbox of the mesh arrays with numpy, lays the raster rows out as
@@ -24,17 +24,10 @@ Differences from the reference, by design (SURVEY §3.1 mapping):
   under a per-band file lock (plans/weights.ensure_band). No join, no
   shuffle, no parquet round trip; the registry and streaming paths
   run the same kernel as a DataFrame (plans/weights.weights_table);
-- input is either one fort.*.nc or the engine-native parquet layout,
-  each through a thin adapter that returns the mesh arrays, one
-  picklable record per timestep and the decoder a task runs on it:
-  - sources/netcdf.nc_input: the mesh read into driver memory, never
-    staged; a record variable's byte-range splits planned per record
-    (sources/netcdf.plan_records), or a time-less max variable read
-    whole by its one task;
-  - sources/mesh.table_input: mesh_nodes / mesh_elements read with
-    pyarrow, and {variable}.parquet planned one record per ts from
-    hive `ts=` directories and row-group statistics, or node_maxes
-    as one record.
+- input is one fort.*.nc, its mesh read into driver memory and never
+  staged (sources/netcdf.nc_input), or the engine-native parquet
+  layout (sources/mesh.table_input): each adapter returns the mesh
+  arrays, the picklable records and the decoder a task runs on each.
 
 CLI (mirrors the reference's 5 args):
     python -m adcirctime2cogs_spark.pipeline \
@@ -95,19 +88,16 @@ def run_pipeline(
     cost without re-instrumenting. The weight bands are built inside
     the COG stage, so `regrid_cog` covers both.
 
-    The mesh and the node values come from the fort.*.nc at `nc_path`
-    when given (sources/netcdf.nc_input), else from the tables in
-    input_dir (sources/mesh.table_input). Either adapter plans its
-    records here, before any Spark job, and each timestep is decoded,
-    regridded and written by one task (sinks/cog.
-    write_cogs_from_records; two records with one ts raise
-    DuplicateTimestepError, a ValueError, before the sidecars and the
-    zip, and main exits 1)."""
+    The input is the fort.*.nc at `nc_path` when given, else the
+    tables in input_dir; its adapter plans the records before any Spark
+    job. Two records with one ts raise DuplicateTimestepError (a
+    ValueError) before the sidecars and the zip, and main exits 1."""
     timings: dict[str, float] = {}
     t0 = time.time()
     mesh, records, decode = (
         nc_input(nc_path, variable) if nc_path is not None
-        else table_input(input_dir, variable))
+        else table_input(input_dir, variable,
+                         spark.sparkContext.defaultParallelism))
     tris = triangle_arrays(*mesh)
     _, lon, lat, _ = mesh
     bbox = {"lon_min": float(lon.min()), "lon_max": float(lon.max()),  # O7

@@ -179,9 +179,11 @@ def write_cogs_from_records(
     prefix: str,
 ) -> list[Row]:
     """Build the weight bands, then decode, regrid (regrid_nodes) and
-    write one COG per record, all in one map-only stage with no
-    shuffle. `records` are picklable descriptors, and `decode(record)
-    -> (ts, node ids, values)` runs in the task: each source's adapter
+    write one COG per timestep, all in one map-only stage with no
+    shuffle. `records` are picklable descriptors, and `decode(record)`
+    runs in the task and yields its (ts, node ids, values), one per
+    timestep (several for a flat parquet row group that holds
+    several, sources/mesh.plan_table_records): each source's adapter
     supplies both (sources/netcdf.nc_input, sources/mesh.table_input)
     and applies its own input's null rule, so the rows come with no
     nulls. `bands` need only be laid out
@@ -189,14 +191,14 @@ def write_cogs_from_records(
     task i of `spark.range(max(T, B), numPartitions=max(T, B))
     .mapInArrow` first builds band i mod B (plans/weights.ensure_band),
     so the bands are built in parallel even when T is below the core
-    count. If i < T it then decodes records[i], regrids from band
-    i mod B on, building any band still missing, and writes its COG,
-    named by its ts. Tasks with i >= T yield no row; with no records
-    the stage only builds the bands. Runs the job and returns the
-    manifest rows (ts, path, n_cells).
+    count. If i < T it then decodes records[i] and, for each timestep,
+    regrids from band i mod B on, building any band still missing, and
+    writes its COG, named by its ts. Tasks with i >= T yield no row;
+    with no records the stage only builds the bands. Runs the job and
+    returns the manifest rows (ts, path, n_cells).
 
     A task's memory: its raster (8 B per pixel), its record's node
-    values (N ids and values, plus per-node sums), and at most one band
+    values (ids and values, plus per-node sums), and at most one band
     build at a time. A build explodes at most about
     plans/weights.BAND_CELLS candidate pixels at once, beside a few
     arrays per triangle (numpy peak ~485 MB for a 1.32M-cell band of a
@@ -217,12 +219,12 @@ def write_cogs_from_records(
                 ensure_band(bands, first)
                 if i >= len(records):
                     continue
-                ts, node, val = decode(records[i])
-                arr, n_cells = regrid_nodes(node, val, bands, first)
-                yield pa.RecordBatch.from_pandas(
-                    _write_raster(out_dir, prefix, ts, arr, n_cells,
-                                  transform, "EPSG:4326", cog_writer),
-                    preserve_index=False)
+                for ts, node, val in decode(records[i]):
+                    arr, n_cells = regrid_nodes(node, val, bands, first)
+                    yield pa.RecordBatch.from_pandas(
+                        _write_raster(out_dir, prefix, ts, arr, n_cells,
+                                      transform, "EPSG:4326", cog_writer),
+                        preserve_index=False)
 
     manifest = spark.range(n_tasks, numPartitions=n_tasks
                            ).mapInArrow(run, MANIFEST_SCHEMA).collect()

@@ -16,14 +16,15 @@ partition pruning (SURVEY P2) for free, plus column pruning at the scan
 layout.
 
 `table_input` is the CLI's adapter for this layout: the mesh as arrays,
-one record per timestep planned from parquet metadata, and the decoder
-a COG task runs on its record (sinks/cog.write_cogs_from_records).
+the records planned from parquet metadata, and their decoder
+(sinks/cog.write_cogs_from_records).
 """
 
 from __future__ import annotations
 
 import os
 import re
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -114,25 +115,18 @@ def table_name(variable: str) -> str:
 def load_timeseries(
     spark: SparkSession, base_dir: str, variable: str = "timeseries"
 ) -> DataFrame:
-    """Long-format [ts, node] variable. A `max`-named variable (the
-    reference's regex dispatch, adcirc_dask_utilities.py:27) loads the
-    time-less node_maxes table instead, labeled with the VARIABLE NAME
-    as its single pseudo-timestep — so the same regrid plan (which
-    groups by ts) and the COG sink (which names files by ts) run
-    unchanged and emit one `raster.<variable>` file, matching the
-    reference's one-raster-per-max-variable output."""
+    """Long-format [ts, node] variable. A `max` variable (table_name)
+    loads node_maxes, labeled with the variable name as its one ts, so
+    the regrid plan and the COG sink emit one `raster.<variable>` file,
+    the reference's one raster per max variable."""
     from pyspark.sql import functions as F
 
-    if table_name(variable) == "node_maxes":
-        maxes = spark.read.schema(NODE_MAXES_SCHEMA).parquet(
-            os.path.join(base_dir, "node_maxes.parquet")
-        )
-        return maxes.select(
-            F.lit(variable).alias("ts"), "node_id", "value"
-        )
-    return spark.read.schema(TIMESERIES_SCHEMA).parquet(
-        os.path.join(base_dir, f"{variable}.parquet")
-    )
+    name = table_name(variable)
+    path = os.path.join(base_dir, f"{name}.parquet")
+    if name == "node_maxes":
+        return spark.read.schema(NODE_MAXES_SCHEMA).parquet(path).select(
+            F.lit(variable).alias("ts"), "node_id", "value")
+    return spark.read.schema(TIMESERIES_SCHEMA).parquet(path)
 
 
 def _utc(ts) -> pd.Timestamp:
@@ -141,77 +135,109 @@ def _utc(ts) -> pd.Timestamp:
     return ts.tz_convert("UTC").tz_localize(None) if ts.tzinfo else ts
 
 
-def plan_table_records(path: str) -> list:
-    """One record per distinct non-null ts of the (ts, node_id, value)
-    table at `path` (a file or a directory), from metadata where it
-    can: (ts, [(file, row groups or None), ...]), sorted by ts. None
-    means the whole file holds that ts.
+class TableRecord(NamedTuple):
+    """A COG task's share of a (ts, node_id, value) table: (file, row
+    groups) pairs, None for a whole file of `ts` alone. With row groups
+    it keeps `ts`, or if ts is None every ts but `skip`'s, the k-th in
+    ts order where k % part[1] == part[0]."""
+    ts: object
+    files: list
+    skip: tuple = ()
+    part: tuple = (0, 1)
 
-    - A hive `ts=` directory gives its ts directly (Spark writes it
-      URL-encoded, in its session time zone: UTC under
-      session.get_spark); `__HIVE_DEFAULT_PARTITION__` holds null ts.
-    - A row group whose ts statistics have min == max holds that ts.
-    - Any other row group's `ts` column is read here, in the driver.
-    """
-    parts: dict[pd.Timestamp, dict[str, list | None]] = {}
+
+def plan_table_records(path: str, min_records: int = 1) -> list:
+    """The TableRecords of the (ts, node_id, value) table at `path` (a
+    file or a directory), from metadata. A hive `ts=` directory is one
+    record of its ts (Spark writes it URL-encoded, in its session time
+    zone: UTC under session.get_spark); `__HIVE_DEFAULT_PARTITION__`,
+    a null ts, is skipped. Flat row groups, ordered by their (min, max)
+    ts (statistics, else the ts column read here), chain into clusters
+    while one starts before the last ends. A ts where two clusters meet
+    is a record of its own, reading the row groups that span it; each
+    of C clusters is ceil(min_records / C) records, so one row group
+    still spreads over min_records tasks. Rows not sorted by ts make
+    one cluster: write them sorted, or partitionBy("ts")."""
+    hive: dict[pd.Timestamp, list] = {}
+    groups = []  # (lo, hi, file, row group)
     for frag in ds.dataset(path, format="parquet",
                            partitioning="hive").get_fragments():
-        hive = ds.get_partition_keys(frag.partition_expression).get("ts")
-        if hive is not None:
-            if hive != "__HIVE_DEFAULT_PARTITION__":
-                parts.setdefault(_utc(hive), {})[frag.path] = None
+        keys = ds.get_partition_keys(frag.partition_expression)
+        if "ts" in keys:
+            if keys["ts"] is not None:
+                hive.setdefault(_utc(keys["ts"]), []).append(
+                    (frag.path, None))
             continue
         pf = pq.ParquetFile(frag.path)
         col = pf.schema_arrow.names.index("ts")
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(col).statistics
-            if st is not None and st.has_min_max and st.min == st.max:
-                stamps = [st.min]
-            else:
-                stamps = pc.unique(pf.read_row_group(rg, columns=["ts"])
-                                   .column(0)).drop_null().to_pylist()
-            for ts in stamps:
-                parts.setdefault(_utc(ts), {}).setdefault(
-                    frag.path, []).append(rg)
-    return [(ts, list(files.items())) for ts, files in sorted(parts.items())]
-
-
-def decode_table_record(record) -> tuple:
-    """Executor-side: one record of table_input -> (ts, node ids,
-    values). Reads only the record's files or row groups, keeps the
-    rows of its ts where a row group holds others too, and drops rows
-    with a null node_id or value, as the join and count(value) of
-    plans/regrid.aggregate_cells drop them. NaN values stay."""
-    ts, files = record
-    node, val = [], []
-    for path, row_groups in files:
-        pf = pq.ParquetFile(path)
-        if row_groups is None:
-            t = pf.read(columns=["node_id", "value"])
+            lo, hi = ((st.min, st.max) if st is not None and st.has_min_max
+                      else pc.min_max(pf.read_row_group(rg, columns=["ts"])
+                                      .column(0)).as_py().values())
+            if lo is not None:
+                groups.append((_utc(lo), _utc(hi), frag.path, rg))
+    clusters = []  # [lo, hi, row groups]
+    for g in sorted(groups, key=lambda g: g[:2]):
+        if clusters and g[0] < clusters[-1][1]:
+            clusters[-1][1] = max(clusters[-1][1], g[1])
+            clusters[-1][2].append(g)
         else:
-            t = pf.read_row_groups(row_groups,
-                                   columns=["ts", "node_id", "value"])
-            t = t.filter(pc.equal(t["ts"].cast(pa.timestamp("us")),
-                                  pa.scalar(ts, pa.timestamp("us"))))
-        t = t.filter(pc.and_(t["node_id"].is_valid(), t["value"].is_valid()))
-        node.append(t["node_id"].cast(pa.int64()).to_numpy())
-        val.append(t["value"].cast(pa.float64()).to_numpy())
-    return ts, np.concatenate(node), np.concatenate(val)
+            clusters.append([g[0], g[1], [g]])
+    shared = {b[0] for a, b in zip(clusters, clusters[1:]) if a[1] == b[0]}
+    clusters = [c for c in clusters if c[0] != c[1] or c[0] not in shared]
+    n_part = -(-min_records // max(len(clusters), 1))
+    return (
+        [TableRecord(ts, files) for ts, files in sorted(hive.items())]
+        + [TableRecord(None, [(g[2], [g[3]]) for g in rgs],
+                       tuple(sorted(shared & {lo, hi})), (k, n_part))
+           for lo, hi, rgs in clusters for k in range(n_part)]
+        + [TableRecord(ts, [(g[2], [g[3]]) for g in groups
+                            if g[0] <= ts <= g[1]]) for ts in sorted(shared)])
 
 
-def table_input(base_dir: str, variable: str) -> tuple:
+def decode_table_record(record: TableRecord):
+    """Executor-side: one TableRecord -> yields (ts, node ids, values)
+    in ts order, each of its files or row groups read once. Rows with a
+    null node_id or value are dropped, as the join and count(value) of
+    plans/regrid.aggregate_cells drop them; NaN values stay."""
+    ts, files, skip, (k, n_part) = record
+    whole = files[0][1] is None
+    cols = ["node_id", "value"] + ([] if whole else ["ts"])
+    t = pa.concat_tables([
+        pq.ParquetFile(path).read(columns=cols) if whole
+        else pq.ParquetFile(path).read_row_groups(rgs, columns=cols)
+        for path, rgs in files])
+    t = t.filter(pc.and_(t["node_id"].is_valid(), t["value"].is_valid()))
+    node = t["node_id"].cast(pa.int64()).to_numpy()
+    val = t["value"].cast(pa.float64()).to_numpy()
+    if whole:
+        yield ts, node, val
+        return
+    stamp = t["ts"].cast(pa.timestamp("us")).to_numpy(zero_copy_only=False)
+    order = np.argsort(stamp, kind="stable")
+    stamp, node, val = stamp[order], node[order], val[order]
+    cuts = np.flatnonzero(stamp[1:] != stamp[:-1]) + 1
+    skip = {np.datetime64(s, "us") for s in skip}
+    runs = [(a, b) for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(stamp)])
+            if not np.isnat(stamp[a]) and stamp[a] not in skip
+            and (ts is None or stamp[a] == np.datetime64(ts, "us"))]
+    for a, b in runs[k::n_part]:
+        yield pd.Timestamp(stamp[a]), node[a:b], val[a:b]
+
+
+def table_input(base_dir: str, variable: str, min_records: int = 1) -> tuple:
     """The CLI's input from the tables under base_dir: (mesh arrays of
     read_mesh_arrays, records, decode_table_record). A `max` variable
     (table_name) is one record named by the variable, so it writes one
-    `<variable>.<variable>Z` raster, the reference's one raster per max
-    variable; otherwise plan_table_records plans one record per ts of
-    {variable}.parquet."""
+    `<variable>.<variable>Z` raster like the reference; otherwise
+    plan_table_records plans {variable}.parquet."""
     name = table_name(variable)
     path = os.path.join(base_dir, f"{name}.parquet")
     if name == "node_maxes":
-        records = [(variable, [
+        records = [TableRecord(variable, [
             (frag.path, None) for frag in
             ds.dataset(path, format="parquet").get_fragments()])]
     else:
-        records = plan_table_records(path)
+        records = plan_table_records(path, min_records)
     return read_mesh_arrays(base_dir), records, decode_table_record

@@ -449,9 +449,10 @@ def read_nc_mesh(nc: NcFile) -> tuple[np.ndarray, ...]:
 
 def _decode_nc_record(range_decoder: Callable, variable: str, splits):
     """Executor-side: all splits of ONE record (one plan_records group)
-    -> (naive UTC ts of its first split, node ids, values): the rows
-    _decode_split yields for those splits, in plan order, as arrays,
-    with the filled (NaN) nodes that scan_netcdf makes null dropped."""
+    -> yields (naive UTC ts of its first split, node ids, values): the
+    rows _decode_split yields for those splits, in plan order, as
+    arrays, with the filled (NaN) nodes that scan_netcdf makes null
+    dropped."""
     parts = [
         _normalize(*range_decoder(p, variable, int(t), int(off), int(nb)))
         for p, t, off, nb in splits
@@ -459,34 +460,33 @@ def _decode_nc_record(range_decoder: Callable, variable: str, splits):
     node = np.concatenate([ids for _, ids, _ in parts])
     val = np.concatenate([vals for _, _, vals in parts])
     keep = ~np.isnan(val)
-    return parts[0][0].tz_convert(None), node[keep], val[keep]
+    yield parts[0][0].tz_convert(None), node[keep], val[keep]
 
 
 def _decode_nc_static(variable: str, nc_path: str):
     """Executor-side: a time-less (max) variable read whole from the
-    .nc -> (the variable name as its ts, node ids, values), its filled
-    nodes dropped."""
+    .nc -> yields (the variable name as its ts, node ids, values), its
+    filled nodes dropped."""
     val = open_nc(nc_path, variable).masked(variable).ravel()
     node = np.flatnonzero(~np.isnan(val))
-    return variable, node, val[node]
+    yield variable, node, val[node]
 
 
-def nc_input(
-    nc_path: str, variable: str,
-    source: type[AdcircNetCDFDataSource] = AdcircNetCDFDataSource,
-) -> tuple:
+def nc_input(nc_path: str, variable: str) -> tuple:
     """The CLI's input from one fort.*.nc: (read_nc_mesh's arrays,
     records, decode). A record variable gives one record per timestep,
-    its byte-range splits planned here with `source`'s splitter
-    (plan_records) and decoded in the task with its range decoder. A
-    time-less max variable is one record, read from the .nc in its
-    task and named by the variable, so it writes one
+    its byte-range splits planned here with AdcircNetCDFDataSource's
+    splitter (plan_records) and decoded in the task with its range
+    decoder. A time-less max variable is one record, read from the .nc
+    in its task and named by the variable, so it writes one
     `<variable>.<variable>Z` raster like the reference. Nothing is
     staged as parquet."""
     nc = open_nc(nc_path, variable)
     if nc.is_record(variable):
-        records = plan_records(nc_path, variable, source._splitter)
-        decode = partial(_decode_nc_record, source._range_decoder, variable)
+        records = plan_records(nc_path, variable,
+                               AdcircNetCDFDataSource._splitter)
+        decode = partial(_decode_nc_record,
+                         AdcircNetCDFDataSource._range_decoder, variable)
     else:
         records, decode = [nc_path], partial(_decode_nc_static, variable)
     return read_nc_mesh(nc), records, decode

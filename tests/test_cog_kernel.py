@@ -32,7 +32,11 @@ from adcirctime2cogs_spark.plans.weights import build_weights
 from adcirctime2cogs_spark.sinks.cog import write_cogs
 from adcirctime2cogs_spark.sinks.geotiff import read_geotiff
 from adcirctime2cogs_spark.sources import netcdf3 as nc3
-from adcirctime2cogs_spark.sources.mesh import load_mesh, load_timeseries
+from adcirctime2cogs_spark.sources.mesh import (
+    load_mesh,
+    load_timeseries,
+    plan_table_records,
+)
 from adcirctime2cogs_spark.sources.netcdf import (
     AdcircNetCDFDataSource,
     _default_range_decoder,
@@ -459,12 +463,16 @@ def test_cli_on_nc_max_variable_runs_one_job_and_matches_join_path(
     assert np.isnan(arr).any() and (~np.isnan(arr)).any()
 
 
-@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+@pytest.mark.parametrize("layout", ["flat", "flat_row_groups",
+                                    "partitioned"])
 def test_cli_on_parquet_equals_cli_on_nc(spark, tmp_path, layout):
-    """The CLI on parquet tables of the micromesh records, written
-    flat as one file whose row group spans every ts, or
-    partitionBy("ts"), against the CLI on the .nc itself:
-    byte-identical COGs under the same names."""
+    """The CLI on parquet tables of the micromesh records against the
+    CLI on the .nc itself: byte-identical COGs under the same names.
+    The tables are written flat as one file whose row group spans
+    every ts, flat and sorted by ts in row groups of 4 rows that split
+    timesteps, or partitionBy("ts"). Each also holds one row with a
+    null ts, which is ignored."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tests.test_netcdf3 import _write_micromesh_nc
@@ -474,19 +482,36 @@ def test_cli_on_parquet_equals_cli_on_nc(spark, tmp_path, layout):
     _write_micromesh_nc(nc)
     assert _cli(tmp_path / "in", tmp_path / "o", tmp_path / "f", 0.4) == 0
     tables = tmp_path / "tables"
-    if layout == "flat":
-        write_static_tables(nc, str(tables), "zeta")
-        scan_netcdf(spark, nc, "zeta").coalesce(1).write.parquet(
-            str(tables / "zeta.parquet"))
-        (part,) = (tables / "zeta.parquet").glob("*.parquet")
-        stats = pq.ParquetFile(part).metadata.row_group(0).column(0).statistics
-        assert stats.min != stats.max
-    else:
+    path = str(tables / "zeta.parquet")
+    null_ts = spark.createDataFrame(
+        [(None, 0, 99.0)], "ts timestamp, node_id long, value double")
+    if layout == "partitioned":
         adcirc_nc_to_tables(spark, nc, str(tables), "zeta")
+        null_ts.write.mode("append").partitionBy("ts").parquet(path)
         assert sorted(p.name for p in (tables / "zeta.parquet").iterdir()
                       if p.is_dir()) == [
             "ts=2024-01-01 00%3A00%3A00", "ts=2024-01-01 01%3A00%3A00",
-            "ts=2024-01-01 02%3A00%3A00"]
+            "ts=2024-01-01 02%3A00%3A00", "ts=__HIVE_DEFAULT_PARTITION__"]
+    else:
+        write_static_tables(nc, str(tables), "zeta")
+        rows = scan_netcdf(spark, nc, "zeta").unionByName(null_ts)
+        if layout == "flat":
+            rows.coalesce(1).write.parquet(path)
+            (part,) = (tables / "zeta.parquet").glob("*.parquet")
+            meta = pq.ParquetFile(part).metadata
+            assert meta.num_row_groups == 1
+            stats = meta.row_group(0).column(0).statistics
+            assert stats.min != stats.max
+        else:
+            os.makedirs(path)
+            t = pa.Table.from_pandas(
+                rows.orderBy("ts", "node_id").toPandas(),
+                preserve_index=False)
+            pq.write_table(t, os.path.join(path, "part-0.parquet"),
+                           row_group_size=4)
+            plan = plan_table_records(path)
+            assert any(r.ts is not None for r in plan)
+            assert any(r.ts is None for r in plan)
     assert _cli(tables, tmp_path / "p", tmp_path / "pf", 0.4) == 0
     cli = _tif_sha256(tmp_path / "o" / "zeta")
     assert len(cli) == 3
